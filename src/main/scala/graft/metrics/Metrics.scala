@@ -109,8 +109,11 @@ object Metrics {
       .unionByName(pred.select(col("note_id"), col("start"), lit("pred").as("side")))
       .groupBy(col("side"), col("note_id"), col("start"))
       .agg(count(lit(1)).as("c"))
-      .agg(max(when(col("c") > 1 && col("side") === "gt", 1).otherwise(0)).as("gt_dup"),
-        max(when(col("c") > 1 && col("side") === "pred", 1).otherwise(0)).as("pred_dup"))
+      // a global max over zero groups is NULL: coalesce so empty sides pass
+      .agg(coalesce(max(when(col("c") > 1 && col("side") === "gt", 1).otherwise(0)), lit(0))
+          .as("gt_dup"),
+        coalesce(max(when(col("c") > 1 && col("side") === "pred", 1).otherwise(0)), lit(0))
+          .as("pred_dup"))
       .head()
     require(dupRow.getInt(0) == 0,
       "alignAccuracy: gt has duplicate (note_id, start) keys — " +

@@ -86,16 +86,20 @@ object ConnectedComponents {
 
     // dimension-scale fast path: one driver union-find over the collected
     // edge set, component = min member under the SAME ordering the loop's
-    // least/greatest would compute (see Utf8Ordering)
+    // least/greatest would compute (see Utf8Ordering). Taken only when both
+    // endpoint columns share one type: least/greatest promote mixed
+    // Int/Long ids, a boxed-value union-find would not.
     val idType = edges0.schema.head.dataType
-    val localOrd: Option[Ordering[Any]] = idType match {
-      case LongType => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
-      case IntegerType => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
-      case StringType => Some(Utf8Ordering)
-      case _ => None
-    }
+    val localOrd: Option[Ordering[Any]] =
+      if (edges0.schema(1).dataType != idType) None
+      else idType match {
+        case LongType => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
+        case IntegerType => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
+        case StringType => Some(Utf8Ordering)
+        case _ => None
+      }
     if (localOrd.nonEmpty && localCap > 0) {
-      val rows = edges0.limit((localCap + 1).toInt).collect()
+      val rows = edges0.limit(math.min(localCap, Int.MaxValue - 1L).toInt + 1).collect()
       if (rows.length <= localCap) {
         // the checkpointed input is fully consumed — free its blocks now
         // instead of waiting for GC (matters for repeated-sample benches)

@@ -3,12 +3,14 @@ package graft.operators
 import graft.functions.TextFns
 import graft.model._
 import graft.plans.LinkagePipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable.ArrayBuffer
+
 /** Dictionary construction — the 1st-place training pipeline (SURVEY §3.2,
-  * `1st Place/src/mimic_train.py:327-379,475-500`), all-relational:
+  * `1st Place/src/mimic_train.py:327-379,475-500`), as relational step operators:
   *
   *  - corpus word counter → frequency blacklist             [A3, lines 30-42]
   *  - (section, mention) → modal concept, kept iff unique   [A1, lines 45-63,342-345]
@@ -21,15 +23,24 @@ import org.apache.spark.sql.functions._
   *    span+concept match / −1 otherwise), keys dropped when
   *    correct < θ · incorrect                               [M5/A5/O6, mimic_train.py:66-134,243-263]
   *
-  * Join strategy: every side that is bounded by the DICTIONARY or the
-  * terminology (per-key score tallies, uc-norm list, bad-key list, concept
-  * types, gold-per-concept counts, abbreviation/mapping tables) carries an
-  * explicit `broadcast` hint — the gazetteer already collects the whole
-  * dictionary to the driver (`DictionaryMatch.collectDict`, hard-capped),
-  * so these strictly-smaller relations fit the same memory envelope, and
-  * the hint turns a sort-merge join (two exchanges + sorts + a stage
-  * barrier each) into a broadcast hash join. Corpus-scale sides (mentions,
-  * golds, scored predictions) are never hinted.
+  * Join strategy: `trainDictionarySplit` runs on Spark only what scales
+  * with the CORPUS, as two docs×golds cogroups each followed by one
+  * aggregation: the mention extraction with every labelled tally (harvest
+  * counts, uppercase ratios, gold counts per concept, the doc count), then
+  * the two-pointer scoring with its fused by-note and by-mention tallies
+  * and the blacklist word count. Each of those reductions is
+  * dictionary-scale and is collected once through
+  * `DictionaryMatch.collectCapped`, the
+  * limit-probe cap the gazetteer applies to the trained dictionary itself
+  * (`DictionaryMatch.MaxBroadcastDictEntries`); the terminology tables are
+  * collected under the same cap. Key selection, expansion, the
+  * cond-update anti-join, the uc split and the section limiting then run
+  * as plain Scala over those arrays — every branch of the expansion union
+  * is dictionary-scale, so the work happens below the union, on the
+  * driver, instead of as a chain of small Spark plans. Corpus-scale
+  * relations (docs, golds, mentions, scored predictions) are never
+  * collected. The public step operators keep their relational form; they
+  * are the reference the driver path is pinned against.
   */
 object DictTrain {
 
@@ -142,26 +153,30 @@ object DictTrain {
                    (implicit spark: SparkSession): Dataset[DictEntry] = {
     import spark.implicits._
     val blB = spark.sparkContext.broadcast(blacklist)
-    dict.flatMap { e =>
-      val words = e.mention.split(' ')
-      val n = words.length
-      val perms: Seq[String] =
-        if (n < 3 || n > 4) Seq.empty
-        else if (n == 3 && words(1) == "of") Seq(s"${words(2)} ${words(0)}")
-        else if (n == 4) {
-          if (words(1) == "of") Seq(s"${words(2)} ${words(3)} ${words(0)}")
-          else if (words(2) == "of")
-            Seq(s"${words(3)} ${words(0)} ${words(1)}", s"${words(0)} ${words(3)} ${words(1)}")
-          else Seq.empty
-        } else if (words.forall(w => !blB.value.contains(w)))
-          words.permutations.map(_.mkString(" ")).toSeq
+    dict.flatMap(e => expansions(e, blB.value))
+  }
+
+  /** The per-row body of [[expandEntries]]: the entry itself, then its
+    * permutations and word replacements, deduplicated. */
+  def expansions(e: DictEntry, blacklist: Set[String]): Seq[DictEntry] = {
+    val words = e.mention.split(' ')
+    val n = words.length
+    val perms: Seq[String] =
+      if (n < 3 || n > 4) Seq.empty
+      else if (n == 3 && words(1) == "of") Seq(s"${words(2)} ${words(0)}")
+      else if (n == 4) {
+        if (words(1) == "of") Seq(s"${words(2)} ${words(3)} ${words(0)}")
+        else if (words(2) == "of")
+          Seq(s"${words(3)} ${words(0)} ${words(1)}", s"${words(0)} ${words(3)} ${words(1)}")
         else Seq.empty
-      val repls = Seq(" and " -> " with ", " with " -> " and ",
-        " valve " -> " ", " of " -> " of the ")
-        .collect { case (s1, s2) if e.mention.contains(s1) => e.mention.replace(s1, s2) }
-      (Seq(e.mention) ++ perms ++ repls).distinct
-        .map(m => DictEntry(e.section, m, e.concept_id))
-    }
+      } else if (words.forall(w => !blacklist.contains(w)))
+        words.permutations.map(_.mkString(" ")).toSeq
+      else Seq.empty
+    val repls = Seq(" and " -> " with ", " with " -> " and ",
+      " valve " -> " ", " of " -> " of the ")
+      .collect { case (s1, s2) if e.mention.contains(s1) => e.mention.replace(s1, s2) }
+    (Seq(e.mention) ++ perms ++ repls).distinct
+      .map(m => DictEntry(e.section, m, e.concept_id))
   }
 
   /** A4 (2nd Place `static_dict.py:167-182` calc_ratio + filt_by_ratio):
@@ -182,28 +197,6 @@ object DictTrain {
       .join(ap, col("mention") === ap("term")).drop(ap("term"))
       .filter(col("occurrences") > 0 &&
         col("n_tp").cast("double") / col("occurrences") > threshold)
-      .select(col("section"), col("mention"), col("concept_id"))
-      .as[DictEntry]
-  }
-
-  /** M5/A5/O6: score each dict key against training gold — an emitted
-    * annotation counts +1 on exact (doc,start,end,concept) match, −1
-    * otherwise; keys with correct < θ·incorrect are dropped. */
-  def pruneByScore(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
-                   dict: Dataset[DictEntry], theta: Double = 0.3)
-                  (implicit spark: SparkSession): Dataset[DictEntry] = {
-    import spark.implicits._
-    val pred = OverlapResolve.apply(DictionaryMatch.annotate(docs, dict))
-    val g = golds.toDF().withColumn("hit", lit(1))
-    val scoredKeys = pred.toDF()
-      .join(g, Seq("doc_id", "start", "end", "concept_id"), "left_outer")
-      .withColumn("correct", when(col("hit").isNotNull, 1).otherwise(0))
-      .groupBy(col("section"), col("dict_entry").as("mention"))
-      .agg(sum(col("correct")).as("n_correct"),
-        sum(lit(1) - col("correct")).as("n_incorrect"))
-    dict.toDF().join(scoredKeys, Seq("section", "mention"), "left_outer")
-      .filter(col("n_correct").isNull || // never fired on train: keep
-        col("n_correct") >= col("n_incorrect") * theta)
       .select(col("section"), col("mention"), col("concept_id"))
       .as[DictEntry]
   }
@@ -252,6 +245,19 @@ object DictTrain {
                         dict: Dataset[DictEntry])
                        (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
+    scoreDocs(docs, golds, DictionaryMatch.collectDict(dict)) { (docId, _, scored) =>
+      scored.iterator.map { case (a, s) => (docId, a.section, a.dict_entry, s) }
+    }.toDF("doc_id", "section", "mention", "score")
+  }
+
+  /** The scoring cogroup behind [[scoredPredictions]], with the per-doc
+    * output left to `emit`: (doc_id, the texts of every doc row with that
+    * id, the first doc's scored predictions). */
+  private def scoreDocs[T: Encoder](docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
+                                    dict: Array[DictEntry])
+                                   (emit: (String, Seq[String], Seq[(Annotation, Int)]) => Iterator[T])
+                                   (implicit spark: SparkSession): Dataset[T] = {
+    import spark.implicits._
     // r6 fusion (guide §2.4, the annotateDualResolved precedent): the raw
     // gazetteer probe runs INSIDE the doc×gold cogroup instead of as a
     // separate flatMap whose per-doc output — the WIDEST training
@@ -261,24 +267,29 @@ object DictTrain {
     // before the two-pointer walk (docs with no golds still score their
     // predictions −1; gold-only or empty docs still emit nothing). Pinned
     // by the inputs-only dict_train oracle and DictTrainSpec.
-    val (dictMap, firstTokens) =
-      DictionaryMatch.dictStructures(DictionaryMatch.collectDict(dict))
+    val (dictMap, firstTokens) = DictionaryMatch.dictStructures(dict)
     val dmB = spark.sparkContext.broadcast(dictMap)
     val ftB = spark.sparkContext.broadcast(firstTokens)
+    docTexts(docs).cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
+      val texts = dIt.map(_._2).toSeq
+      texts.headOption match {
+        case None => Iterator.empty
+        case Some(text) =>
+          val anns = DictionaryMatch
+            .matchDoc(docId, text, maxTokens = 6, minStart = 100,
+              dmB.value, ftB.value)
+            .toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
+          val refs = gIt.toIndexedSeq.sortBy(r => (r.start, r.end, r.concept_id))
+          emit(docId, texts, scoreDocPredictions(refs, anns))
+      }
+    }
+  }
+
+  /** (doc_id, text) grouped by doc_id — the doc side of every training
+    * cogroup, one plan shape so its generated code is shared. */
+  private def docTexts(docs: Dataset[Doc])(implicit spark: SparkSession) = {
+    import spark.implicits._
     docs.map(d => (d.doc_id, d.text)).groupByKey(_._1)
-      .cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
-        dIt.toSeq.headOption match {
-          case None => Iterator.empty
-          case Some((_, text)) =>
-            val anns = DictionaryMatch
-              .matchDoc(docId, text, maxTokens = 6, minStart = 100,
-                dmB.value, ftB.value)
-              .toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
-            val refs = gIt.toIndexedSeq.sortBy(r => (r.start, r.end, r.concept_id))
-            scoreDocPredictions(refs, anns).iterator
-              .map { case (a, s) => (docId, a.section, a.dict_entry, s) }
-        }
-      }.toDF("doc_id", "section", "mention", "score")
   }
 
   /** scores_by_note counts (`mimic_train.py:351-359`): per (key, note) at
@@ -459,7 +470,9 @@ object DictTrain {
     * keys whose gold surfaces are ≥99% uppercase move UPPERCASED into the
     * case-sensitive dict (they would otherwise fire on their lowercase
     * homographs — "the" vs initialism "THE"); the lowercase remainder is
-    * score-pruned. */
+    * score-pruned. Equals the step-by-step composition of the public step
+    * operators (pinned by DictTrainSplitSpec); only the corpus-scale
+    * reductions run on Spark (see the object doc). */
   def trainDictionarySplit(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
                            concepts: Dataset[Concept], descriptions: Dataset[Description],
                            extConcepts: DataFrame, extMappings: DataFrame, abbr: DataFrame,
@@ -467,133 +480,298 @@ object DictTrain {
                            greedy: Boolean = true, limitAny: Boolean = true)
                           (implicit spark: SparkSession): (Dataset[DictEntry], Dataset[DictEntry]) = {
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // 0. ONE corpus scan each for docs, golds and the extracted mentions —
-    //    every trainer below consumes these persisted frames. (Round-2
-    //    bench lesson: the three mention consumers each re-ran the doc
-    //    pipeline because the lineage below them was unpersisted; training
-    //    made ~5 full corpus passes. The outputs are materialized eagerly
-    //    at the end so the inputs can be released — results are
-    //    checksum-identical to the unshared form, only the pass count
-    //    changes.)
     import org.apache.spark.storage.StorageLevel
-    val docsPersistedHere = docs.storageLevel == StorageLevel.NONE
-    val goldsPersistedHere = golds.storageLevel == StorageLevel.NONE
-    val docsP = if (docsPersistedHere) docs.persist(MEMORY_AND_DISK) else docs
-    val goldsP = if (goldsPersistedHere) golds.persist(MEMORY_AND_DISK) else golds
-    val mentions = LinkagePipeline.mentionsFromSpans(docsP, goldsP).toDF()
-      .localCheckpoint(false)
-    // 1. harvest (mock_train's build_dict + unique-majority)
-    val harvested = dictFromMentions(mentions, goldsP).localCheckpoint(false)
-    // 2. uc split FIRST (vs the reference's post-scoring
+    // docs and golds are read by two corpus passes (the tallies, the
+    // scoring): a caller that derives them expensively persists them first
+    // 1. corpus pass: the mention extraction and every labelled-mention
+    //    tally in one cogroup + aggregation
+    val tallies = labelledTallies(docs, golds)
+    val harvestCounts = tallies.filter(_.getInt(0) == HarvestTag)
+      .map(r => (r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
+    val ucUpper = tallies.filter(_.getInt(0) == UcTag)
+      .map(r => r.getString(2) -> r.getString(1)).toMap
+    val goldCounts = tallies.filter(_.getInt(0) == GoldTag)
+      .map(r => r.getLong(3) -> r.getLong(4)).toMap
+    val nDocs = tallies.find(_.getInt(0) == DocTag).map(_.getLong(4)).getOrElse(0L)
+
+    // 2. harvest + uc split FIRST (vs the reference's post-scoring
     //    extract_uppercase_mentions): an uppercase-only key scored by the
     //    case-FOLDED matcher drowns in its lowercase homographs ("THE" vs
-    //    "the") and gets pruned before the split could rescue it — which is
-    //    why the reference ships a hand-curated uc dict
+    //    "the") and gets pruned before the split could rescue it — which
+    //    is why the reference ships a hand-curated uc dict
     //    (`mimic_predict.py:get_case_sensitive_dict`). Splitting before
     //    scoring derives that dict instead of hardcoding it.
-    val ucNorms = uppercaseMentionsOf(mentions).select(col("norm"))
-      .localCheckpoint(false)
-    def splitUc(d: Dataset[DictEntry]): (Dataset[DictEntry], Dataset[DictEntry]) = {
-      val uc = d.toDF().join(broadcast(ucNorms), col("mention") === col("norm"))
-        .select(col("section"), upper(col("mention")).as("mention"), col("concept_id"))
-        .distinct().as[DictEntry]
-      val lc = d.toDF().join(broadcast(ucNorms), col("mention") === col("norm"), "left_anti")
-        .as[DictEntry]
-      (lc, uc)
+    val harvested = modalEntries(harvestCounts)
+    val (lcHarvested, ucHarvested) = splitUc(harvested, ucUpper)
+
+    // 3. corpus pass: two-pointer scoring of the lowercase harvest (and
+    //    the permutation blacklist: corpus words above ~the reference's
+    //    blacklist_thresh=2000-over-150-notes rate, ≈13 per note), then
+    //    naive by-note removal + greedy per-concept refinement
+    val (scores, blacklist) = keyScoreTallies(docs, golds, lcHarvested, 13L * nDocs)
+    val naive = lcHarvested.filter { e =>
+      scores.get((e.section, e.mention))
+        .forall(s => !naiveRemove(s(0), s(1), e.section, doubleThr = false, thAny, thDict))
     }
-    val (lcHarvested, ucHarvested) = splitUc(harvested)
-    // 3. score the lowercase harvested dict with the two-pointer alignment,
-    //    then naive by-note removal + greedy per-concept refinement
-    val scored = scoredPredictions(docsP, goldsP, lcHarvested)
-      .localCheckpoint(false)
-    val naive = pruneNaiveKeys(lcHarvested, keyScoresByNote(scored), thAny, thDict)
-    // r6 (guide §5): persist `core` — it feeds the expansion union, the
-    // cond-update anti-join AND both branches of the final union, and each
-    // consumer re-ran the whole naive+greedy prune chain (joins +
-    // flatMapGroups) from the cached scored table; with `full` below also
-    // multiply-consumed, the greedy prune was measured executing ~6× per
-    // training run (TrainProbe: ~1.7 s per execution — most of the gap
-    // between the ~16 s phase sum and the ~28 s full train).
-    val core =
-      (if (greedy) pruneGreedyKeys(naive, keyScoresByMention(scored), goldsP, thAny, thDict)
-       else naive).localCheckpoint(false)
+    val core = if (greedy) greedyKeep(naive, scores, goldCounts, thAny, thDict) else naive
+
     // 4. externals added COND-UPDATE style (`cond_update`: a key already
     //    trained on the corpus is never overwritten by a synonym);
     //    case-folded external abbreviations are routed through the same
     //    uc split
-    val term = dictFromTerminology(concepts, descriptions)
-    val ext = dictFromExternal(extConcepts, extMappings)
-    // permutation blacklist: corpus words above ~the reference's
-    // blacklist_thresh=2000-over-150-notes rate (≈13 per note). The doc
-    // count rides INSIDE the same job as the word counts (scalar cross
-    // join) — one driver action instead of count-then-collect, one fewer
-    // sequential stage barrier (VERDICT r3 Next #4)
-    val wordCounts = docsP.flatMap(d => TextFns.normalize(d.text).split(' '))
-      .toDF("word")
-      .filter(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    val nDocsDf = docsP.toDF().agg(count(lit(1)).as("n_docs"))
-    val blacklistDs = wordCounts.crossJoin(nDocsDf)
-      .filter(col("freq") > lit(13L) * col("n_docs"))
-      .select(col("word")).as[String]
-    // r6 limit-probe: words averaging >13 occurrences per doc are a tiny
-    // stop-word-class set by construction; limit(cap+1) keeps the loud
-    // driver-collect cap while folding the former count pass (and its
-    // persist/unpersist bookkeeping) into the one collect action
-    val blWords = blacklistDs.limit(10000001).collect()
-    require(blWords.length <= 10000000,
-      s"permutation blacklist exceeds the 10M driver-collect cap")
-    val permBlacklist = blWords.toSet
-    // persist: the permutation expansion (largest intermediate) has TWO
-    // consumers below (the union and the abbreviation join) and would
-    // otherwise be computed twice
-    val expanded = expandEntries(core.union(term).union(ext), permBlacklist)
-      .distinct().localCheckpoint(false)
-    // r6: the union-level distinct that sat here was redundant — duplicate
-    // rows pass the anti-join unchanged and the `full` distinct right
-    // below dedups them; dropping it removes one full-width exchange and
-    // its stage barrier (guide §2.4).
-    val withAbbr = expanded.union(abbreviationEntries(abbr, expanded))
-    val extAdd = withAbbr.toDF()
-      .join(broadcast(core.toDF().select(col("section"), col("mention"))),
-        Seq("section", "mention"), "left_anti")
-      .as[DictEntry]
-    // r6 (guide §5): persist `full` — splitUc consumes it twice and the
-    // "any"-limiting below re-reads the lc branch twice more; un-persisted,
-    // every consumer re-ran the whole union+anti+distinct (and `core`)
-    // subtree.
-    val full = core.toDF().toDF("section", "mention", "concept_id")
-      .union(extAdd.toDF().toDF("section", "mention", "concept_id"))
-      .distinct().as[DictEntry].localCheckpoint(false)
-    val (lcDict, ucExternal) = splitUc(full)
-    val ucDict = ucHarvested.toDF().toDF("section", "mention", "concept_id")
-      .union(ucExternal.toDF().toDF("section", "mention", "concept_id"))
-      .distinct().as[DictEntry]
+    val descriptionRows = collectTable(descriptions, "descriptions")
+    val term = terminologyEntries(collectTable(concepts, "concepts"), descriptionRows)
+    val ext = externalEntries(
+      collectTable(extConcepts.select(col("ext_id"), col("name"), col("vocabulary"))
+        .as[(Option[Long], String, String)], "external concepts"),
+      collectTable(extMappings.select(col("ext_id_1"), col("ext_id_2"), col("relationship"))
+        .as[(Option[Long], Long, String)], "external mappings"))
+    val expanded = (core ++ term ++ ext).distinct.flatMap(expansions(_, blacklist)).distinct
+    val withAbbr = expanded ++ abbreviationEntriesOf(
+      collectTable(abbr.select(col("abbr"), col("meaning")).as[(String, String)], "abbreviations"),
+      expanded)
+    val coreKeys = core.iterator.map(e => (e.section, e.mention)).toSet
+    val full = (core ++ withAbbr.filterNot(e => coreKeys((e.section, e.mention)))).distinct
+    val (lcDict, ucExternal) = splitUc(full, ucUpper)
+    val ucDict = (ucHarvested ++ ucExternal).distinct
+
     // 5. "any" keys narrowed to sections observed for the concept's type
-    //    (allowedSectionsOf reads the SHARED mention extraction, not a
-    //    fresh corpus pass)
     val lcFinal =
       if (limitAny) {
-        val cidToType = conceptTypes(descriptions)
-        limitAnyToAllowedSections(lcDict, allowedSectionsOf(mentions, goldsP, cidToType), cidToType)
+        val cidToType = conceptTypesOf(descriptionRows)
+        val allowed = harvestCounts.flatMap { case (section, _, cid, _) =>
+          cidToType.get(cid).map(_ -> section)
+        }
+        limitAnyOf(lcDict, allowed, cidToType)
       } else lcDict
-    // materialize the two output dictionaries eagerly so every intermediate
-    // checkpoint (and the input frames, if we persisted them) can be freed
-    // here — callers get small persisted dicts whose blocks never need the
-    // intermediates again (local mode: MEMORY_AND_DISK spills, it does not
-    // drop, so the freed lineage is never re-entered)
-    val lcOut = lcFinal.persist(MEMORY_AND_DISK)
-    val ucOut = ucDict.persist(MEMORY_AND_DISK)
-    // ONE action materializes both caches (computing the union computes —
-    // and therefore caches — every partition of both persisted inputs)
+
+    // the two outputs, persisted and materialized by ONE action (computing
+    // the union computes — and therefore caches — every partition of both);
+    // ~1M entries a partition, so `infer`'s limit-probe collect of a
+    // smaller dictionary is one job
+    def persisted(es: Seq[DictEntry]): Dataset[DictEntry] =
+      spark.createDataset(spark.sparkContext.parallelize(es,
+        math.max(1, math.min(spark.sparkContext.defaultParallelism, 1 + es.size / (1 << 20)))))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    val lcOut = persisted(lcFinal)
+    val ucOut = persisted(ucDict)
     lcOut.toDF().union(ucOut.toDF()).count()
-    // checkpoint blocks live on the RDD, invisible to Dataset.unpersist —
-    // free them explicitly so repeated-sample benches don't accumulate them
-    freeCheckpoints(mentions, harvested, ucNorms, scored, expanded, core, full)
-    if (docsPersistedHere) docsP.unpersist()
-    if (goldsPersistedHere) goldsP.unpersist()
     (lcOut, ucOut)
+  }
+
+  // row tags of `labelledTallies` and of `keyScoreTallies`
+  private val HarvestTag = 0
+  private val UcTag = 1
+  private val GoldTag = 2
+  private val DocTag = 3
+  private val ScoreTag = 0
+  private val WordTag = 1
+
+  /** Every dictionary-scale tally training needs from the labelled
+    * mentions, by ONE cogroup of docs and golds (each doc's mention
+    * extraction, `LinkagePipeline.docMentions`, happens in it) and one
+    * aggregation, collected under the driver cap. Rows (tag, section, key,
+    * concept_id, n):
+    *  - HarvestTag: (section, norm, concept) counts over mentions ⋈ golds
+    *    on (doc_id, start, end) — the input of `dictFromMentions`' modal
+    *    rule and, projected to (concept, section), of `allowedSectionsOf`;
+    *  - UcTag: one row per norm whose `uppercaseMentionsOf` ratio is above
+    *    0.99, `section` carrying Catalyst's own `upper(norm)`, so the
+    *    driver never re-implements the case mapping;
+    *  - GoldTag: gold rows per concept (`pruneGreedyKeys`' n_gold);
+    *  - DocTag: the doc row count (the blacklist's per-doc rate). */
+  private def labelledTallies(docs: Dataset[Doc], golds: Dataset[GoldAnnotation])
+                             (implicit spark: SparkSession): Array[Row] = {
+    import spark.implicits._
+    val perDoc = docTexts(docs).cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
+      val texts = dIt.map(_._2).toSeq
+      val spans = gIt.toSeq
+      val out = ArrayBuffer.empty[(Int, String, String, String, Long, Long)]
+      if (texts.nonEmpty) out += ((DocTag, null, null, null, 0L, texts.size.toLong))
+      spans.groupBy(_.concept_id).foreach { case (c, gs) =>
+        out += ((GoldTag, null, null, null, c, gs.size.toLong))
+      }
+      texts.headOption.foreach { text =>
+        val ms = LinkagePipeline.docMentions(docId, text, spans.iterator).toSeq
+        ms.groupBy(m => (m.norm, m.surface)).foreach { case ((norm, surface), g) =>
+          out += ((UcTag, null, norm, surface, 0L, g.size.toLong))
+        }
+        // the labelled join: a mention pairs with every gold on its span
+        // (duplicate gold spans multiply); a null doc_id never joins
+        if (docId != null) {
+          val onSpan = spans.groupBy(g => (g.start, g.end))
+          ms.flatMap(m => onSpan((m.start, m.end)).map(g => (m.section, m.norm, g.concept_id)))
+            .groupBy(identity).foreach { case ((section, norm, c), g) =>
+              out += ((HarvestTag, section, norm, null, c, g.size.toLong))
+            }
+        }
+      }
+      out.iterator
+    }.toDF("tag", "section", "key", "surface", "concept_id", "n")
+    DictionaryMatch.collectCapped(
+      perDoc.groupBy(col("tag"), col("section"), col("key"), col("concept_id"))
+        .agg(sum(col("n")).as("n"),
+          sum(when(col("surface") === upper(col("surface")), col("n")).otherwise(0L)).as("uc"))
+        .filter(col("tag") =!= UcTag || col("uc") / col("n") > 0.99)
+        .select(col("tag"),
+          when(col("tag") === UcTag, upper(col("key"))).otherwise(col("section")),
+          col("key"), col("concept_id"), col("n")),
+      "training tallies", "the distinct labelled keys exceed the dictionary cap")
+  }
+
+  /** The scoring pass: `keyScoresByNote` and `keyScoresByMention` in one
+    * tally, (section, mention) → [notes with a +1, notes with a −1, +1
+    * rows, −1 rows] — a note is a scoring-cogroup key, so each doc's
+    * predictions are pre-tallied inside the cogroup and one exchange
+    * follows it — plus `wordBlacklist(docs, wordCutoff)` from the same doc
+    * texts. */
+  private def keyScoreTallies(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
+                              dict: Seq[DictEntry], wordCutoff: Long)
+                             (implicit spark: SparkSession)
+      : (Map[(String, String), Array[Long]], Set[String]) = {
+    import spark.implicits._
+    val perDoc = scoreDocs(docs, golds, dict.toArray) { (_, texts, scored) =>
+      val out = ArrayBuffer.empty[(Int, String, String, Long, Long, Long, Long)]
+      val t = new java.util.HashMap[(String, String), Array[Long]]()
+      scored.foreach { case (a, s) =>
+        val c = t.computeIfAbsent((a.section, a.dict_entry), _ => new Array[Long](2))
+        if (s == 1) c(0) += 1 else if (s == -1) c(1) += 1
+      }
+      t.forEach { (k, c) =>
+        out += ((ScoreTag, k._1, k._2, math.min(c(0), 1L), math.min(c(1), 1L), c(0), c(1)))
+      }
+      texts.iterator.flatMap(TextFns.normalize(_).split(' ')).filter(_.nonEmpty).toSeq
+        .groupBy(identity).foreach { case (w, ws) =>
+          out += ((WordTag, null, w, ws.size.toLong, 0L, 0L, 0L))
+        }
+      out.iterator
+    }.toDF("tag", "section", "key", "a", "b", "c", "d")
+    val rows = DictionaryMatch.collectCapped(
+      perDoc.groupBy(col("tag"), col("section"), col("key"))
+        .agg(sum(col("a")).as("a"), sum(col("b")), sum(col("c")), sum(col("d")))
+        .filter(col("tag") =!= WordTag || col("a") > wordCutoff),
+      "key score tallies", "the scored keys exceed the dictionary cap")
+    val (words, keys) = rows.partition(_.getInt(0) == WordTag)
+    (keys.map(r => (r.getString(1), r.getString(2)) -> Array.tabulate(4)(i => r.getLong(i + 3))).toMap,
+      words.map(_.getString(2)).toSet)
+  }
+
+  private def collectTable[T](ds: Dataset[T], what: String): Array[T] =
+    DictionaryMatch.collectCapped(ds, what, "terminology tables must be dictionary-scale")
+
+  // ------------------------------------------------------------------
+  // Driver-side steps of `trainDictionarySplit`: each equals the public
+  // step operator it names, over collected dictionary-scale arrays
+  // (section is never null here — harvest sections come from
+  // Sectioning.sectionAt, every other entry is "any").
+  // ------------------------------------------------------------------
+
+  /** `dictFromMentions`' rule over (section, norm, concept, count) rows:
+    * the modal concept (count desc, concept asc), kept on a strict majority. */
+  private def modalEntries(counts: Seq[(String, String, Long, Long)]): Seq[DictEntry] =
+    counts.groupBy(c => (c._1, c._2)).iterator.flatMap { case ((section, norm), cs) =>
+      val best = cs.minBy(c => (-c._4, c._3))
+      if (best._4 * 2 > cs.iterator.map(_._4).sum) Some(DictEntry(section, norm, best._3))
+      else None
+    }.toSeq
+
+  /** (entries whose mention is no uc norm, the rest UPPERCASED and
+    * deduplicated) — `ucUpper` maps each uc norm to its `upper`. */
+  private def splitUc(d: Seq[DictEntry], ucUpper: Map[String, String])
+      : (Seq[DictEntry], Seq[DictEntry]) = {
+    val (uc, lc) = d.partition(e => ucUpper.contains(e.mention))
+    (lc, uc.map(e => e.copy(mention = ucUpper(e.mention))).distinct)
+  }
+
+  /** `pruneGreedyKeys` over the tallies (by-mention counts at 2 and 3). */
+  private def greedyKeep(dict: Seq[DictEntry], scores: Map[(String, String), Array[Long]],
+                         goldCounts: Map[Long, Long], thAny: Double, thDict: Double): Seq[DictEntry] = {
+    val bad = dict.flatMap { e =>
+      for (s <- scores.get((e.section, e.mention)); n <- goldCounts.get(e.concept_id))
+        yield (e.concept_id, ((e.section, e.mention), (s(2), s(3))), n)
+    }.groupBy(_._1).valuesIterator.flatMap { rows =>
+      badKeysForConcept(rows.map(_._2), rows.head._3, thAny, thDict)
+    }.toSet
+    dict.filterNot(e => bad((e.section, e.mention)))
+  }
+
+  private val FsnTag = java.util.regex.Pattern.compile("\\s*\\([^)]*\\)$")
+  private val FsnType = java.util.regex.Pattern.compile("\\(([^)]*)\\)\\s*$")
+
+  /** Catalyst's `length`: code points, not UTF-16 units. */
+  private def charLen(s: String): Int = s.codePointCount(0, s.length)
+
+  /** [[dictFromTerminology]] over collected rows. */
+  private[graft] def terminologyEntries(concepts: Seq[Concept], descriptions: Seq[Description],
+                                        minLen: Int = 2, maxLen: Int = 5): Seq[DictEntry] = {
+    val active = concepts.iterator.filter(_.active == 1).map(_.concept_id).toSet
+    descriptions.iterator.filter(d => d.active == 1 && active(d.concept_id)).flatMap { d =>
+      val t = d.term
+      // instr(term, "[") > 6: the first "[" past code point 5
+      def lateBracket = { val i = t.indexOf('['); i >= 0 && t.codePointCount(0, i) > 5 }
+      if (t == null || charLen(t) < 3 || t.contains("machine translation") ||
+          (t.contains("]") && lateBracket)) None
+      else {
+        val clean = if (d.typ == "FSN") FsnTag.matcher(t).replaceAll("") else t
+        val c0 = if (clean.isEmpty) ' ' else clean.charAt(0)
+        val mention = TextFns.normalize(clean)
+        val words = mention.split(" ", -1).length
+        if (c0 < 128 && Character.isLetterOrDigit(c0) && charLen(mention) >= 3 &&
+            words >= minLen - 1 && words <= maxLen) Some(DictEntry("any", mention, d.concept_id))
+        else None
+      }
+    }.toSeq.distinct
+  }
+
+  /** [[dictFromExternal]] over collected (ext_id, name, vocabulary) and
+    * (ext_id_1, ext_id_2, relationship) rows. */
+  private[graft] def externalEntries(extConcepts: Seq[(Option[Long], String, String)],
+                                     extMappings: Seq[(Option[Long], Long, String)],
+                                     invalidVocabs: Seq[String] = Seq("FAKEVOCAB1")): Seq[DictEntry] = {
+    val mapsTo = extMappings.filter(_._3 == "Maps to")
+      .collect { case (Some(from), to, _) => from -> to }.groupBy(_._1)
+    extConcepts.flatMap {
+      case (Some(id), name, vocab) if vocab != null && !invalidVocabs.contains(vocab) =>
+        mapsTo.getOrElse(id, Nil).map(m => DictEntry("any", TextFns.normalize(name), m._2))
+      case _ => Nil
+    }.distinct
+  }
+
+  /** [[abbreviationEntries]] over collected (abbr, meaning) rows. */
+  private[graft] def abbreviationEntriesOf(abbr: Seq[(String, String)],
+                                           dict: Seq[DictEntry]): Seq[DictEntry] = {
+    val byMention = dict.groupBy(_.mention)
+    abbr.flatMap { case (a, meaning) =>
+      byMention.getOrElse(TextFns.normalize(meaning), Nil)
+        .map(e => DictEntry(e.section, TextFns.normalize(a), e.concept_id))
+    }.filter(e => charLen(e.mention) >= 3).distinct
+  }
+
+  /** [[conceptTypes]] over collected rows: concept → min FSN type tag
+    * (Spark's string order: UTF-8 bytes). */
+  private[graft] def conceptTypesOf(descriptions: Seq[Description]): Map[Long, String] =
+    descriptions.flatMap { d =>
+      if (d.active != 1 || d.typ != "FSN" || d.term == null) None
+      else {
+        val m = FsnType.matcher(d.term)
+        if (!m.find()) None else Option(m.group(1)).filter(_.nonEmpty).map(d.concept_id -> _)
+      }
+    }.groupBy(_._1).map { case (cid, ts) =>
+      cid -> ts.map(_._2).minBy(org.apache.spark.unsafe.types.UTF8String.fromString)
+    }
+
+  /** [[limitAnyToAllowedSections]] over collected rows; `allowed` holds
+    * (type, section) pairs. */
+  private def limitAnyOf(dict: Seq[DictEntry], allowed: Seq[(String, String)],
+                         cidToType: Map[Long, String]): Seq[DictEntry] = {
+    val sectionsOf = allowed.groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2).distinct }
+    dict.flatMap { e =>
+      if (e.section != "any") Seq(e)
+      else cidToType.get(e.concept_id).flatMap(sectionsOf.get) match {
+        case Some(sections) => sections.map(s => e.copy(section = s))
+        case None => Seq(e)
+      }
+    }.distinct
   }
 
   /** Combined view of the split dictionaries (uc entries carry UPPERCASE
@@ -687,17 +865,6 @@ object DictTrain {
       .select(col("doc_id"), col("start"), col("end"), col("norm").as("name"), col("section"))
     sectionStatsFlat(mentions.join(golds.toDF(), Seq("doc_id", "start", "end")))
   }
-
-  /** Unpersist the underlying RDD of lazily-localCheckpoint'd frames (the
-    * SQL cache manager never sees those blocks). Only the frame's OWN root
-    * is freed — lineage below it is untouched. */
-  private def freeCheckpoints(dfs: Dataset[_]*): Unit =
-    dfs.foreach { df =>
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ => ()
-      }
-    }
 
   val normalizeUdf = udf((s: String) => TextFns.normalize(s))
 }

@@ -446,15 +446,20 @@ object DictionaryMatch {
     * path is the blocking+scoring pipeline, not the gazetteer. */
   val MaxBroadcastDictEntries: Long = 20000000L
 
-  private[operators] def collectDict(dict: Dataset[DictEntry]): Array[DictEntry] = {
-    // r6 limit-probe: limit(cap+1) bounds the driver collect AT the cap —
-    // the former count-then-collect paid a second full pass over the dict
-    // derivation per annotate call, and (unlike this form) collected
-    // everything once the count passed (guide §1.2)
-    val rows = dict.limit((MaxBroadcastDictEntries + 1).toInt).collect()
+  private[operators] def collectDict(dict: Dataset[DictEntry]): Array[DictEntry] =
+    collectCapped(dict, "dictionary",
+      "route beyond-broadcast-scale matching through LinkagePipeline")
+
+  /** Driver collect of a dictionary-scale relation under the same cap.
+    * r6 limit-probe: limit(cap+1) bounds the driver collect AT the cap —
+    * the former count-then-collect paid a second full pass over the
+    * derivation, and (unlike this form) collected everything once the
+    * count passed (guide §1.2). */
+  private[operators] def collectCapped[T](ds: Dataset[T], what: String,
+                                          hint: String): Array[T] = {
+    val rows = ds.limit((MaxBroadcastDictEntries + 1).toInt).collect()
     require(rows.length <= MaxBroadcastDictEntries,
-      s"dictionary has > $MaxBroadcastDictEntries entries (broadcast cap) " +
-        "— route beyond-broadcast-scale matching through LinkagePipeline")
+      s"$what has > $MaxBroadcastDictEntries entries (broadcast cap) — $hint")
     rows
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -34,6 +34,14 @@ object Graph {
 
   private val EmptyChildren = Array.empty[Any]
 
+  /** `edgeCap` when every id column the walk compares has one type, else 0
+    * (the frontier loop): the loop's `===` joins insert implicit numeric
+    * promotions a boxed-value hash probe cannot reproduce — an Int child
+    * never equals a Long parent key, so the local walk would stop at
+    * depth 1. */
+  private def localCap(edgeCap: Long, idTypes: DataType*): Long =
+    if (idTypes.distinct.size == 1) edgeCap else 0L
+
   /** Bounded collect of a dimension-scale edge relation into an adjacency
     * map keyed by column `keyIdx` with neighbor column `valIdx`; None when
     * the relation exceeds `cap` — or contains a NULL endpoint (the
@@ -43,7 +51,8 @@ object Graph {
   private def collectAdjacency(e: DataFrame, keyIdx: Int, valIdx: Int, cap: Long)
       : Option[java.util.HashMap[Any, Array[Any]]] = {
     if (cap <= 0) return None
-    val rows = e.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+    // clamp BEFORE the +1: cap + 1 overflows at Long.MaxValue
+    val rows = e.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
     if (rows.length > cap) None
     else if (rows.exists(r => r.isNullAt(keyIdx) || r.isNullAt(valIdx))) None
     else {
@@ -147,7 +156,8 @@ object Graph {
                       edgeCap: Long = BroadcastEdgeCap)
                      (implicit spark: SparkSession): DataFrame = {
     val pe = edges.select(col("child"), col("parent"))
-    collectAdjacency(pe, keyIdx = 0, valIdx = 1, edgeCap) match {
+    val cap = localCap(edgeCap, pe.schema(0).dataType, pe.schema(1).dataType)
+    collectAdjacency(pe, keyIdx = 0, valIdx = 1, cap) match {
       case Some(adj) =>
         val schema = StructType(Seq(
           StructField("node", pe.schema(0).dataType),
@@ -200,12 +210,8 @@ object Graph {
                   edgeCap: Long = BroadcastEdgeCap)
                  (implicit spark: SparkSession): DataFrame = {
     val pe = edges.select(col("child"), col("parent"))
-    // local path only when the roots column has exactly the edge-endpoint
-    // type: the loop's `===` join inserts implicit numeric promotions a
-    // boxed-value hash probe cannot reproduce, so mixed-type calls keep
-    // the loop semantics
     val r = roots.select(col("root"))
-    val cap = if (r.schema(0).dataType == pe.schema(1).dataType) edgeCap else 0L
+    val cap = localCap(edgeCap, r.schema(0).dataType, pe.schema(0).dataType, pe.schema(1).dataType)
     collectAdjacency(pe, keyIdx = 1, valIdx = 0, cap) match {
       case Some(adj) =>
         val schema = StructType(Seq(
@@ -267,9 +273,8 @@ object Graph {
                            truncateOk: Boolean, edgeCap: Long)
                           (implicit spark: SparkSession): DataFrame = {
     val pe = edges.select(col("child"), col("parent"))
-    // same root/endpoint type-parity gate as `descendants`
     val r = roots.select(col("root"))
-    val cap = if (r.schema(0).dataType == pe.schema(1).dataType) edgeCap else 0L
+    val cap = localCap(edgeCap, r.schema(0).dataType, pe.schema(0).dataType, pe.schema(1).dataType)
     collectAdjacency(pe, keyIdx = 1, valIdx = 0, cap) match {
       case Some(adj) =>
         val schema = StructType(Seq(

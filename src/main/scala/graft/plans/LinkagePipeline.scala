@@ -73,14 +73,19 @@ object LinkagePipeline {
       (_, docIt, spanIt) =>
         docIt.toSeq.headOption match {
           case None => Iterator.empty
-          case Some((docId, text)) =>
-            val secs = Sectioning.sections(docId, text)
-            spanIt.map { g =>
-              val surface = text.substring(g.start, math.min(g.end, text.length))
-              Mention(docId, g.start, g.end, surface,
-                TextFns.normalize(surface), Sectioning.sectionAt(secs, g.start))
-            }
+          case Some((docId, text)) => docMentions(docId, text, spanIt)
         }
+    }
+  }
+
+  /** The per-doc body of [[mentionsFromText]]: one sectioned mention per
+    * span, in span order. */
+  def docMentions(docId: String, text: String, spans: Iterator[GoldAnnotation]): Iterator[Mention] = {
+    val secs = Sectioning.sections(docId, text)
+    spans.map { g =>
+      val surface = text.substring(g.start, math.min(g.end, text.length))
+      Mention(docId, g.start, g.end, surface,
+        TextFns.normalize(surface), Sectioning.sectionAt(secs, g.start))
     }
   }
 

@@ -118,6 +118,21 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(l1 == l2 && l1(500L) == 500L)
   }
 
+  test("mixed Int/Long endpoints take the loop; an unbounded cap does not overflow") {
+    // a: Int, b: Long — the local union-find keys on boxed values and would
+    // never unify 1 with 1L; the loop's least/greatest promote to Long
+    val mixed = Seq((1, 2L), (2, 3L), (7, 7L), (8, 9L)).toDF("a", "b")
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loop = asMap(ConnectedComponents(mixed, localCap = 0))
+    assert(asMap(ConnectedComponents(mixed)) == loop)
+    assert(loop == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 8L, 9L -> 8L))
+    // localCap + 1 used to overflow Int for caps >= Int.MaxValue
+    val chain = (1L until 20L).map(i => (i - 1, i)).toDF("a", "b")
+    assert(asMap(ConnectedComponents(chain, localCap = Long.MaxValue)) ==
+      asMap(ConnectedComponents(chain, localCap = 0)))
+  }
+
   test("contraction cap overflow passes edges through with connectivity intact") {
     // cap=4 distinct nodes: most of the chain overflows to passthrough;
     // the emitted edge set must still connect the full chain

@@ -53,6 +53,30 @@ class GraphChunkingSpec extends AnyFunSuite with SparkTestBase {
     assert(exLoop.getMessage.contains("maxDist"))
   }
 
+  test("Int-child / Long-parent graphs walk to full depth on every BFS") {
+    // chain 4 -> 3 -> 2 -> 1 plus 5 -> 3: child Int, parent Long. A boxed
+    // local walk would stop at depth 1 (Integer 3 never equals Long 3L);
+    // the gate must route these to the frontier loop
+    val edges = Seq((2, 1L), (3, 2L), (4, 3L), (5, 3L)).toDF("child", "parent")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.toSeq.map(_.toString).toList).toSet
+    val anc = pairs(Graph.ancestorClosure(edges))
+    assert(anc == pairs(Graph.ancestorClosure(edges, edgeCap = 0)))
+    assert(anc.contains(List("4", "1")), s"depth-3 ancestor missing: $anc")
+    // an unbounded cap must not wrap the limit probe to limit(0)
+    val longEdges = Seq((2L, 1L), (3L, 2L), (4L, 3L)).toDF("child", "parent")
+    assert(pairs(Graph.ancestorClosure(longEdges, edgeCap = Long.MaxValue)) ==
+      pairs(Graph.ancestorClosure(longEdges, edgeCap = 0)))
+    for (roots <- Seq(Seq(1L).toDF("root"), Seq(1).toDF("root"))) {
+      val desc = pairs(Graph.descendants(edges, roots))
+      assert(desc == pairs(Graph.descendants(edges, roots, edgeCap = 0)))
+      assert(desc.contains(List("1", "4")), s"depth-3 descendant missing: $desc")
+      val dist = pairs(Graph.shortestPaths(edges, roots))
+      assert(dist == pairs(Graph.shortestPaths(edges, roots, edgeCap = 0)))
+      assert(dist.contains(List("1", "4", "3")))
+    }
+  }
+
   test("isolate removal keeps only edge endpoints") {
     val nodes = Seq(1L, 2L, 3L, 99L).toDF("id")
     val edges = Seq((2L, 1L), (3L, 1L)).toDF("child", "parent")

@@ -106,6 +106,17 @@ class MetricsSpec extends AnyFunSuite with SparkTestBase {
     assert(r.getDouble(3) == 1.0)  // full list: both hit
   }
 
+  test("align-accuracy on an empty side: no aligned rows, no NPE") {
+    val gt = Seq(("n1", 0, 7L)).toDF("note_id", "start", "concept_id")
+    val pred = Seq(("n1", 0, "7,1")).toDF("note_id", "start", "top_concept_id")
+    // a global max over zero groups is NULL; the duplicate probe must
+    // read it as "no duplicates", and accuracy over zero rows is NULL
+    for ((g, p) <- Seq((gt.limit(0), pred), (gt, pred.limit(0)), (gt.limit(0), pred.limit(0)))) {
+      val r = Metrics.alignAccuracy(g, p).head()
+      assert((0 until 4).forall(r.isNullAt), s"expected NULL accuracies, got $r")
+    }
+  }
+
   test("pairwise F1 symmetric and correct on small sets") {
     val p = Seq(("a", "b"), ("a", "c"), ("x", "y")).toDF("a", "b")
     val g = Seq(("a", "b"), ("x", "y"), ("m", "n")).toDF("a", "b")
