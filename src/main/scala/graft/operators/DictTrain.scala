@@ -85,12 +85,18 @@ object DictTrain {
       .as[DictEntry]
   }
 
+  /** Defaults of the terminology word-count bounds and the external
+    * vocabulary blacklist, shared with `trainDictionarySplit`'s driver path. */
+  private val TermMinWords = 2
+  private val TermMaxWords = 5
+  private val InvalidVocabs = Seq("FAKEVOCAB1")
+
   /** J1: active concepts ⋈ active descriptions; FSN tag stripped (F3/F4);
     * P3 validity predicates of `add_snomed_syn` (`mimic_train.py:137-153`):
     * raw length ≥ 3, no "machine translation", no late "[...]" bracket,
     * processed word count in [minLen, maxLen], leading char alphanumeric. */
   def dictFromTerminology(concepts: Dataset[Concept], descriptions: Dataset[Description],
-                          minLen: Int = 2, maxLen: Int = 5)
+                          minLen: Int = TermMinWords, maxLen: Int = TermMaxWords)
                          (implicit spark: SparkSession): Dataset[DictEntry] = {
     import spark.implicits._
     val c = concepts.filter(_.active == 1).toDF()
@@ -117,7 +123,7 @@ object DictTrain {
     * 'Maps to' relationship → SNOMED concept id; the ext NAME becomes a
     * synonym of the mapped concept. */
   def dictFromExternal(extConcepts: DataFrame, extMappings: DataFrame,
-                       invalidVocabs: Seq[String] = Seq("FAKEVOCAB1"))
+                       invalidVocabs: Seq[String] = InvalidVocabs)
                       (implicit spark: SparkSession): Dataset[DictEntry] = {
     import spark.implicits._
     extConcepts
@@ -547,11 +553,9 @@ object DictTrain {
 
     // the two outputs, persisted and materialized by ONE action (computing
     // the union computes — and therefore caches — every partition of both);
-    // ~1M entries a partition, so `infer`'s limit-probe collect of a
-    // smaller dictionary is one job
+    // one partition each, so `infer`'s limit-probe collect is one job
     def persisted(es: Seq[DictEntry]): Dataset[DictEntry] =
-      spark.createDataset(spark.sparkContext.parallelize(es,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism, 1 + es.size / (1 << 20)))))
+      spark.createDataset(spark.sparkContext.parallelize(es, 1))
         .persist(StorageLevel.MEMORY_AND_DISK)
     val lcOut = persisted(lcFinal)
     val ucOut = persisted(ucDict)
@@ -663,7 +667,12 @@ object DictTrain {
   // Driver-side steps of `trainDictionarySplit`: each equals the public
   // step operator it names, over collected dictionary-scale arrays
   // (section is never null here — harvest sections come from
-  // Sectioning.sectionAt, every other entry is "any").
+  // Sectioning.sectionAt, every other entry is "any"). The terminology
+  // rules are transcribed rather than collected from their operators'
+  // plans: those plans would add their own generated classes, taking a
+  // train+infer pass with its annotation checksum from 90 to 104 distinct
+  // classes, past Spark's 100-entry codegen cache (warm-pass compiles
+  // 24 → 55).
   // ------------------------------------------------------------------
 
   /** `dictFromMentions`' rule over (section, norm, concept, count) rows:
@@ -702,8 +711,8 @@ object DictTrain {
   private def charLen(s: String): Int = s.codePointCount(0, s.length)
 
   /** [[dictFromTerminology]] over collected rows. */
-  private[graft] def terminologyEntries(concepts: Seq[Concept], descriptions: Seq[Description],
-                                        minLen: Int = 2, maxLen: Int = 5): Seq[DictEntry] = {
+  private[graft] def terminologyEntries(concepts: Seq[Concept],
+                                        descriptions: Seq[Description]): Seq[DictEntry] = {
     val active = concepts.iterator.filter(_.active == 1).map(_.concept_id).toSet
     descriptions.iterator.filter(d => d.active == 1 && active(d.concept_id)).flatMap { d =>
       val t = d.term
@@ -717,7 +726,7 @@ object DictTrain {
         val mention = TextFns.normalize(clean)
         val words = mention.split(" ", -1).length
         if (c0 < 128 && Character.isLetterOrDigit(c0) && charLen(mention) >= 3 &&
-            words >= minLen - 1 && words <= maxLen) Some(DictEntry("any", mention, d.concept_id))
+            words >= TermMinWords - 1 && words <= TermMaxWords) Some(DictEntry("any", mention, d.concept_id))
         else None
       }
     }.toSeq.distinct
@@ -726,12 +735,11 @@ object DictTrain {
   /** [[dictFromExternal]] over collected (ext_id, name, vocabulary) and
     * (ext_id_1, ext_id_2, relationship) rows. */
   private[graft] def externalEntries(extConcepts: Seq[(Option[Long], String, String)],
-                                     extMappings: Seq[(Option[Long], Long, String)],
-                                     invalidVocabs: Seq[String] = Seq("FAKEVOCAB1")): Seq[DictEntry] = {
+                                     extMappings: Seq[(Option[Long], Long, String)]): Seq[DictEntry] = {
     val mapsTo = extMappings.filter(_._3 == "Maps to")
       .collect { case (Some(from), to, _) => from -> to }.groupBy(_._1)
     extConcepts.flatMap {
-      case (Some(id), name, vocab) if vocab != null && !invalidVocabs.contains(vocab) =>
+      case (Some(id), name, vocab) if vocab != null && !InvalidVocabs.contains(vocab) =>
         mapsTo.getOrElse(id, Nil).map(m => DictEntry("any", TextFns.normalize(name), m._2))
       case _ => Nil
     }.distinct
