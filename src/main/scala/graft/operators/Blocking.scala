@@ -29,6 +29,10 @@ object Blocking {
   val MinHashK = 64
   val RowsPerBand = 4
 
+  /** Max code-point length difference of a candidate pair: pairs further
+    * apart can never clear the match threshold. */
+  val LenSlack = 10
+
   /** Pure per-string key generation (driver oracle + executor). */
   def keysFor(norm: String): Seq[String] = {
     val toks = norm.split(' ').filter(t => t.nonEmpty && !stopWords.contains(t))
@@ -183,7 +187,7 @@ object Blocking {
   def candidatePairsBipartite(keysLeft: DataFrame, keysRight: DataFrame,
                               hotKeyCap: Int = 1000,
                               saltThreshold: Int = 300, salts: Int = 8,
-                              lenSlack: Int = 10)
+                              lenSlack: Int = LenSlack)
                              (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val freq = keyFrequencies(

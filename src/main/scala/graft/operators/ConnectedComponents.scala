@@ -52,7 +52,17 @@ object ConnectedComponents {
     * intake can never exceed the cap; beyond it the loop runs unchanged
     * (fact-scale edge sets — the 100 TB mention graph — keep the
     * distributed algorithm). */
-  private[operators] val LocalSolveCap = 1 << 21
+  private[graft] val LocalSolveCap = 1 << 21
+
+  /** The local-solve cap's one gate: the rows of `df` when it has at most
+    * `cap` of them, else None. A bounded `limit(cap + 1)` collect, clamped
+    * BEFORE the +1 (cap + 1 overflows at Long.MaxValue). */
+  private[graft] def collectWithin(df: DataFrame, cap: Long): Option[Array[org.apache.spark.sql.Row]] =
+    if (cap <= 0) None
+    else {
+      val rows = df.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length <= cap) Some(rows) else None
+    }
 
   /** Spark's default StringType collation is UTF8 binary — least/greatest
     * compare the UTF-8 byte sequences unsigned, which DIVERGES from Java's
@@ -98,18 +108,12 @@ object ConnectedComponents {
         case StringType => Some(Utf8Ordering)
         case _ => None
       }
-    if (localOrd.nonEmpty && localCap > 0) {
-      val rows = edges0.limit(math.min(localCap, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length <= localCap) {
-        // the checkpointed input is fully consumed — free its blocks now
-        // instead of waiting for GC (matters for repeated-sample benches)
-        edges0.queryExecution.analyzed.foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(false)
-          case _ => ()
-        }
-        return localAssignments(rows, idType, localOrd.get)
-      }
+    val local = localOrd.flatMap(_ => collectWithin(edges0, localCap))
+    if (local.nonEmpty) {
+      // the checkpointed input is fully consumed — free its blocks now
+      // instead of waiting for GC (matters for repeated-sample benches)
+      freeCheckpoint(edges0)
+      return localAssignments(local.get, idType, localOrd.get)
     }
 
     val nodes = edges0.select(col("a").as("id")).toDF("id")
@@ -148,6 +152,13 @@ object ConnectedComponents {
     nodes.join(assign, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
+
+  /** Unpersists the checkpoint blocks under `df`'s LogicalRDD leaves. */
+  private[operators] def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
 
   /** The whole-graph union-find behind the dimension-scale fast path:
     * every endpoint becomes a node (self-loops and null-sided rows

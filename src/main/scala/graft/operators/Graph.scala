@@ -47,24 +47,25 @@ object Graph {
     * the relation exceeds `cap` — or contains a NULL endpoint (the
     * frontier loop's `===` joins are null-rejecting in ways a hash-map
     * walk is not, so null-bearing graphs take the loop path whose
-    * semantics are the contract) — and the caller falls back. */
+    * semantics are the contract) — and the caller falls back.
+    *
+    * `e` is the caller's eager checkpoint of the edge relation, which the
+    * fallback loop reads too, so the upstream plan runs once on either
+    * path; on the local path the checkpoint is freed here. */
   private def collectAdjacency(e: DataFrame, keyIdx: Int, valIdx: Int, cap: Long)
-      : Option[java.util.HashMap[Any, Array[Any]]] = {
-    if (cap <= 0) return None
-    // clamp BEFORE the +1: cap + 1 overflows at Long.MaxValue
-    val rows = e.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-    if (rows.length > cap) None
-    else if (rows.exists(r => r.isNullAt(keyIdx) || r.isNullAt(valIdx))) None
-    else {
-      val m = new java.util.HashMap[Any, ArrayBuffer[Any]]()
-      rows.foreach { r =>
-        m.computeIfAbsent(r.get(keyIdx), _ => new ArrayBuffer[Any]()) += r.get(valIdx)
+      : Option[java.util.HashMap[Any, Array[Any]]] =
+    ConnectedComponents.collectWithin(e, cap)
+      .filterNot(_.exists(r => r.isNullAt(keyIdx) || r.isNullAt(valIdx)))
+      .map { rows =>
+        ConnectedComponents.freeCheckpoint(e)
+        val m = new java.util.HashMap[Any, ArrayBuffer[Any]]()
+        rows.foreach { r =>
+          m.computeIfAbsent(r.get(keyIdx), _ => new ArrayBuffer[Any]()) += r.get(valIdx)
+        }
+        val out = new java.util.HashMap[Any, Array[Any]](math.max(16, m.size * 2))
+        m.forEach((k, v) => out.put(k, v.toArray))
+        out
       }
-      val out = new java.util.HashMap[Any, Array[Any]](math.max(16, m.size * 2))
-      m.forEach((k, v) => out.put(k, v.toArray))
-      Some(out)
-    }
-  }
 
   /** In-memory BFS from `root`: emits each node at its FIRST-VISIT level —
     * the min distance, the same invariant the frontier loop's left_anti
@@ -157,7 +158,8 @@ object Graph {
                      (implicit spark: SparkSession): DataFrame = {
     val pe = edges.select(col("child"), col("parent"))
     val cap = localCap(edgeCap, pe.schema(0).dataType, pe.schema(1).dataType)
-    collectAdjacency(pe, keyIdx = 0, valIdx = 1, cap) match {
+    val e = pe.localCheckpoint()
+    collectAdjacency(e, keyIdx = 0, valIdx = 1, cap) match {
       case Some(adj) =>
         val schema = StructType(Seq(
           StructField("node", pe.schema(0).dataType),
@@ -176,7 +178,6 @@ object Graph {
           maxDepth = maxIter + 1, guardDepth = false,
           schema, emitDist = false)
       case None =>
-        val e = pe.localCheckpoint()
         var frontier = e.select(col("child").as("node"), col("parent").as("anc"))
           .distinct().localCheckpoint(false)
         var acc = frontier
@@ -212,7 +213,8 @@ object Graph {
     val pe = edges.select(col("child"), col("parent"))
     val r = roots.select(col("root"))
     val cap = localCap(edgeCap, r.schema(0).dataType, pe.schema(0).dataType, pe.schema(1).dataType)
-    collectAdjacency(pe, keyIdx = 1, valIdx = 0, cap) match {
+    val e = pe.localCheckpoint()
+    collectAdjacency(e, keyIdx = 1, valIdx = 0, cap) match {
       case Some(adj) =>
         val schema = StructType(Seq(
           StructField("root", r.schema(0).dataType),
@@ -221,7 +223,6 @@ object Graph {
           r.distinct().rdd.map(_.get(0)),
           maxDepth = maxIter + 1, guardDepth = false, schema, emitDist = false)
       case None =>
-        val e = pe.localCheckpoint()
         val r = roots.select(col("root")).distinct()
         var frontier = e.join(r, e("parent") === r("root"))
           .select(col("root"), col("child").as("descendant"))
@@ -275,7 +276,8 @@ object Graph {
     val pe = edges.select(col("child"), col("parent"))
     val r = roots.select(col("root"))
     val cap = localCap(edgeCap, r.schema(0).dataType, pe.schema(0).dataType, pe.schema(1).dataType)
-    collectAdjacency(pe, keyIdx = 1, valIdx = 0, cap) match {
+    val e = pe.localCheckpoint()
+    collectAdjacency(e, keyIdx = 1, valIdx = 0, cap) match {
       case Some(adj) =>
         val schema = StructType(Seq(
           StructField("root", r.schema(0).dataType),
@@ -285,7 +287,6 @@ object Graph {
           r.distinct().rdd.map(_.get(0)),
           maxDepth = maxDist, guardDepth = !truncateOk, schema, emitDist = true)
       case None =>
-        val e = pe.localCheckpoint()
         val r = roots.select(col("root")).distinct()
         // dist 1: direct children of each root (root→node via parent→child)
         var frontier = e.join(r, e("parent") === r("root"))

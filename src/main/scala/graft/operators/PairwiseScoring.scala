@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Batched pairwise scoring (north rule): Jaro-Winkler + Levenshtein +
   * cosine-over-embedding features fused by a logistic scorer.
@@ -98,13 +99,23 @@ object PairwiseScoring {
   def matchEdges(scored: DataFrame): DataFrame =
     scored.filter(col("score") >= 0.5).select(col("a"), col("b"))
 
-  /** Pure driver-side oracle of the same fusion (differential tests). */
+  /** [[scoreInline]]'s `score` column as a plain function, bit for bit:
+    * `length` and `levenshtein` count code points
+    * (`UTF8String.numChars`, `UTF8String.levenshteinDistance` — UTF-16
+    * `String.length` would score "𝔸b" vs "ab" 1/3 instead of 1/2), `exp`
+    * is `StrictMath.exp` (`math.exp` differs in the last bit on ~10% of
+    * arguments), and the JW and cosine UDFs see the strings after the
+    * UTF-8 round trip (a lone surrogate becomes '?'). The fused link pass
+    * in `LinkagePipeline.run` scores with it. */
   def scorePure(na: String, nb: String, w: Weights = Weights()): Double = {
-    val jw = TextFns.jaroWinkler(na, nb)
-    val levr = 1.0 - TextFns.levenshtein(na, nb).toDouble /
-      math.max(1, math.max(na.length, nb.length))
-    val cos = TextFns.cosine(TextFns.hashedEmbeddingRaw(na), TextFns.hashedEmbeddingRaw(nb))
+    val ua = UTF8String.fromString(na)
+    val ub = UTF8String.fromString(nb)
+    val (a, b) = (ua.toString, ub.toString)
+    val jw = TextFns.jaroWinkler(a, b)
+    val levr = 1.0 - ua.levenshteinDistance(ub).toDouble /
+      math.max(math.max(ua.numChars, ub.numChars), 1)
+    val cos = TextFns.cosine(cachedEmbedding(a), cachedEmbedding(b))
     val linear = w.wJw * jw + w.wLev * levr + w.wCos * cos
-    1.0 / (1.0 + math.exp(-w.gain * (linear - w.bias)))
+    1.0 / (1.0 + StrictMath.exp(-w.gain * (linear - w.bias)))
   }
 }

@@ -101,11 +101,9 @@ object Scaling {
     val golds = spark.read.parquet(s"$dir/pip_golds").as[GoldAnnotation]
     val dict = spark.read.parquet(s"$dir/pip_dict").as[DictEntry]
     val mentions = graft.plans.LinkagePipeline.mentionsFromText(docsText, golds)
-    // persistScored stays TRUE even though this job reads only assignments:
-    // the cache boundary is what pins the scoring expressions to exactly one
-    // evaluation per pair — measured without it, the argmax chain re-derives
-    // them downstream and the same 400k-doc run went 105 s → 440-590 s at
-    // local[16] (see LinkagePipeline.run scaladoc)
+    // run links through the broadcast term-key index while the dictionary
+    // fits the dictionary cap, and takes the operator chain (scored pairs
+    // persisted, one scoring evaluation per pair) above it
     val r = graft.plans.LinkagePipeline.run(mentions, dict)
     val n = r.assignments.count()
     r.release()

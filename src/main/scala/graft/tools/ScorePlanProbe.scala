@@ -2,9 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Evidence probe for the `persistScored` scaladoc claim: with no
-  * materialization boundary between scoring and the argmax consumer, the
-  * optimizer collapses the scoring projection into BOTH the filter
+/** Evidence probe for the `scored` persist of the linkage operator chain
+  * (`LinkagePipeline.InMemoryCuts`): with no materialization boundary
+  * between scoring and the argmax consumer, the optimizer collapses the
+  * scoring projection into BOTH the filter
   * (`score >= 0.5`) and the `min_by` sort key (`-score`), so the expensive
   * feature expressions appear (and execute) multiple times in the physical
   * plan. Prints the count of `levenshtein` occurrences in each formatted

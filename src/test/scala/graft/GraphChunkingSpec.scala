@@ -77,6 +77,29 @@ class GraphChunkingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("every BFS evaluates its upstream edge plan once, on either path") {
+    val evals = spark.sparkContext.longAccumulator("edge rows evaluated")
+    val counted = udf((c: Long) => { evals.add(1); c }).asNondeterministic()
+    val n = 40L
+    // a 39-edge chain 40 -> 39 -> ... -> 1 over 3 partitions
+    val edges = spark.range(2, n + 1, 1, 3)
+      .select(counted(col("id")).as("child"), (col("id") - 1).as("parent"))
+    val roots = Seq(1L).toDF("root")
+    // edgeCap 5 < 39 edges: the limit probe fails and the frontier loop runs
+    for (cap <- Seq(5L, 4000000L)) {
+      val runs = Seq[() => org.apache.spark.sql.DataFrame](
+        () => Graph.ancestorClosure(edges, edgeCap = cap),
+        () => Graph.descendants(edges, roots, edgeCap = cap),
+        () => Graph.shortestPaths(edges, roots, edgeCap = cap))
+      for ((run, i) <- runs.zipWithIndex) {
+        evals.reset()
+        val out = run().count()
+        assert(out > 0)
+        assert(evals.value == n - 1, s"cap $cap, BFS #$i: ${evals.value} edge rows evaluated")
+      }
+    }
+  }
+
   test("isolate removal keeps only edge endpoints") {
     val nodes = Seq(1L, 2L, 3L, 99L).toDF("id")
     val edges = Seq((2L, 1L), (3L, 1L)).toDF("child", "parent")
