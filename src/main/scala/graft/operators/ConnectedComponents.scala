@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
 /** Transitive closure via alternating large-star / small-star (the public
   * MapReduce CC algorithm of Kiveris et al., "Connected Components in
@@ -10,30 +16,37 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * recursive NetworkX traversals (`2nd Place/src/snomed_graph.py:212-256`)
   * re-expressed as iterative Dataset joins, per the north rule.
   *
-  * Works on string node ids (lexicographic min is the component
-  * representative — deterministic, no 64-bit-hash collision risk).
-  * Each round `localCheckpoint`s to cut lineage (SURVEY §7.4.4).
+  * The component label is the minimum member under Spark's own
+  * `least`/`greatest` order (for strings the UTF-8 binary collation) —
+  * deterministic, no 64-bit-hash collision risk. Each round
+  * `localCheckpoint`s to cut lineage (SURVEY §7.4.4).
   *
   * large-star: for each node u, m = min(Γ(u) ∪ {u}); emit (v, m) ∀v ∈ Γ(u), v > u
   * small-star: orient edges to (max, min); m = min(N(u) ∪ {u}) = min N(u);
   *             emit (v, m) ∀v ∈ N(u) \ {m}, plus (u, m)
   *
-  * LOCAL CONTRACTION (round 5): before the star rounds, edges are
-  * range-partitioned by endpoint and each partition is collapsed by an
-  * in-memory union-find into (local root → member) star edges. Connectivity
-  * is preserved exactly (a connected subset is replaced by a star), and the
-  * WHICH-root choice cannot affect the output — the star rounds recompute
-  * the true component minimum over all surviving nodes — so the JVM's
-  * natural ordering is safe even where it diverges from Spark's UTF8
-  * binary collation. On locality-shaped graphs (id-adjacent chains — the
-  * hierarchy/skip-chain workloads), a range partition co-locates whole
-  * component segments and the loop converges in ~1-2 rounds instead of
-  * ~log(diameter): at 1000 executors that removes most of the per-round
-  * stage barriers, the dominant cost of iterated CC at scale. The
-  * contraction replaces (and implicitly performs) the input `distinct`,
-  * so it costs the one exchange that dedup already paid. Per-task memory
-  * is bounded by `ContractCap` union-find entries; past the cap, edges
-  * pass through uncontracted (correctness unaffected).
+  * LOCAL PATH: a dimension-scale edge set (≤ `localCap` rows) is solved by
+  * ONE driver-side [[UnionFind]] instead of the star loop — no star round,
+  * signature action or assignment shuffle. [[localEdges]] is the gate, the
+  * same one [[Graph]]'s walks use: every input it rejects takes the exact
+  * loop.
+  *
+  * LOCAL CONTRACTION: before the star rounds, edges are range-partitioned
+  * by endpoint and each partition is collapsed by the same union-find into
+  * (local root → member) star edges. Connectivity is preserved exactly (a
+  * connected subset is replaced by a star), and the WHICH-root choice
+  * cannot affect the output — the star rounds recompute the true component
+  * minimum over all surviving nodes — so the JVM's natural ordering is
+  * safe there even where it diverges from Spark's collation. On
+  * locality-shaped graphs (id-adjacent chains — the hierarchy/skip-chain
+  * workloads), a range partition co-locates whole component segments and
+  * the loop converges in ~1-2 rounds instead of ~log(diameter): at 1000
+  * executors that removes most of the per-round stage barriers, the
+  * dominant cost of iterated CC at scale. The contraction replaces (and
+  * implicitly performs) the input `distinct`, so it costs the one exchange
+  * that dedup already paid. Per-task memory is bounded by `ContractCap`
+  * union-find entries; past the cap, edges pass through uncontracted
+  * (correctness unaffected).
   */
 object ConnectedComponents {
 
@@ -43,11 +56,10 @@ object ConnectedComponents {
   private[operators] val ContractCap = 1 << 22
 
   /** Max edge rows for which the whole component problem is solved by ONE
-    * driver-side union-find instead of the star loop (r6, guide §1.2): the
-    * r5 contraction already ran an in-memory union-find per PARTITION —
-    * when the entire (already-checkpointed) edge set fits the same few-
-    * hundred-MB envelope, running it once over all edges removes every
-    * star round, signature action and assignment shuffle. The probe is a
+    * driver-side union-find instead of the star loop: the contraction
+    * already runs a union-find per PARTITION — when the entire (already-
+    * checkpointed) edge set fits the same few-hundred-MB envelope, running
+    * it once over all edges removes every star round. The probe is a
     * bounded `limit(cap+1)` collect from the checkpoint cache, so driver
     * intake can never exceed the cap; beyond it the loop runs unchanged
     * (fact-scale edge sets — the 100 TB mention graph — keep the
@@ -57,32 +69,62 @@ object ConnectedComponents {
   /** The local-solve cap's one gate: the rows of `df` when it has at most
     * `cap` of them, else None. A bounded `limit(cap + 1)` collect, clamped
     * BEFORE the +1 (cap + 1 overflows at Long.MaxValue). */
-  private[graft] def collectWithin(df: DataFrame, cap: Long): Option[Array[org.apache.spark.sql.Row]] =
+  private[graft] def collectWithin(df: DataFrame, cap: Long): Option[Array[Row]] =
     if (cap <= 0) None
     else {
       val rows = df.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
       if (rows.length <= cap) Some(rows) else None
     }
 
-  /** Spark's default StringType collation is UTF8 binary — least/greatest
-    * compare the UTF-8 byte sequences unsigned, which DIVERGES from Java's
-    * UTF-16 `String.compareTo` for supplementary characters. The local
-    * solve must pick the same component representative the star loop
-    * would, so its string ordering replays the byte comparison exactly. */
-  private val Utf8Ordering: Ordering[Any] = new Ordering[Any] {
-    def compare(x: Any, y: Any): Int = {
-      val a = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val b = y.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      a.length - b.length
+  /** The one gate of every local graph path (here and in [[Graph]]): the
+    * rows of the two-column edge relation `edges`, with the ordering the
+    * union-find needs, when both endpoint columns — and `rootType`, for a
+    * walk from given roots — share one of the types below, no endpoint is
+    * null, and the rows fit `cap`; else None and the caller runs its exact
+    * distributed loop.
+    *
+    * The local structures key on boxed JVM values, which is why the types
+    * are a whitelist: a boxed Integer never equals a Long (the loops' joins
+    * and `least`/`greatest` promote mixed Int/Long ids), and an Array[Byte]
+    * compares by identity (a BinaryType walk would find no edge at all).
+    * Null endpoints take the loops, whose null-rejecting joins are the
+    * contract. The orderings are the loops' `least`/`greatest` order; for
+    * strings that is Spark's UTF-8 binary collation, which differs from
+    * UTF-16 `String.compareTo` on supplementary characters. */
+  private[operators] def localEdges(edges: DataFrame, cap: Long,
+                                    rootType: Option[DataType] = None)
+      : Option[(Array[Row], Ordering[Any])] = {
+    val ord: Option[Ordering[Any]] = (edges.schema.map(_.dataType) ++ rootType).distinct match {
+      case Seq(IntegerType) => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
+      case Seq(LongType) => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
+      case Seq(StringType) => Some(Ordering.by((x: Any) => UTF8String.fromString(x.asInstanceOf[String])))
+      case _ => None
+    }
+    for {
+      o <- ord
+      rows <- collectWithin(edges, cap)
+      if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1))
+    } yield (rows, o)
+  }
+
+  /** The one way to free a materialized frame (here, in [[Graph]] and in
+    * `LinkagePipeline.Result.release`): unpersists it and the checkpoint
+    * blocks of its root `LogicalRDD`, where a lazy `localCheckpoint` keeps
+    * them outside the SQL cache manager. Root-only — `LogicalRDD` leaves
+    * deeper in its lineage may belong to frames the caller does not own. */
+  private[graft] def freeCheckpoint(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
     }
   }
+
+  /** A driver-side collection as an RDD of ~4096-element slices. */
+  private[graft] def parallelizeLocal[T: ClassTag](xs: Seq[T])
+                                                      (implicit spark: SparkSession): RDD[T] =
+    spark.sparkContext.parallelize(xs,
+      math.max(1, math.min(spark.sparkContext.defaultParallelism, 1 + xs.size / 4096)))
 
   /** edges(a, b) → assignment(id, component) for every endpoint. */
   def apply(edgesIn: DataFrame, maxIter: Int = 40,
@@ -93,29 +135,17 @@ object ConnectedComponents {
     // leaf — required for the loop anyway, and avoids re-executing the
     // upstream pipeline for the nodes scan
     val edges0 = edgesIn.select(col("a"), col("b")).localCheckpoint()
-
-    // dimension-scale fast path: one driver union-find over the collected
-    // edge set, component = min member under the SAME ordering the loop's
-    // least/greatest would compute (see Utf8Ordering). Taken only when both
-    // endpoint columns share one type: least/greatest promote mixed
-    // Int/Long ids, a boxed-value union-find would not.
-    val idType = edges0.schema.head.dataType
-    val localOrd: Option[Ordering[Any]] =
-      if (edges0.schema(1).dataType != idType) None
-      else idType match {
-        case LongType => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
-        case IntegerType => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
-        case StringType => Some(Utf8Ordering)
-        case _ => None
-      }
-    val local = localOrd.flatMap(_ => collectWithin(edges0, localCap))
-    if (local.nonEmpty) {
-      // the checkpointed input is fully consumed — free its blocks now
-      // instead of waiting for GC (matters for repeated-sample benches)
-      freeCheckpoint(edges0)
-      return localAssignments(local.get, idType, localOrd.get)
+    localEdges(edges0, localCap) match {
+      case Some((rows, ord)) =>
+        // the checkpointed input is fully consumed — free its blocks now
+        // instead of waiting for GC (matters for repeated-sample benches)
+        freeCheckpoint(edges0)
+        localAssignments(rows, edges0.schema.head.dataType, ord)
+      case None => starLoop(edges0, maxIter)
     }
+  }
 
+  private def starLoop(edges0: DataFrame, maxIter: Int)(implicit spark: SparkSession): DataFrame = {
     val nodes = edges0.select(col("a").as("id")).toDF("id")
       .union(edges0.select(col("b").as("id")).toDF("id")).distinct()
 
@@ -153,55 +183,46 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Unpersists the checkpoint blocks under `df`'s LogicalRDD leaves. */
-  private[operators] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** The whole-graph union-find behind the dimension-scale fast path:
-    * every endpoint becomes a node (self-loops and null-sided rows
-    * register their endpoints but never union — exactly what the loop's
-    * `a =!= b` null-rejecting filter plus the nodes-scan left_outer
-    * coalesce produce), roots are kept at the ordering minimum, and each
-    * node maps to its root — the min member of its component, the same
-    * label the converged star rounds assign. */
-  private def localAssignments(rows: Array[org.apache.spark.sql.Row],
-                               idType: org.apache.spark.sql.types.DataType,
-                               ord: Ordering[Any])
-                              (implicit spark: SparkSession): DataFrame = {
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
+  /** Union-find with path compression whose roots are each set's
+    * `ord`-minimum member — under the loop's order, the label the
+    * converged star rounds assign. */
+  private final class UnionFind[T](ord: Ordering[T]) {
+    private val parent = new java.util.HashMap[T, T]()
+    def size: Int = parent.size
+    def contains(x: T): Boolean = parent.containsKey(x)
+    def find(x: T): T = {
       var r = x
       while (parent.get(r) != r) r = parent.get(r)
       var c = x
       while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    rows.foreach { row =>
-      val a = row.get(0)
-      val b = row.get(1)
-      if (!parent.containsKey(a)) parent.put(a, a)
-      if (!parent.containsKey(b)) parent.put(b, b)
-      if (a != null && b != null && a != b) {
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) {
-          if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-        }
+    /** Registers both endpoints (a self-loop only registers) and joins their sets. */
+    def union(a: T, b: T): Unit = {
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
       }
     }
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](parent.size)
-    val keys = parent.keySet().toArray
-    keys.foreach { k => out += org.apache.spark.sql.Row(k, find(k)) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("component", idType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism, 1 + out.size / 4096))),
-      schema)
+    /** Calls `f(member, root)` for every registered member. */
+    def foreach(f: (T, T) => Unit): Unit = parent.keySet.forEach(k => f(k, find(k)))
+  }
+
+  /** The whole-graph union-find behind the local path: every endpoint
+    * becomes a node (self-loops register their endpoint but never union —
+    * what the loop's `a =!= b` filter plus the nodes-scan left_outer
+    * coalesce produce), and each node maps to its component minimum. */
+  private def localAssignments(rows: Array[Row], idType: DataType, ord: Ordering[Any])
+                              (implicit spark: SparkSession): DataFrame = {
+    val uf = new UnionFind[Any](ord)
+    rows.foreach(r => uf.union(r.get(0), r.get(1)))
+    val out = new ArrayBuffer[Row](uf.size)
+    uf.foreach((k, r) => out += Row(k, r))
+    spark.createDataFrame(parallelizeLocal(out.toSeq),
+      StructType(Seq(StructField("id", idType), StructField("component", idType))))
   }
 
   private def signature(edges: DataFrame): (Long, String) = {
@@ -261,37 +282,15 @@ object ConnectedComponents {
   /** In-memory union-find over one partition's edges; past `cap` distinct
     * nodes, further edges with unseen endpoints pass through unchanged. */
   private[graft] def contractPartition[T](it: Iterator[(T, T)], cap: Int)
-                                             (implicit ord: Ordering[T]): Iterator[(T, T)] = {
-    val parent = new java.util.HashMap[T, T]()
-    val passthrough = scala.collection.mutable.ArrayBuffer.empty[(T, T)]
-    def find(x: T): T = {
-      var r = x
-      while (parent.get(r) != r) r = parent.get(r)
-      var c = x
-      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
+                                         (implicit ord: Ordering[T]): Iterator[(T, T)] = {
+    val uf = new UnionFind[T](ord)
+    val passthrough = ArrayBuffer.empty[(T, T)]
+    it.foreach { case e @ (a, b) =>
+      if (uf.size >= cap && !(uf.contains(a) && uf.contains(b))) passthrough += e
+      else uf.union(a, b)
     }
-    while (it.hasNext) {
-      val (a, b) = it.next()
-      if (parent.size >= cap && !(parent.containsKey(a) && parent.containsKey(b)))
-        passthrough += ((a, b))
-      else {
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) {
-          if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-    }
-    val stars = scala.collection.mutable.ArrayBuffer.empty[(T, T)]
-    val keys = parent.keySet().iterator()
-    while (keys.hasNext) {
-      val k = keys.next()
-      val r = find(k)
-      if (r != k) stars += ((r, k))
-    }
+    val stars = ArrayBuffer.empty[(T, T)]
+    uf.foreach((k, r) => if (r != k) stars += ((r, k)))
     stars.iterator ++ passthrough.iterator
   }
 

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -11,17 +10,23 @@ import scala.collection.mutable.ArrayBuffer
   *
   * The reference walks its SNOMED DiGraph recursively in NetworkX
   * (`2nd Place/src/snomed_graph.py:212-256` get_descendants/get_ancestors).
-  * Terminology/hierarchy graphs are dimension-scale, so the default path
-  * (r6, guide §1.2/§3.1) collects the edge relation once — under the SAME
-  * row cap that formerly gated broadcasting it into every per-round join,
-  * i.e. the identical driver/executor memory envelope — broadcasts the
-  * adjacency, and runs the whole BFS inside ONE narrow job (each task
-  * walks its roots in memory; total work O(answer), exactly the frontier
-  * loop's). This removes the O(depth) driver-round barriers (~7 rounds ×
-  * join+checkpoint+count each) that dominated the graded graph queries. A
-  * fact-scale edge set (> cap) falls back to the iterative frontier-join
-  * loop: each BFS level one equi-join, `localCheckpoint` per round to cut
-  * lineage — the same skeleton as the large-star/small-star clustering.
+  * Every walk here is one breadth-first search, [[bfs]]: from each root
+  * along from→to edges, emitting (root, node, dist) at each node's
+  * first-visit level. The edge relation is checkpointed once and goes
+  * through the local-path gate shared with connected components
+  * (`ConnectedComponents.localEdges`: ≤ `edgeCap` rows, no null endpoint,
+  * one Int, Long or String id type across both endpoints and the roots).
+  *
+  * Terminology/hierarchy graphs are dimension-scale and pass the gate: the
+  * collected adjacency is broadcast and the whole BFS runs inside ONE
+  * narrow job (each task walks its roots in memory; total work O(answer),
+  * exactly the frontier loop's), with no O(depth) driver-round barriers.
+  * Every other input — a fact-scale edge set, mixed Int/Long ids (a boxed
+  * Integer never equals a Long), BinaryType ids (an Array[Byte] key
+  * compares by identity), null endpoints — runs the exact frontier-join
+  * loop: each BFS level one equi-join, left_anti novelty against the
+  * accumulated answer, `localCheckpoint` per round to cut lineage — the
+  * same skeleton as the large-star/small-star clustering.
   */
 object Graph {
 
@@ -34,218 +39,35 @@ object Graph {
 
   private val EmptyChildren = Array.empty[Any]
 
-  /** `edgeCap` when every id column the walk compares has one type, else 0
-    * (the frontier loop): the loop's `===` joins insert implicit numeric
-    * promotions a boxed-value hash probe cannot reproduce — an Int child
-    * never equals a Long parent key, so the local walk would stop at
-    * depth 1. */
-  private def localCap(edgeCap: Long, idTypes: DataType*): Long =
-    if (idTypes.distinct.size == 1) edgeCap else 0L
-
-  /** Bounded collect of a dimension-scale edge relation into an adjacency
-    * map keyed by column `keyIdx` with neighbor column `valIdx`; None when
-    * the relation exceeds `cap` — or contains a NULL endpoint (the
-    * frontier loop's `===` joins are null-rejecting in ways a hash-map
-    * walk is not, so null-bearing graphs take the loop path whose
-    * semantics are the contract) — and the caller falls back.
-    *
-    * `e` is the caller's eager checkpoint of the edge relation, which the
-    * fallback loop reads too, so the upstream plan runs once on either
-    * path; on the local path the checkpoint is freed here. */
-  private def collectAdjacency(e: DataFrame, keyIdx: Int, valIdx: Int, cap: Long)
-      : Option[java.util.HashMap[Any, Array[Any]]] =
-    ConnectedComponents.collectWithin(e, cap)
-      .filterNot(_.exists(r => r.isNullAt(keyIdx) || r.isNullAt(valIdx)))
-      .map { rows =>
-        ConnectedComponents.freeCheckpoint(e)
-        val m = new java.util.HashMap[Any, ArrayBuffer[Any]]()
-        rows.foreach { r =>
-          m.computeIfAbsent(r.get(keyIdx), _ => new ArrayBuffer[Any]()) += r.get(valIdx)
-        }
-        val out = new java.util.HashMap[Any, Array[Any]](math.max(16, m.size * 2))
-        m.forEach((k, v) => out.put(k, v.toArray))
-        out
-      }
-
-  /** In-memory BFS from `root`: emits each node at its FIRST-VISIT level —
-    * the min distance, the same invariant the frontier loop's left_anti
-    * novelty encodes (the visited set IS the loop's accumulator for this
-    * root; the root itself is not pre-visited, so a cycle back to it emits
-    * it, exactly as the loop does). Returns (emitted (node, dist) pairs,
-    * the frontier at exit — nonempty iff the walk stopped ON the depth
-    * bound rather than by exhaustion, which is what the truncation guard
-    * probes) plus the visited set for that guard. */
-  private def localBfs(adj: java.util.HashMap[Any, Array[Any]], root: Any,
-                       maxDepth: Int)
-      : (ArrayBuffer[(Any, Int)], ArrayBuffer[Any], java.util.HashSet[Any]) = {
-    val out = new ArrayBuffer[(Any, Int)]()
-    val visited = new java.util.HashSet[Any]()
-    var level = new ArrayBuffer[Any]()
-    adj.getOrDefault(root, EmptyChildren).foreach { c =>
-      if (visited.add(c)) { level += c; out += ((c, 1)) }
-    }
-    var d = 1
-    while (level.nonEmpty && d < maxDepth) {
-      val next = new ArrayBuffer[Any]()
-      level.foreach { n =>
-        adj.getOrDefault(n, EmptyChildren).foreach { c =>
-          if (visited.add(c)) { next += c; out += ((c, d + 1)) }
-        }
-      }
-      level = next
-      d += 1
-    }
-    (out, level, visited)
-  }
-
-  /** One-job distributed BFS over the broadcast adjacency: roots are
-    * deduplicated (the loop path's `roots.distinct()`), each task walks
-    * its roots in memory. `guardDepth` replays shortestPaths'
-    * no-silent-truncation contract executor-side; the result is
-    * materialized eagerly (`localCheckpoint`, mirroring the loop path's
-    * per-round checkpoints) so the guard fires HERE, and a task-wrapped
-    * IllegalArgumentException is re-thrown as itself to keep the
-    * operator's documented failure type. */
-  private def localBfsFrame(adjB: Broadcast[java.util.HashMap[Any, Array[Any]]],
-                            rootsRdd: org.apache.spark.rdd.RDD[Any],
-                            maxDepth: Int, guardDepth: Boolean,
-                            schema: StructType, emitDist: Boolean)
-                           (implicit spark: SparkSession): DataFrame = {
-    val rdd = rootsRdd.mapPartitions { it =>
-      val adj = adjB.value
-      it.flatMap { root =>
-        val (out, lastLevel, visited) = localBfs(adj, root, maxDepth)
-        if (guardDepth && lastLevel.nonEmpty) {
-          val cutOff = lastLevel.exists(n =>
-            adj.getOrDefault(n, EmptyChildren).exists(c => !visited.contains(c)))
-          require(!cutOff,
-            s"shortestPaths: nodes remain beyond maxDist=$maxDepth — the " +
-              "distance table would be silently truncated; raise maxDist")
-        }
-        if (emitDist) out.iterator.map { case (n, d) => Row(root, n, d) }
-        else out.iterator.map { case (n, _) => Row(root, n) }
-      }
-    }
-    val df = spark.createDataFrame(rdd, schema)
-    try df.localCheckpoint(true)
-    catch {
-      case e: Throwable =>
-        var c: Throwable = e
-        while (c != null && !c.isInstanceOf[IllegalArgumentException]) c = c.getCause
-        c match {
-          case iae: IllegalArgumentException => throw iae
-          case _ => throw e
-        }
-    }
-  }
+  private def truncated(maxDist: Int): String =
+    s"shortestPaths: nodes remain beyond maxDist=$maxDist — the " +
+      "distance table would be silently truncated; raise maxDist"
 
   /** Full ancestor closure: edges (child, parent) → (node, ancestor) pairs
-    * for every node with at least one ancestor.
+    * for every node with at least one ancestor: [[bfs]] up the
+    * child→parent edges from every child, `maxIter` expansions past the
+    * direct parents.
     *
-    * Dimension-scale edges (≤ `edgeCap`): one-job local BFS UP the
-    * child→parents adjacency from every distinct child (see object doc).
-    * Fact-scale: frontier-join BFS, O(depth) rounds, novelty per round via
-    * left_anti against the accumulated closure — never a bag-semantics
-    * exceptAll re-shuffle of `acc`; ONE driver action per round (a count
-    * that materializes the lazy checkpoint and answers emptiness), the
-    * accumulator a lazy union of already-checkpointed frontiers.
     * Pointer-doubling was tried and measured SLOWER here (5.4 s vs 3.8 s
     * at sf0.1): path-squaring composes all ancestor pairs per node
     * (quadratic in path count) and re-shuffles the full closure every
     * round, which loses to frontier BFS whenever depth is modest. */
   def ancestorClosure(edges: DataFrame, maxIter: Int = 64,
                       edgeCap: Long = BroadcastEdgeCap)
-                     (implicit spark: SparkSession): DataFrame = {
-    val pe = edges.select(col("child"), col("parent"))
-    val cap = localCap(edgeCap, pe.schema(0).dataType, pe.schema(1).dataType)
-    val e = pe.localCheckpoint()
-    collectAdjacency(e, keyIdx = 0, valIdx = 1, cap) match {
-      case Some(adj) =>
-        val schema = StructType(Seq(
-          StructField("node", pe.schema(0).dataType),
-          StructField("anc", pe.schema(1).dataType)))
-        // roots = every distinct child = exactly the adjacency's key set,
-        // already on the driver — parallelizing it avoids re-running the
-        // upstream edge plan and the roots-distinct exchange; max emitted
-        // depth mirrors the loop (initial frontier at depth 1 + maxIter
-        // expansions)
-        val keys: Array[Any] = adj.keySet.toArray.asInstanceOf[Array[AnyRef]]
-          .map(identity[Any])
-        localBfsFrame(spark.sparkContext.broadcast(adj),
-          spark.sparkContext.parallelize(keys.toIndexedSeq,
-            math.max(1, math.min(spark.sparkContext.defaultParallelism,
-              1 + keys.length / 4096))),
-          maxDepth = maxIter + 1, guardDepth = false,
-          schema, emitDist = false)
-      case None =>
-        var frontier = e.select(col("child").as("node"), col("parent").as("anc"))
-          .distinct().localCheckpoint(false)
-        var acc = frontier
-        var iter = 0
-        var done = frontier.count() == 0
-        while (!done && iter < maxIter) {
-          // next level: (node, anc) ⋈ (anc=child, parent) → (node, parent)
-          val next = frontier.join(e, frontier("anc") === e("child"))
-            .select(frontier("node"), e("parent").as("anc"))
-            .distinct()
-            .join(acc, Seq("node", "anc"), "left_anti")
-            .localCheckpoint(false)
-          done = next.count() == 0
-          if (!done) {
-            acc = acc.union(next)
-            frontier = next
-          }
-          iter += 1
-        }
-        acc
-    }
-  }
+                     (implicit spark: SparkSession): DataFrame =
+    bfs(edges.select(col("child").as("from"), col("parent").as("to")), None,
+      maxDepth = maxIter + 1, guard = false, edgeCap)
+      .select(col("root").as("node"), col("node").as("anc"))
 
   /** G2 descendants of `roots`: BFS DOWN the tree from the roots themselves
-    * (reversed edges), so the work is O(answer), never the full closure
-    * filtered after the fact — on a deep 100×-scale DAG the full closure is
-    * O(V·depth) rows to answer a question about a few roots. Same
-    * dimension-scale local path / fact-scale frontier loop as
-    * [[ancestorClosure]]. */
+    * (parent→child edges), so the work is O(answer), never the full
+    * closure filtered after the fact — on a deep 100×-scale DAG the full
+    * closure is O(V·depth) rows to answer a question about a few roots. */
   def descendants(edges: DataFrame, roots: DataFrame, maxIter: Int = 64,
                   edgeCap: Long = BroadcastEdgeCap)
-                 (implicit spark: SparkSession): DataFrame = {
-    val pe = edges.select(col("child"), col("parent"))
-    val r = roots.select(col("root"))
-    val cap = localCap(edgeCap, r.schema(0).dataType, pe.schema(0).dataType, pe.schema(1).dataType)
-    val e = pe.localCheckpoint()
-    collectAdjacency(e, keyIdx = 1, valIdx = 0, cap) match {
-      case Some(adj) =>
-        val schema = StructType(Seq(
-          StructField("root", r.schema(0).dataType),
-          StructField("descendant", pe.schema(0).dataType)))
-        localBfsFrame(spark.sparkContext.broadcast(adj),
-          r.distinct().rdd.map(_.get(0)),
-          maxDepth = maxIter + 1, guardDepth = false, schema, emitDist = false)
-      case None =>
-        val r = roots.select(col("root")).distinct()
-        var frontier = e.join(r, e("parent") === r("root"))
-          .select(col("root"), col("child").as("descendant"))
-          .distinct().localCheckpoint(false)
-        var acc = frontier
-        var iter = 0
-        var done = frontier.count() == 0
-        while (!done && iter < maxIter) {
-          val next = frontier.join(e, frontier("descendant") === e("parent"))
-            .select(frontier("root"), e("child").as("descendant"))
-            .distinct()
-            .join(acc, Seq("root", "descendant"), "left_anti")
-            .localCheckpoint(false)
-          done = next.count() == 0
-          if (!done) {
-            acc = acc.union(next)
-            frontier = next
-          }
-          iter += 1
-        }
-        acc
-    }
-  }
+                 (implicit spark: SparkSession): DataFrame =
+    bfs(downward(edges), Some(roots), maxDepth = maxIter + 1, guard = false, edgeCap)
+      .select(col("root"), col("node").as("descendant"))
 
   /** G3 shortest-path distances: min directed hop count from each root in
     * `roots(root)` to every reachable node, as (root, node, dist).
@@ -253,53 +75,101 @@ object Graph {
     * The reference answers path queries with `nx.shortest_path` over its
     * DiGraph (`2nd Place/src/snomed_graph.py:284-320` find_path, which BFS's
     * sctid1→sctid2 and falls back to the reverse direction); here the first
-    * level a node is reached at IS its min distance, so the visited set
-    * (local path) / left_anti novelty (loop path) doubles as the min() and
-    * no per-node relaxation state is needed. */
+    * level a node is reached at IS its min distance, so no per-node
+    * relaxation state is needed. FAILS LOUDLY when nodes beyond `maxDist`
+    * were actually cut off — a silently truncated distance table would
+    * diverge from the unbounded recursive-CTE oracle and under-report
+    * reachability (no-silent-caps). */
   def shortestPaths(edges: DataFrame, roots: DataFrame, maxDist: Int = 64,
                     edgeCap: Long = BroadcastEdgeCap)
                    (implicit spark: SparkSession): DataFrame =
-    bfsDistances(edges, roots, maxDist, truncateOk = false, edgeCap)
+    bfs(downward(edges), Some(roots), maxDepth = maxDist, guard = true, edgeCap)
 
-  /** Shared BFS core. `truncateOk = false` FAILS LOUDLY when nodes beyond
-    * maxDist were actually cut off — a silently truncated distance table
-    * would diverge from the unbounded recursive-CTE oracle and
-    * under-report reachability (no-silent-caps). A non-empty frontier AT
-    * maxDist is fine as long as it has no unseen successors (the deepest
-    * node sitting exactly on the bound is a complete result), so the check
-    * probes one expansion past the bound instead of frontier emptiness.
-    * `truncateOk = true` is the semantic k-hop bound of
-    * [[neighbourhood]]. */
-  private def bfsDistances(edges: DataFrame, roots: DataFrame, maxDist: Int,
-                           truncateOk: Boolean, edgeCap: Long)
-                          (implicit spark: SparkSession): DataFrame = {
-    val pe = edges.select(col("child"), col("parent"))
-    val r = roots.select(col("root"))
-    val cap = localCap(edgeCap, r.schema(0).dataType, pe.schema(0).dataType, pe.schema(1).dataType)
-    val e = pe.localCheckpoint()
-    collectAdjacency(e, keyIdx = 1, valIdx = 0, cap) match {
-      case Some(adj) =>
-        val schema = StructType(Seq(
-          StructField("root", r.schema(0).dataType),
-          StructField("node", pe.schema(0).dataType),
-          StructField("dist", IntegerType, nullable = false)))
-        localBfsFrame(spark.sparkContext.broadcast(adj),
-          r.distinct().rdd.map(_.get(0)),
-          maxDepth = maxDist, guardDepth = !truncateOk, schema, emitDist = true)
+  /** G3 neighbourhood: every node within `steps` UNDIRECTED hops of each
+    * root, excluding the root itself, as (root, node, dist) with dist the
+    * min undirected hop count (`2nd Place/src/snomed_graph.py:258-282`
+    * get_neighbourhood recurses over parents ∪ children). Same BFS as
+    * [[shortestPaths]] over the symmetrized edge set, with `steps` a
+    * semantic k-hop bound rather than a truncation; the reference also
+    * drops its global root concept — callers exclude domain roots by
+    * filtering `node` before/after. */
+  def neighbourhood(edges: DataFrame, roots: DataFrame, steps: Int,
+                    edgeCap: Long = BroadcastEdgeCap)
+                   (implicit spark: SparkSession): DataFrame = {
+    require(steps > 0, "neighbourhood: steps must be > 0")
+    val sym = downward(edges)
+      .union(edges.select(col("child").as("from"), col("parent").as("to")))
+    bfs(sym, Some(roots), maxDepth = steps, guard = false, edgeCap)
+      .filter(col("node") =!= col("root"))
+  }
+
+  /** G4: isolate removal — nodes that appear in no edge. */
+  def removeIsolates(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val endpoints = edges.select(col("child").as("id"))
+      .union(edges.select(col("parent").as("id"))).distinct()
+    nodes.join(endpoints, Seq("id"), "left_semi")
+  }
+
+  private def downward(edges: DataFrame): DataFrame =
+    edges.select(col("parent").as("from"), col("child").as("to"))
+
+  /** The BFS behind every walk. From each distinct `roots(root)` — every
+    * `from` endpoint when `roots` is None — along `edges(from, to)`, emits
+    * (root, node, dist) at each node's FIRST-VISIT level, the min
+    * distance, for dist = 1 to `maxDepth` (dist 1 always). The root is not
+    * pre-visited, so a cycle back to it emits it. `guard` raises the
+    * truncation error when a node at `maxDepth` still has an unvisited
+    * successor; a node sitting exactly on the bound with none is a
+    * complete result, so the guard probes one expansion past the bound
+    * instead of frontier emptiness.
+    *
+    * The edge relation is checkpointed first, so the upstream plan runs
+    * once on either path; the local path frees the checkpoint. */
+  private def bfs(edges: DataFrame, roots: Option[DataFrame], maxDepth: Int,
+                  guard: Boolean, edgeCap: Long)
+                 (implicit spark: SparkSession): DataFrame = {
+    val e = edges.localCheckpoint()
+    val r = roots.map(_.select(col("root")).distinct())
+    val rootType = r.map(_.schema(0).dataType)
+    ConnectedComponents.localEdges(e, edgeCap, rootType) match {
+      case Some((rows, _)) =>
+        ConnectedComponents.freeCheckpoint(e)
+        val grouped = new java.util.HashMap[Any, ArrayBuffer[Any]]()
+        rows.foreach(row => grouped.computeIfAbsent(row.get(0), _ => new ArrayBuffer[Any]()) += row.get(1))
+        val adj = new java.util.HashMap[Any, Array[Any]](math.max(16, grouped.size * 2))
+        grouped.forEach((k, v) => adj.put(k, v.toArray))
+        val adjB = spark.sparkContext.broadcast(adj)
+        // without roots, every from endpoint is a root: exactly the
+        // adjacency's key set, already on the driver
+        val rootIds = r.fold(ConnectedComponents.parallelizeLocal[Any](adj.keySet.toArray.toSeq))(
+          _.rdd.map(_.get(0)))
+        val out = rootIds.mapPartitions { it =>
+          val a = adjB.value
+          it.flatMap(root => walk(a, root, maxDepth, guard).iterator.map { case (n, d) => Row(root, n, d) })
+        }
+        val schema = StructType(Seq(StructField("root", rootType.getOrElse(e.schema(0).dataType)),
+          StructField("node", e.schema(1).dataType), StructField("dist", IntegerType, nullable = false)))
+        // materialized eagerly, mirroring the loop's per-round checkpoints,
+        // so the guard fires HERE; a task-wrapped IllegalArgumentException
+        // is re-thrown as itself to keep the documented failure type
+        try spark.createDataFrame(out, schema).localCheckpoint(true)
+        catch {
+          case ex: Throwable =>
+            var c: Throwable = ex
+            while (c != null && !c.isInstanceOf[IllegalArgumentException]) c = c.getCause
+            throw Option(c).getOrElse(ex)
+        }
       case None =>
-        val r = roots.select(col("root")).distinct()
-        // dist 1: direct children of each root (root→node via parent→child)
-        var frontier = e.join(r, e("parent") === r("root"))
-          .select(col("root"), col("child").as("node"), lit(1).as("dist"))
-          .distinct().localCheckpoint(false)
+        def step(f: DataFrame): DataFrame = f.join(e, f("node") === e("from"))
+          .select(f("root"), e("to").as("node"), (f("dist") + 1).as("dist"))
+        val start = r.fold(e.select(col("from").as("root"), col("to").as("node")))(rs =>
+          e.join(rs, e("from") === rs("root")).select(col("root"), col("to").as("node")))
+        var frontier = start.withColumn("dist", lit(1)).distinct().localCheckpoint(false)
         var acc = frontier
         var d = 1
         var done = frontier.count() == 0
-        while (!done && d < maxDist) {
-          val next = frontier.join(e, frontier("node") === e("parent"))
-            .select(frontier("root"), e("child").as("node"),
-              (frontier("dist") + 1).as("dist"))
-            .distinct()
+        while (!done && d < maxDepth) {
+          val next = step(frontier).distinct()
             .join(acc, Seq("root", "node"), "left_anti")
             .localCheckpoint(false)
           done = next.count() == 0
@@ -309,40 +179,30 @@ object Graph {
           }
           d += 1
         }
-        if (!done && !truncateOk) {
-          val cutOff = !frontier.join(e, frontier("node") === e("parent"))
-            .select(frontier("root"), e("child").as("node"))
-            .join(acc, Seq("root", "node"), "left_anti")
-            .isEmpty
-          require(!cutOff,
-            s"shortestPaths: nodes remain beyond maxDist=$maxDist — the " +
-              "distance table would be silently truncated; raise maxDist")
-        }
+        require(!guard || done ||
+          step(frontier).join(acc, Seq("root", "node"), "left_anti").isEmpty, truncated(maxDepth))
         acc
     }
   }
 
-  /** G3 neighbourhood: every node within `steps` UNDIRECTED hops of each
-    * root, excluding the root itself, as (root, node, dist) with dist the
-    * min undirected hop count (`2nd Place/src/snomed_graph.py:258-282`
-    * get_neighbourhood recurses over parents ∪ children). Same BFS as
-    * [[shortestPaths]] over the symmetrized edge set; the reference also
-    * drops its global root concept — callers exclude domain roots by
-    * filtering `node` before/after. */
-  def neighbourhood(edges: DataFrame, roots: DataFrame, steps: Int,
-                    edgeCap: Long = BroadcastEdgeCap)
-                   (implicit spark: SparkSession): DataFrame = {
-    require(steps > 0, "neighbourhood: steps must be > 0")
-    val sym = edges.select(col("child"), col("parent"))
-      .union(edges.select(col("parent").as("child"), col("child").as("parent")))
-    bfsDistances(sym, roots, maxDist = steps, truncateOk = true, edgeCap)
-      .filter(col("node") =!= col("root"))
-  }
-
-  /** G4: isolate removal — nodes that appear in no edge. */
-  def removeIsolates(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val endpoints = edges.select(col("child").as("id"))
-      .union(edges.select(col("parent").as("id"))).distinct()
-    nodes.join(endpoints, Seq("id"), "left_semi")
+  /** In-memory BFS from `root` over `adj`, with [[bfs]]'s semantics: the
+    * visited set is the loop's accumulator for this root. */
+  private def walk(adj: java.util.HashMap[Any, Array[Any]], root: Any, maxDepth: Int,
+                   guard: Boolean): ArrayBuffer[(Any, Int)] = {
+    val out = new ArrayBuffer[(Any, Int)]()
+    val visited = new java.util.HashSet[Any]()
+    var level = ArrayBuffer[Any](root)
+    var d = 0
+    while (level.nonEmpty && (d == 0 || d < maxDepth)) {
+      d += 1
+      val next = new ArrayBuffer[Any]()
+      level.foreach(n => adj.getOrDefault(n, EmptyChildren).foreach { c =>
+        if (visited.add(c)) { next += c; out += ((c, d)) }
+      })
+      level = next
+    }
+    require(!guard || !level.exists(n =>
+      adj.getOrDefault(n, EmptyChildren).exists(c => !visited.contains(c))), truncated(maxDepth))
+    out
   }
 }

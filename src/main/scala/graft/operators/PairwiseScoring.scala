@@ -108,14 +108,23 @@ object PairwiseScoring {
     * UTF-8 round trip (a lone surrogate becomes '?'). The fused link pass
     * in `LinkagePipeline.run` scores with it. */
   def scorePure(na: String, nb: String, w: Weights = Weights()): Double = {
+    val f = featuresPure(na, nb)
+    val linear = w.wJw * f.jw + w.wLev * f.levRatio + w.wCos * f.cos
+    1.0 / (1.0 + StrictMath.exp(-w.gain * (linear - w.bias)))
+  }
+
+  /** [[scoreInline]]'s `jw`, `lev_ratio` and `cos` columns. */
+  final case class Features(jw: Double, levRatio: Double, cos: Double)
+
+  /** [[scoreInline]]'s three feature columns as a plain function, bit for
+    * bit (see [[scorePure]], which fuses them). */
+  def featuresPure(na: String, nb: String): Features = {
     val ua = UTF8String.fromString(na)
     val ub = UTF8String.fromString(nb)
     val (a, b) = (ua.toString, ub.toString)
-    val jw = TextFns.jaroWinkler(a, b)
-    val levr = 1.0 - ua.levenshteinDistance(ub).toDouble /
-      math.max(math.max(ua.numChars, ub.numChars), 1)
-    val cos = TextFns.cosine(cachedEmbedding(a), cachedEmbedding(b))
-    val linear = w.wJw * jw + w.wLev * levr + w.wCos * cos
-    1.0 / (1.0 + StrictMath.exp(-w.gain * (linear - w.bias)))
+    Features(
+      TextFns.jaroWinkler(a, b),
+      1.0 - ua.levenshteinDistance(ub).toDouble / math.max(math.max(ua.numChars, ub.numChars), 1),
+      TextFns.cosine(cachedEmbedding(a), cachedEmbedding(b)))
   }
 }

@@ -63,25 +63,12 @@ object LinkagePipeline {
                     nodeKeys: DataFrame = null, // (id, key) node-level keys (keyFreq's input)
                     persisted: Seq[DataFrame] = Seq.empty) {
     /** Release every DataFrame `run` cached — call once the outputs are
-      * materialized (or when evicting a memoized Result). Handles both
-      * persisted frames (unpersist) and lazily localCheckpoint'd frames,
-      * whose blocks live on the underlying RDD rather than in the SQL
-      * cache manager — those are freed by unpersisting the LogicalRDD
-      * leaves directly (otherwise they linger until GC, which matters for
-      * the repeated-sample bench protocol at ladder scale). */
-    def release(): Unit = persisted.foreach { df =>
-      df.unpersist()
-      // only the frame's OWN root checkpoint is freed — walking the whole
-      // lineage would also unpersist LogicalRDD leaves the Result does not
-      // own (e.g. a caller-provided checkpointed mentions frame reachable
-      // through scored's plan); every checkpoint run() creates is tracked
-      // individually in `persisted`, so root-only covers them all
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-        case _ => ()
-      }
-    }
+      * materialized (or when evicting a memoized Result); otherwise lazily
+      * checkpointed blocks linger until GC, which matters for the
+      * repeated-sample bench protocol at ladder scale. Every checkpoint
+      * `run` creates is tracked individually in `persisted`, so freeing
+      * each frame's own root covers them all. */
+    def release(): Unit = persisted.foreach(ConnectedComponents.freeCheckpoint)
   }
 
   /** Extract mention nodes for labeled spans via typed cogroup — the doc text
@@ -275,9 +262,8 @@ object LinkagePipeline {
     // one concept node and its surfaces; ConnectedComponents labels it with
     // the concept node, its minimum ("c:" < "s:")
     val clustered = ConnectedComponents(edges)
-    val termConcept = sc.parallelize(ix.ids.indices.map(i => (ix.ids(i), ix.conceptNodes(i))),
-      math.max(1, math.min(sc.defaultParallelism, 1 + ix.ids.length / 4096)))
-      .toDF("id", "component")
+    val termConcept = ConnectedComponents.parallelizeLocal(
+      ix.ids.indices.map(i => (ix.ids(i), ix.conceptNodes(i)))).toDF("id", "component")
     val assignments = (ConnectedComponents.collectWithin(clustered, componentCap) match {
       case Some(rows) =>
         val comp = new java.util.HashMap[String, String](math.max(16, rows.length * 2))

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.fixtures.Synth
 import graft.functions.TextFns
+import graft.operators.PairwiseScoring
 
 /** Offline weight calibration for the logistic pairwise scorer: prints the
   * feature values of the hardest positive and negative pairs on the
@@ -12,10 +13,8 @@ object Calibrate {
   def main(args: Array[String]): Unit = {
     val nConcepts = 400
     def feats(a: String, b: String): (Double, Double, Double) = {
-      val jw = TextFns.jaroWinkler(a, b)
-      val levr = 1.0 - TextFns.levenshtein(a, b).toDouble / math.max(1, math.max(a.length, b.length))
-      val cos = TextFns.cosine(TextFns.hashedEmbedding(a), TextFns.hashedEmbedding(b))
-      (jw, levr, cos)
+      val f = PairwiseScoring.featuresPure(a, b)
+      (f.jw, f.levRatio, f.cos)
     }
     // positives: every surface variant vs its dictionary forms
     var posRows = Vector.empty[(Double, Double, Double, String, String)]

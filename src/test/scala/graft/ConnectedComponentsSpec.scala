@@ -116,6 +116,10 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     val l2 = ConnectedComponents(lEdges, localCap = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(l1 == l2 && l1(500L) == 500L)
+    // null endpoints: the gate routes them to the loop
+    val withNull = Seq(("a", "b"), ("b", null), (null, "c"), ("c", "d")).toDF("a", "b")
+    assert(asMap(ConnectedComponents(withNull)) ==
+      asMap(ConnectedComponents(withNull, localCap = 0)))
   }
 
   test("mixed Int/Long endpoints take the loop; an unbounded cap does not overflow") {

@@ -51,6 +51,47 @@ class GraphChunkingSpec extends AnyFunSuite with SparkTestBase {
         .collect()
     }
     assert(exLoop.getMessage.contains("maxDist"))
+    // null endpoints: the gate routes them to the loop on every BFS
+    val withNull = Seq((Some(2L), Some(1L)), (Some(3L), Some(2L)), (Some(4L), None),
+      (None, Some(3L))).toDF("child", "parent")
+    val nullRoots = Seq(1L, 4L).toDF("root")
+    assert(pairs(Graph.ancestorClosure(withNull)) ==
+      pairs(Graph.ancestorClosure(withNull, edgeCap = 0)))
+    assert(pairs(Graph.descendants(withNull, nullRoots)) ==
+      pairs(Graph.descendants(withNull, nullRoots, edgeCap = 0)))
+    assert(pairs(Graph.shortestPaths(withNull, nullRoots)) ==
+      pairs(Graph.shortestPaths(withNull, nullRoots, edgeCap = 0)))
+  }
+
+  test("depth bounds: local walk ≡ frontier loop on an 11-edge chain") {
+    val chain = (2L to 12L).map(i => (i, i - 1)).toDF("child", "parent")
+    val roots = Seq(1L).toDF("root")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.toSeq.toList).toSet
+    for ((maxIter, nAnc, nDesc) <- Seq((1, 21, 2), (2, 30, 3), (3, 38, 4))) {
+      val anc = pairs(Graph.ancestorClosure(chain, maxIter))
+      assert(anc.size == nAnc, s"maxIter $maxIter")
+      assert(anc == pairs(Graph.ancestorClosure(chain, maxIter, edgeCap = 0)))
+      val desc = pairs(Graph.descendants(chain, roots, maxIter))
+      assert(desc.size == nDesc, s"maxIter $maxIter")
+      assert(desc == pairs(Graph.descendants(chain, roots, maxIter, edgeCap = 0)))
+    }
+  }
+
+  test("BinaryType ids walk to full depth on every BFS") {
+    // chain 4 -> 3 -> 2 -> 1 on one-byte ids: an Array[Byte] hash key
+    // compares by identity, so a local walk would find no edge at all
+    def id(i: Int) = Array(i.toByte)
+    val edges = Seq((id(2), id(1)), (id(3), id(2)), (id(4), id(3))).toDF("child", "parent")
+    val roots = Seq(id(1)).toDF("root")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case x => x }.toList).toSet
+    val anc = rows(Graph.ancestorClosure(edges))
+    assert(anc.size == 6 && anc == rows(Graph.ancestorClosure(edges, edgeCap = 0)))
+    val desc = rows(Graph.descendants(edges, roots))
+    assert(desc.size == 3 && desc == rows(Graph.descendants(edges, roots, edgeCap = 0)))
+    val dist = rows(Graph.shortestPaths(edges, roots))
+    assert(dist.size == 3 && dist == rows(Graph.shortestPaths(edges, roots, edgeCap = 0)))
   }
 
   test("Int-child / Long-parent graphs walk to full depth on every BFS") {
