@@ -56,10 +56,11 @@ object ConnectedComponents {
   private[operators] val ContractCap = 1 << 22
 
   /** Max edge rows for which the whole component problem is solved by ONE
-    * driver-side union-find instead of the star loop: the contraction
-    * already runs a union-find per PARTITION — when the entire (already-
-    * checkpointed) edge set fits the same few-hundred-MB envelope, running
-    * it once over all edges removes every star round. The probe is a
+    * driver-side union-find instead of the star loop (r6, guide §1.2): the
+    * r5 contraction already ran an in-memory union-find per PARTITION —
+    * when the entire (already-checkpointed) edge set fits the same few-
+    * hundred-MB envelope, running it once over all edges removes every
+    * star round, signature action and assignment shuffle. The probe is a
     * bounded `limit(cap+1)` collect from the checkpoint cache, so driver
     * intake can never exceed the cap; beyond it the loop runs unchanged
     * (fact-scale edge sets — the 100 TB mention graph — keep the
@@ -122,7 +123,7 @@ object ConnectedComponents {
 
   /** A driver-side collection as an RDD of ~4096-element slices. */
   private[graft] def parallelizeLocal[T: ClassTag](xs: Seq[T])
-                                                      (implicit spark: SparkSession): RDD[T] =
+                                                  (implicit spark: SparkSession): RDD[T] =
     spark.sparkContext.parallelize(xs,
       math.max(1, math.min(spark.sparkContext.defaultParallelism, 1 + xs.size / 4096)))
 
