@@ -349,28 +349,6 @@ object TextFns {
     j + l * 0.1 * (1.0 - j)
   }
 
-  /** Levenshtein distance (reference fuses it via the built-in Spark
-    * `levenshtein`; this pure form serves the driver-side oracle). */
-  def levenshtein(s1: String, s2: String): Int = {
-    if (s1 == s2) return 0
-    val n = s2.length
-    var prev = Array.tabulate(n + 1)(identity)
-    var cur = new Array[Int](n + 1)
-    var i = 1
-    while (i <= s1.length) {
-      cur(0) = i
-      var j = 1
-      while (j <= n) {
-        val cost = if (s1.charAt(i - 1) == s2.charAt(j - 1)) 0 else 1
-        cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    prev(n)
-  }
-
   /** Rolling polynomial hash fingerprint of a document (mod-free 64-bit). */
   def fingerprint64(s: String): Long = {
     var h = 1125899906842597L

@@ -162,6 +162,11 @@ object Graph {
       case None =>
         def step(f: DataFrame): DataFrame = f.join(e, f("node") === e("from"))
           .select(f("root"), e("to").as("node"), (f("dist") + 1).as("dist"))
+        // null-safe, or a null endpoint on a cycle is re-emitted every round
+        def unvisited(f: DataFrame, visited: DataFrame): DataFrame = {
+          val v = visited.select(col("root").as("v_root"), col("node").as("v_node"))
+          f.join(v, col("root") <=> col("v_root") && col("node") <=> col("v_node"), "left_anti")
+        }
         val start = r.fold(e.select(col("from").as("root"), col("to").as("node")))(rs =>
           e.join(rs, e("from") === rs("root")).select(col("root"), col("to").as("node")))
         var frontier = start.withColumn("dist", lit(1)).distinct().localCheckpoint(false)
@@ -169,9 +174,7 @@ object Graph {
         var d = 1
         var done = frontier.count() == 0
         while (!done && d < maxDepth) {
-          val next = step(frontier).distinct()
-            .join(acc, Seq("root", "node"), "left_anti")
-            .localCheckpoint(false)
+          val next = unvisited(step(frontier).distinct(), acc).localCheckpoint(false)
           done = next.count() == 0
           if (!done) {
             acc = acc.union(next)
@@ -180,7 +183,7 @@ object Graph {
           d += 1
         }
         require(!guard || done ||
-          step(frontier).join(acc, Seq("root", "node"), "left_anti").isEmpty, truncated(maxDepth))
+          unvisited(step(frontier), acc).isEmpty, truncated(maxDepth))
         acc
     }
   }

@@ -95,10 +95,6 @@ object PairwiseScoring {
       .select(col("a"), col("b"), col("jw"), col("lev_ratio"), col("cos"), col("score"))
   }
 
-  /** Match edges: fused probability ≥ 0.5 (⟺ linear ≥ bias). */
-  def matchEdges(scored: DataFrame): DataFrame =
-    scored.filter(col("score") >= 0.5).select(col("a"), col("b"))
-
   /** [[scoreInline]]'s `score` column as a plain function, bit for bit:
     * `length` and `levenshtein` count code points
     * (`UTF8String.numChars`, `UTF8String.levenshteinDistance` — UTF-16

@@ -3,7 +3,7 @@ package graft.queries
 import graft.fixtures.Synth
 import graft.metrics.Metrics
 import graft.model._
-import graft.operators.{Blocking, DictionaryMatch, OverlapResolve}
+import graft.operators.{Blocking, ConnectedComponents, DictionaryMatch, OverlapResolve}
 import graft.plans.LinkagePipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1645,7 +1645,8 @@ object LinkageQueries {
     val n = corpusSize(dir)
     val g = sharedGold(s, dir)
     val result = sharedRun(s, dir)
-    val mKeys = result.blockKeys.filter(col("id").startsWith("m:"))
+    // read by the pair-bag bound and the pair universe: evaluated once
+    val mKeys = result.blockKeys.filter(col("id").startsWith("m:")).localCheckpoint(false)
     // r6 (guide §1.2): the sampling decision needs only to know the
     // universe is UNDER the cap — a cheap per-key frequency sum bounds the
     // pre-dedup pair bag (Σ freq·(freq−1)/2 over capped keys ≥ the
@@ -1719,6 +1720,7 @@ object LinkageQueries {
         count(lit(1)).as("n_pairs"))
       .head()
     universeAllOpt.foreach(_.unpersist())
+    ConnectedComponents.freeCheckpoint(mKeys)
     val tp = judged.getLong(0).toDouble
     val fp = judged.getLong(1).toDouble
     val fn = judged.getLong(2).toDouble

@@ -63,6 +63,17 @@ class GraphChunkingSpec extends AnyFunSuite with SparkTestBase {
       pairs(Graph.shortestPaths(withNull, nullRoots, edgeCap = 0)))
   }
 
+  test("a null endpoint that reaches a cycle is emitted once per node") {
+    // (child, parent): null→1, 1→2, 2→1
+    val edges = Seq((Option.empty[Long], 1L), (Some(1L), 2L), (Some(2L), 1L)).toDF("child", "parent")
+    val want = List[(Any, Any)]((null, 1L), (null, 2L), (1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L))
+      .sortBy(_.toString)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1))).toList.sortBy(_.toString)
+    assert(rows(Graph.ancestorClosure(edges, maxIter = 10)) == want, "default edgeCap")
+    assert(rows(Graph.ancestorClosure(edges, maxIter = 10, edgeCap = 0)) == want, "edgeCap = 0")
+  }
+
   test("depth bounds: local walk ≡ frontier loop on an 11-edge chain") {
     val chain = (2L to 12L).map(i => (i, i - 1)).toDF("child", "parent")
     val roots = Seq(1L).toDF("root")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.Synth
 import graft.functions.LongHashSet
 import graft.model._
-import graft.operators.PairwiseScoring
+import graft.operators.{ConnectedComponents, PairwiseScoring}
 import graft.plans.LinkagePipeline
 import graft.plans.LinkagePipeline.TermIndex
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -115,6 +115,62 @@ class LinkBroadcastSpec extends AnyFunSuite with SparkTestBase {
     assert(!ids.contains("t:ambiguous term") && ids.contains("t:" + base))
     assert(got.contains(("s:" + astral + " fractures", "c:2")))
     assert(got.contains(("m:e1:3:" + (3 + norms(1).length), "c:1")))
+  }
+
+  test("the closed-form components equal ConnectedComponents over the same argmax edges") {
+    val base = "chronic obstructive pulmonary disease"
+    val astral = "𝔸𝔹"
+    val many = Seq(base, base + "s", base + " x", "chronic obstructive pulmonary diseases")
+    val norms = many ++ Seq(astral + " fracture", astral + " fractures", "😀 pain",
+      "zzqx vvwy") // shares no key with any term: no edge
+    val mentions = spark.createDataset(norms.zipWithIndex.flatMap { case (n, i) =>
+      Seq(Mention(s"d$i", 0, n.length, n, n, "sec"), Mention(s"e$i", 2, 2 + n.length, n, n, "sec"))
+    })
+    val entries = Seq(DictEntry("any", base, 1L), DictEntry("any", astral + " fracture", 2L),
+      DictEntry("any", "😀 pains", 4L), DictEntry("any", "femur", 5L))
+    val dict = spark.createDataset(entries)
+    val ix = TermIndex(entries.map(e => (e.mention, e.concept_id)).toArray)
+    // the argmax edges of run's score pass (no key reaches the hot-key cap here)
+    val closed = norms.flatMap { n =>
+      val t = ix.best(n, new LongHashSet(0), PairwiseScoring.scorePure(_, _))
+      if (t < 0) None else Some("s:" + n -> ix.conceptNodes(t))
+    }.toMap
+    val edges = closed.toSeq.toDF("a", "b")
+    assert(many.forall(n => closed.get("s:" + n).contains("c:1")), s"not one star: $closed")
+    assert(closed.get("s:" + astral + " fractures").contains("c:2"))
+    assert(!closed.contains("s:zzqx vvwy"))
+    // the reference: ConnectedComponents over those edges, terms to their concepts
+    val d = LinkagePipeline.unambiguousDict(dict)
+    val comps = ConnectedComponents(edges)
+      .union(LinkagePipeline.structEdgesOf(d).toDF("id", "component"))
+    val want = rows(LinkagePipeline.mentionAssignments(mentions, comps)
+      .union(LinkagePipeline.surfaceNodesOf(mentions, d).select(col("id"))
+        .join(comps, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("component"), col("id")).as("component"))))
+    assert(want.contains(("s:zzqx vvwy", "s:zzqx vvwy")))
+    for (cap <- Seq(ConnectedComponents.LocalSolveCap.toLong, 0L)) {
+      val r = LinkagePipeline.runBroadcast(mentions, dict, ix, PairwiseScoring.Weights(), 1000, cap)
+      val got = rows(r.assignments)
+      r.release()
+      assert(got == want, s"cap $cap: extra ${got.diff(want).take(5)}, missing ${want.diff(got).take(5)}")
+    }
+  }
+
+  test("run's broadcast path caches nothing until a diagnostic frame is read") {
+    val cache = spark.sharedState.cacheManager
+    val (docs, golds) = corpus(0L, 20)
+    val mentions = LinkagePipeline.mentionsFromSpans(docs, golds).localCheckpoint()
+    spark.catalog.clearCache()
+    val r = LinkagePipeline.run(mentions, synthDict)
+    assert(r.assignments.count() > 0)
+    assert(cache.isEmpty, "run registered a frame with the cache manager")
+    val copied = r.copy(persisted = r.persisted)
+    assert(copied.scored.count() > 0)
+    assert(!cache.isEmpty)
+    assert(r.scored eq copied.scored, "a copy built its own diagnostic frames")
+    assert(r.scored.storageLevel.useMemory)
+    r.release()
+    assert(cache.isEmpty, "release() left the scored frame cached")
   }
 
   test("argmax tie-break: equal scores go to the smaller term id in UTF-8 byte order") {

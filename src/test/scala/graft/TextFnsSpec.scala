@@ -26,12 +26,6 @@ class TextFnsSpec extends AnyFunSuite {
     assert(jaroWinkler("abc", "xyz") == 0.0)
   }
 
-  test("levenshtein matches known values") {
-    assert(levenshtein("kitten", "sitting") == 3)
-    assert(levenshtein("", "abc") == 3)
-    assert(levenshtein("abc", "abc") == 0)
-  }
-
   test("minhash similarity tracks jaccard: typo stays close, unrelated far") {
     val a = minHashSignature("acute femur fracture", 64)
     val b = minHashSignature("acute femur fractrue", 64) // typo
