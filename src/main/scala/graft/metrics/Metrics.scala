@@ -1,5 +1,6 @@
 package graft.metrics
 
+import graft.operators.Blocking
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -168,5 +169,54 @@ object Metrics {
     val rec = if (ng == 0) 0.0 else ni / ng
     val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
     (prec, rec, f1)
+  }
+
+  /** M7's counts over the mention pairs a < b that share a block key held
+    * by at most the hot-key cap's mention rows, each pair counted once per
+    * pair of its two mentions' `labels ⋈ assignments` rows (the
+    * `linkage_pairwise_f1` oracle's multiplicity): `n` all of them, `tp`
+    * same component and same cid, `fp` same component only, `fn` same cid
+    * only. */
+  final case class PairCounts(tp: Long, fp: Long, fn: Long, n: Long)
+
+  /** [[PairCounts]] without building the mention pairs. Mentions of one
+    * surface carry the same keys, so the sum factorises into E, the ordered
+    * surface pairs (s, t) sharing a cold key, and cells C(norm, component,
+    * cid) that sum w, an id's rows of `labels ⋈ assignments`. Σ over E of
+    * C(s)·C(t) counts every ordered pair of ids, each id with itself
+    * included when (s, s) ∈ E; those diagonal terms are subtracted and the
+    * rest halved. The largest join is E. A key's frequency is its mention
+    * rows, as in the oracle. Inputs: `mentions(id, norm)`, one row per
+    * mention row (an id has one norm); `labels(id, cid)`;
+    * `assignments(id, component)`. */
+  private[graft] def sameKeyPairCounts(mentions: DataFrame, labels: DataFrame, assignments: DataFrame,
+                                       hotKeyCap: Int)(implicit spark: SparkSession): PairCounts = {
+    import spark.implicits._
+    val keys = mentions.groupBy("norm").agg(count(lit(1))).as[(String, Long)]
+      .flatMap { case (norm, m) => Blocking.keyHashesFor(norm).distinct.map(k => (norm, k, m)) }
+      .toDF("norm", "key", "m")
+    val cold = keys.join(keys.groupBy("key").agg(sum("m").as("f")).filter(col("f") <= hotKeyCap), "key")
+      .select(col("key"), col("norm"))
+    val e = cold.toDF("key", "s").join(cold.toDF("key", "t"), "key").select("s", "t").distinct()
+    val w = labels.join(assignments, "id").join(mentions.select("id", "norm").distinct(), "id")
+      .groupBy("id", "norm", "component", "cid").agg(count(lit(1)).as("w"))
+    val cells = w.groupBy("norm", "component", "cid").agg(sum("w").as("w"))
+    val selfPaired = w.join(e.filter(col("s") === col("t")).select(col("s").as("norm")), "norm")
+    def side(df: DataFrame, x: String, keep: String*): DataFrame = df.select(keep.map(col) ++ Seq(
+      col("norm").as(x), col("component").as(s"comp_$x"), col("cid").as(s"cid_$x"),
+      col("w").cast("decimal(38,0)").as(s"w_$x")): _*)
+    def terms(pairs: DataFrame, sign: Int): DataFrame = pairs.select(
+      (col("w_s") * col("w_t") * sign).as("xy"),
+      (col("comp_s") === col("comp_t")).as("pred"), (col("cid_s") === col("cid_t")).as("gold"))
+    val xy = col("xy")
+    val row = terms(e.join(side(cells, "s"), "s").join(side(cells, "t"), "t"), 1)
+      .union(terms(side(selfPaired, "s", "id").join(side(selfPaired, "t", "id"), "id"), -1))
+      .agg(sum(xy), sum(when(col("pred"), xy)), sum(when(col("gold"), xy)),
+        sum(when(col("pred") && col("gold"), xy)))
+      .head()
+    val Seq(n, pred, gold, tp) =
+      (0 until 4).map(i => Option(row.getDecimal(i)).fold(BigInt(0))(d => BigInt(d.toBigInteger)) / 2)
+    require(n.isValidLong, s"sameKeyPairCounts: $n pairs overflow BIGINT")
+    PairCounts(tp.toLong, (pred - tp).toLong, (gold - tp).toLong, n.toLong)
   }
 }

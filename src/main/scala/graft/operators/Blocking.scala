@@ -73,14 +73,6 @@ object Blocking {
     out
   }
 
-  /** nodes(id, norm) → exploded block-key table (id, key). Narrow op. */
-  def blockKeys(nodes: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    nodes.select(col("id"), col("norm")).as[(String, String)]
-      .flatMap { case (id, norm) => keysFor(norm).map(k => (id, k)) }
-      .toDF("id", "key")
-  }
-
   /** Key-frequency table — the skew/lineage metric and the hot-key filter. */
   def keyFrequencies(keys: DataFrame): DataFrame =
     keys.groupBy("key").agg(count(lit(1)).as("freq"))
@@ -133,47 +125,6 @@ object Blocking {
     nodes.select(col("id"), col("norm")).as[(String, String)]
       .flatMap { case (id, norm) => keyHashesFor(norm).map(k => (id, k, norm)) }
       .toDF("id", "key", "norm")
-  }
-
-  /** Candidate pairs with norms attached (same skew strategy as
-    * `candidatePairs`), prefiltered by |len_a − len_b| ≤ lenSlack — pairs
-    * that different by more than that can never clear the match threshold,
-    * so they are dropped before they ever hit the shuffle. */
-  /** With `dedupe = false` a pair may appear once per shared block key
-    * (measured dup factor ≈ 1.3×): downstream per-group argmax/threshold
-    * consumers are duplicate-tolerant, and skipping the distinct removes a
-    * full shuffle of the widest relation in the pipeline — the measured
-    * scaling bottleneck. Keep `dedupe = true` for set-semantics consumers. */
-  def candidatePairsWithNorms(keys: DataFrame, hotKeyCap: Int = 1000,
-                              saltThreshold: Int = 300, salts: Int = 8,
-                              lenSlack: Int = 10, dedupe: Boolean = true)
-                             (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val freq = keyFrequencies(keys.select(col("id"), col("key")))
-      .filter(col("freq") <= hotKeyCap)
-    val pruned = keys.join(freq, "key")
-      .select(col("key"), col("id"), col("norm"), col("freq"))
-    val lenOk = abs(length(col("norm_a")) - length(col("norm_b"))) <= lenSlack
-
-    val cold = pruned.filter(col("freq") <= saltThreshold)
-    val coldPairs = cold.select(col("key"), col("id").as("a"), col("norm").as("norm_a"))
-      .join(cold.select(col("key"), col("id").as("b"), col("norm").as("norm_b")), "key")
-      .filter(col("a") < col("b") && lenOk)
-      .select(col("a"), col("b"), col("norm_a"), col("norm_b"))
-
-    val hot = pruned.filter(col("freq") > saltThreshold)
-    val saltedLeft = hot.select(col("key"),
-      pmod(xxhash64(col("id")), lit(salts)).as("salt"),
-      col("id").as("a"), col("norm").as("norm_a"))
-    val replicatedRight = hot.select(col("key"), col("id").as("b"), col("norm").as("norm_b"))
-      .crossJoin(spark.range(salts.toLong).toDF("salt"))
-      .select(col("key"), col("salt"), col("b"), col("norm_b"))
-    val hotPairs = saltedLeft.join(replicatedRight, Seq("key", "salt"))
-      .filter(col("a") < col("b") && lenOk)
-      .select(col("a"), col("b"), col("norm_a"), col("norm_b"))
-
-    val union = coldPairs.union(hotPairs)
-    if (dedupe) union.distinct() else union
   }
 
   /** BIPARTITE candidate pairs: left keys × right keys on the block key —

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,10 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * deterministic rebuild scores candidate pairs with string+embedding
   * features; the logistic fusion plays the re-ranker's role (SURVEY §3.4).
   *
-  * Plan shape: node features (norm + hashed embedding) are computed ONCE per
-  * node (narrow), then the pair table joins them twice. `levenshtein` is the
-  * codegen'd Spark built-in; JW and cosine are scala UDFs over the already-
-  * joined feature columns.
+  * Plan shape: the candidate pairs carry both norms, so scoring is one
+  * narrow pass. `levenshtein` is the codegen'd Spark built-in; JW and
+  * cosine are scala UDFs over the norm columns, the cosine's hashed
+  * embeddings cached per executor thread.
   */
 object PairwiseScoring {
 
@@ -28,7 +28,6 @@ object PairwiseScoring {
                      bias: Double = 0.82, gain: Double = 12.0)
 
   val jwUdf = udf((a: String, b: String) => TextFns.jaroWinkler(a, b))
-  val embUdf = udf((s: String) => TextFns.hashedEmbedding(s))
 
   /** Per-executor bounded cache of hashed embeddings: each node participates
     * in many pairs, so recomputing its embedding per pair is wasted CPU,
@@ -59,26 +58,11 @@ object PairwiseScoring {
   val cosNormUdf = udf((a: String, b: String) =>
     TextFns.cosine(cachedEmbedding(a), cachedEmbedding(b)))
 
-  /** nodes(id, norm) → nodes(id, norm, emb) (kept for API users that want
-    * materialized embeddings; the scorer itself derives them from norms). */
-  def withFeatures(nodes: DataFrame): DataFrame =
-    nodes.withColumn("emb", embUdf(col("norm")))
-
-  /** Narrow scoring over pairs that already carry both norms
-    * (Blocking.candidatePairsWithNorms) — zero additional shuffles. */
+  /** Narrow scoring over pairs that already carry both norms (a, b,
+    * norm_a, norm_b), as `Blocking.candidatePairsBipartite` emits them —
+    * zero additional shuffles. */
   def scoreInline(pairsWithNorms: DataFrame, w: Weights = Weights()): DataFrame =
     addScoreColumns(pairsWithNorms, w)
-
-  /** pairs(a, b) ⋈ node norms → scored pairs (jw, lev_ratio, cos, score).
-    * Only the 2 norm strings travel through the pair joins; embeddings are
-    * derived executor-side (cached), and `levenshtein` is the codegen'd
-    * built-in. */
-  def score(pairs: DataFrame, nodes: DataFrame, w: Weights = Weights())
-           (implicit spark: SparkSession): DataFrame = {
-    val fa = nodes.select(col("id").as("a"), col("norm").as("norm_a"))
-    val fb = nodes.select(col("id").as("b"), col("norm").as("norm_b"))
-    addScoreColumns(pairs.join(fa, "a").join(fb, "b"), w)
-  }
 
   private def addScoreColumns(joined: DataFrame, w: Weights): DataFrame = {
     val jw = jwUdf(col("norm_a"), col("norm_b"))

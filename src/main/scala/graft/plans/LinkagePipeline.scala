@@ -83,11 +83,16 @@ object LinkagePipeline {
   object Result {
     def apply(assignments: DataFrame, scored: DataFrame, blockKeys: DataFrame, keyFreq: DataFrame,
               nodeKeys: DataFrame = null, persisted: Seq[DataFrame] = Seq.empty): Result =
-      new Result(assignments, persisted, new Diagnostics(Frames(scored, blockKeys, keyFreq, nodeKeys)))
+      new Result(assignments, persisted, new Diagnostics(new Frames(scored, blockKeys, keyFreq, nodeKeys)))
   }
 
-  private[plans] final case class Frames(scored: DataFrame, blockKeys: DataFrame, keyFreq: DataFrame,
-                                         nodeKeys: DataFrame, held: Seq[DataFrame] = Seq.empty)
+  /** The diagnostic frames; `scored` is built on its own first read, and
+    * `held` is what they have materialised so far. */
+  private[plans] final class Frames(scoredF: => DataFrame, val blockKeys: DataFrame, val keyFreq: DataFrame,
+                                    val nodeKeys: DataFrame, heldF: => Seq[DataFrame] = Seq.empty) {
+    lazy val scored: DataFrame = scoredF
+    def held: Seq[DataFrame] = heldF
+  }
 
   /** [[Result]]'s diagnostic frames, built by `build` on first read; until
     * then they hold nothing to free. */
@@ -315,7 +320,7 @@ object LinkagePipeline {
       new Diagnostics({
         val cuts = new InMemoryCuts(checkpointed = Set.empty)
         val chain = new Chain(mentions, surfaces.toDF("norm"), dict, weights, hotKeyCap, cuts)
-        Frames(chain.scored, chain.mentionKeys, chain.keyFreq, chain.nodeKeys, cuts.held.toSeq)
+        new Frames(chain.scored, chain.mentionKeys, chain.keyFreq, chain.nodeKeys, cuts.held.toSeq)
       }))
   }
 
@@ -323,8 +328,10 @@ object LinkagePipeline {
     * → argmax edges → star contraction → components → assignment joins —
     * the exact path of [[run]] above the dictionary cap and the body of
     * [[runCheckpointed]]. Each named stage goes through `cut`, which
-    * decides its materialisation. The frames are lazy until an action or
-    * a cut evaluates them; [[assignments]] runs the clustering. The
+    * decides its materialisation; `scored` reaches its cut on first use,
+    * so a Result that never reads it caches nothing. The frames are lazy
+    * until an action or a cut evaluates them; [[assignments]] runs the
+    * clustering. The
     * surface nodes are the distinct `norm`s of `norms`: the mentions', or
     * [[run]]'s own checkpoint of them, so that the lazy frames of its
     * Result read no frame it does not own. */
@@ -344,7 +351,7 @@ object LinkagePipeline {
     val pairs: DataFrame = cut("pairs")(Blocking.candidatePairsBipartite(
       keysN.filter(col("id").startsWith("s:")),
       keysN.filter(col("id").startsWith("t:")), hotKeyCap))
-    val scored: DataFrame = cut("scored")(PairwiseScoring.scoreInline(pairs, weights))
+    lazy val scored: DataFrame = cut("scored")(PairwiseScoring.scoreInline(pairs, weights))
 
     /** Mention-level block keys (the F1 universe / skew diagnostics). */
     def mentionKeys: DataFrame = mentions.toDF()
@@ -366,9 +373,9 @@ object LinkagePipeline {
       // contraction join never shuffles the argmax edges.
       val termConcept = d.select(concat(lit("t:"), col("mention")).as("b"),
         concat(lit("c:"), col("concept_id")).as("concept_node"))
+      val links = argmaxEdges(scored) // the "scored" stage runs before "edges"
       val edges = cut("edges") {
-        argmaxEdges(scored).join(broadcast(termConcept), "b")
-          .select(col("a"), col("concept_node").as("b"))
+        links.join(broadcast(termConcept), "b").select(col("a"), col("concept_node").as("b"))
       }
       val components = cut("components") {
         ConnectedComponents(edges)

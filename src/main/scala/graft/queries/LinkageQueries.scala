@@ -3,7 +3,7 @@ package graft.queries
 import graft.fixtures.Synth
 import graft.metrics.Metrics
 import graft.model._
-import graft.operators.{Blocking, ConnectedComponents, DictionaryMatch, OverlapResolve}
+import graft.operators.{DictionaryMatch, OverlapResolve}
 import graft.plans.LinkagePipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -82,32 +82,35 @@ object LinkageQueries {
   /** One full pipeline run shared by linkage_clusters / linkage_block_skew /
     * linkage_pairwise_f1 within a session: the input is deterministic, so
     * re-running the identical pipeline per query only re-spends ~2/3 of the
-    * linkage bench time. Keyed by (session, sfDir); evicted (and its cached
-    * frames released) when a different key arrives. */
-  private val runCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LinkagePipeline.Result]()
+    * linkage bench time. Keyed by (session, sfDir), together with the
+    * mention checkpoint it links; every entry and its cached frames stay
+    * until `clearRunCache` releases them. */
+  private val runCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (LinkagePipeline.Result, Dataset[Mention])]()
 
-  def sharedRun(s: SparkSession, dir: String): LinkagePipeline.Result = {
+  def sharedRun(s: SparkSession, dir: String): LinkagePipeline.Result = sharedRunAndMentions(s, dir)._1
+
+  private def sharedRunAndMentions(s: SparkSession, dir: String): (LinkagePipeline.Result, Dataset[Mention]) = {
     val key = s.sparkContext.hashCode().toString + "|" + dir
     runCache.computeIfAbsent(key, _ => {
       implicit val sp: SparkSession = s
       val n = corpusSize(dir)
       val (d, g) = sharedCorpus(s, dir)
-      // r6 (guide §5): persist the mention extraction — the cogroup output
-      // feeds node building, mention-level block keys AND the mention
-      // assignment join inside run(); un-persisted it re-ran the full
-      // doc⋈gold cogroup shuffle once per consumer (~2 s each at sf0.1).
-      // Tracked in Result.persisted so release() frees it with the rest.
+      // the mention extraction is checkpointed: it feeds the surfaces and
+      // the mention assignments inside run() and pipelineF1's counts, and
+      // each consumer would otherwise re-run the doc⋈gold cogroup shuffle
+      // (~2 s each at sf0.1). Tracked in Result.persisted so release()
+      // frees it with the rest.
       val mentions = LinkagePipeline.mentionsFromSpans(d, g)
         .localCheckpoint(false)
       val r = LinkagePipeline.run(mentions, dict(s, n))
-      r.copy(persisted = r.persisted :+ mentions.toDF)
+      (r.copy(persisted = r.persisted :+ mentions.toDF), mentions)
     })
   }
 
   /** Release + forget every memoized pipeline Result (honest re-timing). */
   def clearRunCache(): Unit = {
-    runCache.values.forEach(r => try r.release() catch { case _: Throwable => })
+    runCache.values.forEach(r => try r._1.release() catch { case _: Throwable => })
     runCache.clear()
   }
 
@@ -947,11 +950,11 @@ object LinkageQueries {
     // mention pairs at the same blocking key. ORACLE (r5): the candidate
     // universe is no longer exported — DuckDB re-derives it from the
     // exported mention (id, norm) table via the same blocking-key replay as
-    // linkage_clusters (freq cap ≤ 1000, a < b, distinct; the deterministic
-    // hash-sampling is inactive at graded scale factors, asserted
-    // engine-side). Gold labels are raw inputs; the engine's cluster
-    // ASSIGNMENTS stay the artifact under test, re-scored with the plain
-    // pair-counting SQL proven in metric_pairwise_f1.
+    // linkage_clusters (freq cap ≤ 1000, a < b, distinct), the universe
+    // the engine counts exactly at every scale. Gold labels are raw inputs;
+    // the engine's cluster ASSIGNMENTS stay the artifact under test,
+    // re-scored with the plain pair-counting SQL proven in
+    // metric_pairwise_f1.
     QueryDef("linkage_pairwise_f1",
       (s, dir) => pipelineF1(s, dir),
       Some(s"""WITH fm AS (SELECT id, norm FROM read_parquet('$ExportDir/f1_mentions/*.parquet')),
@@ -1631,104 +1634,31 @@ object LinkageQueries {
        |  FROM tk JOIN gli gl ON tk.doc_id = gl.doc_id
        |    AND (tk.ti = gl.li OR (tk.ti > gl.li AND tk.ti < gl.ri)))""".stripMargin
 
-  /** Distributed pairwise-F1 gate (metric M7 / BASELINE.json line 1).
-    * The mention-level pair universe grows superlinearly with the corpus;
-    * beyond `maxUniversePairs` it is DETERMINISTICALLY sampled by pair hash
-    * (an unbiased estimate of the same P/R/F1 — every pair keeps equal
-    * inclusion probability regardless of its block). Inactive at the
-    * graded scale factors. */
-  val maxUniversePairs: Long = 50000000L
-
+  /** Pairwise-F1 gate (metric M7 / BASELINE.json line 1): P/R/F1 of the
+    * engine's assignments over labeled mention pairs that share a block
+    * key, counted exactly at surface level (`Metrics.sameKeyPairCounts`). */
   def pipelineF1(s: SparkSession, dir: String): DataFrame = {
     implicit val sp: SparkSession = s
     import s.implicits._
-    val n = corpusSize(dir)
-    val g = sharedGold(s, dir)
-    val result = sharedRun(s, dir)
-    // read by the pair-bag bound and the pair universe: evaluated once
-    val mKeys = result.blockKeys.filter(col("id").startsWith("m:")).localCheckpoint(false)
-    // r6 (guide §1.2): the sampling decision needs only to know the
-    // universe is UNDER the cap — a cheap per-key frequency sum bounds the
-    // pre-dedup pair bag (Σ freq·(freq−1)/2 over capped keys ≥ the
-    // distinct pair count), so when the bound clears the cap the pair
-    // table is never materialized or counted: the judged aggregation
-    // consumes it fused in one job. Equivalence: bound ≤ cap ⟹
-    // nPairs ≤ cap ⟹ the old path was unsampled too; above the bound we
-    // fall back to the exact persist+count+maybe-sample path unchanged.
-    val hotKeyCap = 1000
-    // decimal(38,0) accumulation (the CC-signature trick): a plain long sum
-    // over ~1e13+ capped keys could wrap negative and silently take the
-    // unsampled shortcut at exactly the scale where sampling matters
-    val pairBagBound = BigDecimal(Blocking.keyFrequencies(mKeys)
-      .filter(col("freq") <= hotKeyCap)
-      .agg(coalesce(sum(expr("freq * (freq - 1) div 2").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)")))
-      .head().getDecimal(0))
-    val (universe, universeAllOpt, nPairsKnown) =
-      if (pairBagBound <= BigDecimal(maxUniversePairs))
-        // bound ≤ 50M here, so the long conversion is exact
-        (Blocking.candidatePairs(mKeys, hotKeyCap), None, pairBagBound.toLong)
-      else {
-        val universeAll = Blocking.candidatePairs(mKeys, hotKeyCap)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nPairs = universeAll.count()
-        val u =
-          if (nPairs <= maxUniversePairs) universeAll
-          else universeAll.filter(
-            pmod(xxhash64(col("a"), col("b")), lit(nPairs / maxUniversePairs + 1)) === 0)
-        (u, Some(universeAll), nPairs)
-      }
-    val labels = g.map(x => (s"m:${x.doc_id}:${x.start}:${x.end}", x.concept_id))
+    val (result, mentions) = sharedRunAndMentions(s, dir)
+    val ment = mentions.toDF().select(concat(lit("m:"), col("doc_id"), lit(":"), col("start"), lit(":"),
+      col("end")).as("id"), col("norm"))
+    val labels = sharedGold(s, dir).map(x => (s"m:${x.doc_id}:${x.start}:${x.end}", x.concept_id))
       .toDF("id", "cid")
-    // end-to-end oracle exports (Verify only): mention norms (the oracle
-    // re-derives the blocking universe from them — r5), gold labels, and
-    // the engine's cluster assignments, re-scored by plain pair-counting
-    // SQL (see the linkage_pairwise_f1 def). The SQL replays the FULL
-    // universe, so exporting while the hash-sampler is active would be a
-    // silent oracle mismatch — assert it never is at verified scales.
-    if (exportEnabled) {
-      require(nPairsKnown <= maxUniversePairs,
-        s"linkage_pairwise_f1 oracle assumes the unsampled universe but " +
-          s"$nPairsKnown pairs (or bag bound) > $maxUniversePairs — " +
-          "verified scale factors must stay below the sampler")
-      val (dd, gg) = sharedCorpus(s, dir)
-      exportTable(LinkagePipeline.mentionsFromSpans(dd, gg).toDF().select(
-        concat(lit("m:"), col("doc_id"), lit(":"), col("start"), lit(":"),
-          col("end")).as("id"), col("norm")), "f1_mentions")
-    }
+    val assignments = result.assignments.toDF("id", "component")
+    // end-to-end oracle exports (Verify only): the oracle re-derives the
+    // blocking universe from the mention norms and re-scores the engine's
+    // assignments against the gold labels by plain pair-counting SQL
+    exportTable(ment, "f1_mentions")
     exportTable(labels, "f1_labels")
-    exportTable(result.assignments.toDF("id", "component"), "f1_assign")
-    // r6 (guide §2.4): labels and assignments are joined ONCE into a
-    // per-mention info table, then attached to the pair universe per side —
-    // 3 shuffle joins instead of 4. Inner-join semantics unchanged: every
-    // universe id is a gold mention (the universe derives from the gold
-    // mention keys), so each id carries exactly one label and one
-    // assignment either way.
-    val nodeInfo = labels
-      .join(result.assignments.toDF("id", "component"), "id")
-    val ja = nodeInfo.toDF("a", "cid_a", "comp_a")
-    val jb = nodeInfo.toDF("b", "cid_b", "comp_b")
-    val judged = universe.join(ja, "a").join(jb, "b")
-      .select(
-        (col("cid_a") === col("cid_b")).as("gold"),
-        (col("comp_a") === col("comp_b")).as("pred"))
-      .groupBy()
-      .agg(
-        sum(when(col("gold") && col("pred"), 1).otherwise(0)).as("tp"),
-        sum(when(!col("gold") && col("pred"), 1).otherwise(0)).as("fp"),
-        sum(when(col("gold") && !col("pred"), 1).otherwise(0)).as("fn"),
-        count(lit(1)).as("n_pairs"))
-      .head()
-    universeAllOpt.foreach(_.unpersist())
-    ConnectedComponents.freeCheckpoint(mKeys)
-    val tp = judged.getLong(0).toDouble
-    val fp = judged.getLong(1).toDouble
-    val fn = judged.getLong(2).toDouble
+    exportTable(assignments, "f1_assign")
+    val c = Metrics.sameKeyPairCounts(ment, labels, assignments, hotKeyCap = 1000)
+    val (tp, fp, fn) = (c.tp.toDouble, c.fp.toDouble, c.fn.toDouble)
     val prec = if (tp + fp == 0) 0.0 else tp / (tp + fp)
     val rec = if (tp + fn == 0) 0.0 else tp / (tp + fn)
     val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
     def r4(x: Double) = math.rint(x * 10000) / 10000
-    Seq((r4(prec), r4(rec), r4(f1), judged.getLong(3)))
+    Seq((r4(prec), r4(rec), r4(f1), c.n))
       .toDF("precision", "recall", "f1", "n_pairs")
   }
 

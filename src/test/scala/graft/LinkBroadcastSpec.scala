@@ -164,6 +164,8 @@ class LinkBroadcastSpec extends AnyFunSuite with SparkTestBase {
     val r = LinkagePipeline.run(mentions, synthDict)
     assert(r.assignments.count() > 0)
     assert(cache.isEmpty, "run registered a frame with the cache manager")
+    assert(r.keyFreq.count() > 0 && r.nodeKeys.count() > 0)
+    assert(cache.isEmpty, "reading the key diagnostics registered a frame")
     val copied = r.copy(persisted = r.persisted)
     assert(copied.scored.count() > 0)
     assert(!cache.isEmpty)
