@@ -331,10 +331,9 @@ object LinkagePipeline {
     * decides its materialisation; `scored` reaches its cut on first use,
     * so a Result that never reads it caches nothing. The frames are lazy
     * until an action or a cut evaluates them; [[assignments]] runs the
-    * clustering. The
-    * surface nodes are the distinct `norm`s of `norms`: the mentions', or
-    * [[run]]'s own checkpoint of them, so that the lazy frames of its
-    * Result read no frame it does not own. */
+    * clustering. The surface nodes are the distinct `norm`s of `norms`:
+    * the mentions', or [[run]]'s own checkpoint of them, so that the lazy
+    * frames of its Result read no frame it does not own. */
   private final class Chain(mentions: Dataset[Mention], norms: DataFrame, dict: Dataset[DictEntry],
                             weights: PairwiseScoring.Weights, hotKeyCap: Int, cut: Cut)
                            (implicit spark: SparkSession) {
