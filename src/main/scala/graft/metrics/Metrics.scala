@@ -171,9 +171,9 @@ object Metrics {
     (prec, rec, f1)
   }
 
-  /** M7's counts over the mention pairs a < b that share a block key held
-    * by at most the hot-key cap's mention rows, each pair counted once per
-    * pair of its two mentions' `labels ⋈ assignments` rows (the
+  /** M7's counts over the mention pairs a < b that share a block key
+    * carried by at most `hotKeyCap` mention rows, each pair counted once
+    * per pair of its two mentions' `labels ⋈ assignments` rows (the
     * `linkage_pairwise_f1` oracle's multiplicity): `n` all of them, `tp`
     * same component and same cid, `fp` same component only, `fn` same cid
     * only. */
@@ -185,9 +185,9 @@ object Metrics {
     * cid) that sum w, an id's rows of `labels ⋈ assignments`. Σ over E of
     * C(s)·C(t) counts every ordered pair of ids, each id with itself
     * included when (s, s) ∈ E; those diagonal terms are subtracted and the
-    * rest halved. The largest join is E. A key's frequency is its mention
-    * rows, as in the oracle. Inputs: `mentions(id, norm)`, one row per
-    * mention row (an id has one norm); `labels(id, cid)`;
+    * rest halved. The largest join is over E. A key's frequency is its
+    * mention rows, as in the oracle. Inputs: `mentions(id, norm)`, one row
+    * per mention row (an id has one norm); `labels(id, cid)`;
     * `assignments(id, component)`. */
   private[graft] def sameKeyPairCounts(mentions: DataFrame, labels: DataFrame, assignments: DataFrame,
                                        hotKeyCap: Int)(implicit spark: SparkSession): PairCounts = {
