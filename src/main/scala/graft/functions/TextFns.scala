@@ -35,8 +35,9 @@ object TextFns {
   }
 
   /** Token = maximal run of letters/digits. Returns (token, start, end)
-    * with [start,end) offsets into the ORIGINAL string; tokens lowercased
-    * unless `preserveCase` (the case-sensitive uc-dict path,
+    * with [start,end) offsets into the ORIGINAL string; tokens folded per
+    * char as `normalize` folds dictionary keys (locale-free, one char per
+    * char) unless `preserveCase` (the case-sensitive uc-dict path,
     * `1st Place/src/mimic_predict.py:31-49`). Boundary guard of the
     * reference (`text[i-1].isalnum()` check at
     * `1st Place/src/mimic_common.py:141`) holds by construction. */
@@ -50,7 +51,7 @@ object TextFns {
         val st = i
         while (i < n && Character.isLetterOrDigit(text.charAt(i))) i += 1
         val tok = text.substring(st, i)
-        out += ((if (preserveCase) tok else tok.toLowerCase, st, i))
+        out += ((if (preserveCase) tok else normalize(tok), st, i))
       } else i += 1
     }
     out.result()
@@ -244,7 +245,9 @@ object TextFns {
   def hammingDistance(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** UNNORMALIZED feature-hashed char-3-gram embedding: integer ±1 bucket
-    * sums (exactly representable in Float). The gram hash is the
+    * sums (exactly representable in Float). Stands in for the reference's
+    * SapBERT embeddings (`2nd Place/src/embeds.py:50-72`) — no external
+    * models in this rebuild. The gram hash is the
     * SQL-replayable poly family (`simGramHash`): bucket = floorMod(h, dim),
     * sign = bit 6 (clear of the bucket bits at dim = 64). The pairwise
     * scorer consumes THIS form: cosine of integer vectors is bit-exact
@@ -262,22 +265,6 @@ object TextFns {
       val sign = if (((h >>> 6) & 1L) == 1L) 1f else -1f
       v(idx) += sign
       g += 1
-    }
-    v
-  }
-
-  /** Deterministic feature-hashed char-3-gram embedding, L2-normalized.
-    * Stands in for the reference's SapBERT embeddings
-    * (`2nd Place/src/embeds.py:50-72`) — no external models in this rebuild. */
-  def hashedEmbedding(s: String, dim: Int = 64): Array[Float] = {
-    val v = hashedEmbeddingRaw(s, dim)
-    var norm = 0.0
-    var i = 0
-    while (i < dim) { norm += v(i).toDouble * v(i); i += 1 }
-    if (norm > 0) {
-      val inv = (1.0 / math.sqrt(norm)).toFloat
-      i = 0
-      while (i < dim) { v(i) *= inv; i += 1 }
     }
     v
   }

@@ -265,7 +265,8 @@ object DictTrain {
                                    (implicit spark: SparkSession): Dataset[T] = {
     import spark.implicits._
     // r6 fusion (guide §2.4, the annotateDualResolved precedent): the raw
-    // gazetteer probe runs INSIDE the doc×gold cogroup instead of as a
+    // gazetteer probe (the scan kernel `DictionaryMatch.matchDoc`, folded
+    // side only) runs INSIDE the doc×gold cogroup instead of as a
     // separate flatMap whose per-doc output — the WIDEST training
     // intermediate, the raw overlapping candidates — was immediately
     // re-shuffled by doc_id for scoring. Output is row-identical: matchDoc
@@ -273,9 +274,7 @@ object DictTrain {
     // before the two-pointer walk (docs with no golds still score their
     // predictions −1; gold-only or empty docs still emit nothing). Pinned
     // by the inputs-only dict_train oracle and DictTrainSpec.
-    val (dictMap, firstTokens) = DictionaryMatch.dictStructures(dict)
-    val dmB = spark.sparkContext.broadcast(dictMap)
-    val ftB = spark.sparkContext.broadcast(firstTokens)
+    val dictB = DictionaryMatch.broadcastDict(dict)
     docTexts(docs).cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
       val texts = dIt.map(_._2).toSeq
       texts.headOption match {
@@ -283,7 +282,7 @@ object DictTrain {
         case Some(text) =>
           val anns = DictionaryMatch
             .matchDoc(docId, text, maxTokens = 6, minStart = 100,
-              dmB.value, ftB.value)
+              folded = dictB.value, preserved = null)
             .toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
           val refs = gIt.toIndexedSeq.sortBy(r => (r.start, r.end, r.concept_id))
           emit(docId, texts, scoreDocPredictions(refs, anns))
@@ -802,7 +801,7 @@ object DictTrain {
     * (`mimic_predict.py:31-49` + join_predictions). Runs FUSED: one doc
     * scan probes both dictionaries and resolves overlaps in-row — zero
     * shuffles (the two-pass + cogroup form is pinned identical by the
-    * DictionaryMatchSpec differential). */
+    * UcDictSpec differential). */
   def infer(docs: Dataset[Doc], lcDict: Dataset[DictEntry], ucDict: Dataset[DictEntry])
            (implicit spark: SparkSession): Dataset[Annotation] =
     DictionaryMatch.annotateDualResolved(docs, lcDict, ucDict)

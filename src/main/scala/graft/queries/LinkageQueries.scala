@@ -345,8 +345,9 @@ object LinkageQueries {
        |  UNION ALL
        |  SELECT norm, ${foldSql("xor(poly, CAST(359069 AS UBIGINT))", graft.functions.TextFns.XsMul1)} FROM ${p}sp)""".stripMargin
 
-  /** Full SQL replay of the flagship inference path — matchDocDual + the
-    * greedy overlap resolve — over exported docs + dictionaries:
+  /** Full SQL replay of the flagship inference path — the two-sided
+    * `DictionaryMatch.matchDoc` scan + the greedy overlap resolve — over
+    * exported docs + dictionaries:
     * line/segment offset arithmetic (window prefix sums), sectioning with
     * the gazetteer/other mapping and ASOF as-of lookup, header-line veto,
     * token n-grams ≤ 6 with last-token destem, per-section dict joins, and
@@ -362,11 +363,11 @@ object LinkageQueries {
   /** The gazetteer CANDIDATE machinery as a reusable CTE fragment over an
     * exported (doc_id, text) table: line/segment offset arithmetic,
     * sectioning, header-line + veto-section guards, token n-grams ≤ 6 with
-    * the last-token destem — everything `matchDoc` does before the dict
-    * probe. Shared by the inference replays (annotateReplaySql) and the
-    * dict_train scored-table replay. `keys` is MATERIALIZED: every raw
-    * match branch references it and an inlined copy re-runs the whole
-    * candidate pipeline per branch. */
+    * the last-token destem — everything the scan kernel
+    * `DictionaryMatch.matchDoc` does before the dict probe. Shared by the
+    * inference replays (annotateReplaySql) and the dict_train scored-table
+    * replay. `keys` is MATERIALIZED: every raw match branch references it
+    * and an inlined copy re-runs the whole candidate pipeline per branch. */
   private def matchCandidatesSql(docsT: String): String =
     s"""lines AS (
        |  SELECT doc_id, line, li,

@@ -88,7 +88,7 @@ object Scaling {
     val docsText = spark.read.parquet(s"$dir/ann_docs").as[(String, String)]
     val dict = spark.read.parquet(s"$dir/ann_dict").as[DictEntry]
     // fused probe + IN-ROW overlap resolve (the production inference shape,
-    // r4): same output as OverlapResolve.apply(annotateText(...)) minus the
+    // r4): same output as OverlapResolve.apply(annotate(...)) minus the
     // row shuffle that only regrouped rows already co-produced per doc
     graft.operators.DictionaryMatch.annotateTextResolved(docsText, dict).count()
   }

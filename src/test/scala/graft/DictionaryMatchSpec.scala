@@ -47,49 +47,101 @@ class DictionaryMatchSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("hashed candidates are exactly the string candidates' fingerprints") {
-    import graft.functions.LongHashSet
-    val firstTokens: java.util.Set[String] = {
-      val s = new java.util.HashSet[String]()
-      dict.foreach { e =>
-        val cut = e.mention.indexOf(' ')
-        s.add(if (cut < 0) e.mention else e.mention.substring(0, cut))
+  /** Past `minStart`: uppercase plurals, a dotted capital I (one char
+    * that `String.toLowerCase` turns into two), 3-char tokens ending in
+    * 's'/'S' (never destemmed), a header line and a veto section, with
+    * the same words again before `minStart`. */
+  val adversarial: (String, String) = ("adv",
+    "LABS \u0130nfection GAS abs Coughs STENOSIS, " * 2 + "." * 30 + "\n" +
+    "Chief Complaint:\n" +
+    "LABS and STENOSIS with \u0130nfection, Coughs, GAS, abs, Ras and cough.\n" +
+    "Coughs LABS:\n" +
+    "\nDischarge Medications:\n" +
+    "LABS \u0130nfection coughs STENOSIS\n" +
+    "\nPhysical Exam:\n" +
+    "Lab stenosis LAB \u0130NFECTIONS.\n")
+  val advLc = Seq(DictEntry("any", "infection", 1L), DictEntry("any", "cough", 2L),
+    DictEntry("any", "ab", 3L), DictEntry("any", "ra", 4L), DictEntry("any", "lab", 5L))
+  val advUc = Seq(DictEntry("any", "LAB", 11L), DictEntry("any", "STENOSI", 12L),
+    DictEntry("any", "GA", 13L), DictEntry("any", "\u0130NFECTION", 14L))
+
+  type Row = (Int, Int, Long, String, String)
+
+  /** The reference: `candidates` ⋈ dict per side, in the kernel's emission
+    * order — per n-gram (start, end): folded then preserved hits, then the
+    * destemmed key's hits in the same side order. */
+  def reference(id: String, text: String, maxTokens: Int,
+                folded: Option[Seq[DictEntry]], preserved: Option[Seq[DictEntry]]): Seq[Row] = {
+    def side(dict: Seq[DictEntry], caseSensitive: Boolean, sideIdx: Int) = {
+      val firstTokens = new java.util.HashSet[String]()
+      dict.foreach(e => firstTokens.add(e.mention.takeWhile(_ != ' ')))
+      val byKey = dict.groupBy(_.mention)
+      val cands = DictionaryMatch
+        .candidates(id, text, maxTokens, 100, firstTokens, caseSensitive).toIndexedSeq
+      cands.indices.flatMap { k =>
+        val c = cands(k)
+        // a destemmed key directly follows its n-gram's full key
+        val destem = if (k > 0 && cands(k - 1).start == c.start && cands(k - 1).end == c.end) 1 else 0
+        byKey.getOrElse(c.key, Seq.empty).sortBy(e => (e.section, e.mention, e.concept_id))
+          .collect { case e if e.section == "any" || e.section == c.section =>
+            ((c.start, c.end, destem, sideIdx), (c.start, c.end, e.concept_id, e.section, e.mention))
+          }
       }
-      s
     }
-    val ftHashes = {
-      val s = new LongHashSet(firstTokens.size())
-      firstTokens.forEach(t => s.add(TextFns.fingerprint64(t)))
-      s
-    }
-    for (d <- docs.take(15); cs <- Seq(false, true)) {
-      val strCands = DictionaryMatch
-        .candidates(d.doc_id, d.text, 4, 100, firstTokens, cs)
-        .map(c => (c.start, c.end, TextFns.fingerprint64(c.key), c.section))
-      val hashCands = DictionaryMatch
-        .candidateHashes(d.doc_id, d.text, 4, 100, ftHashes, cs)
-        .map(c => (c.start, c.end, c.key_hash, c.section))
-      assert(hashCands == strCands, s"divergence in ${d.doc_id} cs=$cs")
-    }
+    (folded.toSeq.flatMap(side(_, caseSensitive = false, 0)) ++
+      preserved.toSeq.flatMap(side(_, caseSensitive = true, 1)))
+      .sortBy(_._1).map(_._2)
   }
 
-  test("fused matchDoc equals string-candidates joined with the dict") {
-    val (dictMap, ftHashes) = DictionaryMatch.dictStructures(dict.toArray)
-    val byKey = dict.groupBy(_.mention)
-    for (d <- docs.take(15)) {
-      val fused = DictionaryMatch
-        .matchDoc(d.doc_id, d.text, 4, 100, dictMap, ftHashes)
-        .map(a => (a.start, a.end, a.concept_id, a.section, a.dict_entry)).toSet
-      val joined = DictionaryMatch
-        .candidates(d.doc_id, d.text, 4, 100)
-        .flatMap { c =>
-          byKey.getOrElse(c.key, Seq.empty).collect {
-            case e if e.section == "any" || e.section == c.section =>
-              (c.start, c.end, e.concept_id, e.section, e.mention)
-          }
-        }.toSet
-      assert(fused == joined, s"divergence in ${d.doc_id}")
+  def kernel(id: String, text: String, maxTokens: Int,
+             folded: Option[Seq[DictEntry]], preserved: Option[Seq[DictEntry]]): Seq[Row] = {
+    def gazetteer(dict: Option[Seq[DictEntry]]) =
+      dict.map(d => DictionaryMatch.dictStructures(d.toArray)).orNull
+    DictionaryMatch.matchDoc(id, text, maxTokens, 100, gazetteer(folded), gazetteer(preserved))
+      .map(a => (a.start, a.end, a.concept_id, a.section, a.dict_entry))
+  }
+
+  test("scan kernel equals the string reference: lc, uc, dual") {
+    val texts = docs.take(15).map(d => (d.doc_id, d.text)) :+ adversarial
+    // every reference candidate key is a mention, so every candidate's
+    // hash is checked; every third key also gets a section-bound entry
+    def allKeys(caseSensitive: Boolean) = texts.flatMap { case (id, t) =>
+      DictionaryMatch.candidates(id, t, 6, 100, caseSensitive = caseSensitive).map(_.key)
+    }.distinct.zipWithIndex.flatMap { case (key, k) =>
+      DictEntry("any", key, k.toLong) +:
+        (if (k % 3 == 0) Seq(DictEntry("past medical history", key, k + 1000000L)) else Nil)
     }
+    val dictPairs = Seq(
+      "every candidate key" -> (allKeys(false), allKeys(true)),
+      "synth" -> (dict, Synth.ucDictionary(nConcepts)),
+      "adversarial" -> (advLc, advUc))
+    var matched = 0
+    for ((name, (lc, uc)) <- dictPairs;
+         (mode, folded, preserved) <- Seq(("lc", Some(lc), None), ("uc", None, Some(uc)),
+           ("dual", Some(lc), Some(uc)));
+         (id, text) <- texts) {
+      val want = reference(id, text, 6, folded, preserved)
+      assert(kernel(id, text, 6, folded, preserved) == want, s"$name/$mode diverges in $id")
+      matched += want.size
+    }
+    assert(matched > 0)
+  }
+
+  test("scan kernel: uppercase plurals, per-char fold, guards") {
+    val (id, text) = adversarial
+    val got = kernel(id, text, 6, Some(advLc), Some(advUc))
+      .map { case (s, e, cid, _, _) => (text.substring(s, e), s, cid) }
+    val chief = text.indexOf("Chief Complaint:")
+    assert(got.forall(_._2 > chief), s"a match before minStart or the first header: $got")
+    val inVeto = text.indexOf("Discharge Medications:")
+    val exam = text.indexOf("Physical Exam:")
+    assert(!got.exists(g => g._2 > inVeto && g._2 < exam), s"a match in the veto section: $got")
+    assert(!got.exists(g => text.indexOf("Coughs LABS:") <= g._2 && g._2 < inVeto),
+      s"a match on a header line: $got")
+    assert(got.map(g => (g._1, g._3)).toSet == Set(
+      "LABS" -> 5L, "LABS" -> 11L, "STENOSIS" -> 12L, "\u0130nfection" -> 1L, "Coughs" -> 2L,
+      "cough" -> 2L, "Lab" -> 5L, "LAB" -> 5L, "LAB" -> 11L, "\u0130NFECTIONS" -> 1L,
+      "\u0130NFECTIONS" -> 14L))
   }
 
   test("gazetteer match finds planted exact/permutation/plural mentions") {
@@ -126,8 +178,8 @@ class DictionaryMatchSpec extends AnyFunSuite with SparkTestBase {
     val fused = DictionaryMatch.annotateTextResolved(
         textDs, spark.createDataset(dict), maxTokens = 4)
       .collect().map(a => (a.doc_id, a.start, a.end, a.concept_id, a.section, a.dict_entry))
-    val twoStep = OverlapResolve.apply(DictionaryMatch.annotateText(
-        textDs, spark.createDataset(dict), maxTokens = 4))
+    val twoStep = OverlapResolve.apply(DictionaryMatch.annotate(
+        spark.createDataset(docs), spark.createDataset(dict), maxTokens = 4))
       .collect().map(a => (a.doc_id, a.start, a.end, a.concept_id, a.section, a.dict_entry))
     assert(fused.sorted.toSeq == twoStep.sorted.toSeq)
     assert(fused.nonEmpty)

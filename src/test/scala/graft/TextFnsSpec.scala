@@ -17,6 +17,8 @@ class TextFnsSpec extends AnyFunSuite {
     for ((tok, s, e) <- tokensWithOffsets(t))
       assert(t.substring(s, e).toLowerCase == tok)
     assert(tokensWithOffsets(t).map(_._1) == Seq("acute", "femur", "fracture"))
+    // folds per char like `normalize`: one char in, one char out
+    assert(tokensWithOffsets("\u0130nfection").map(_._1) == Seq("infection"))
   }
 
   test("jaro-winkler known values") {
@@ -93,9 +95,9 @@ class TextFnsSpec extends AnyFunSuite {
   }
 
   test("hashed embedding cosine separates near from far") {
-    val a = hashedEmbedding("acute femur fracture")
-    val b = hashedEmbedding("acute femur fractures")
-    val c = hashedEmbedding("latent cornea erosion")
+    val a = hashedEmbeddingRaw("acute femur fracture")
+    val b = hashedEmbeddingRaw("acute femur fractures")
+    val c = hashedEmbeddingRaw("latent cornea erosion")
     assert(cosine(a, b) > 0.8)
     assert(cosine(a, c) < 0.4)
     assert(math.abs(cosine(a, a) - 1.0) < 1e-9)
