@@ -101,30 +101,39 @@ class DictionaryMatchSpec extends AnyFunSuite with SparkTestBase {
       .map(a => (a.start, a.end, a.concept_id, a.section, a.dict_entry))
   }
 
-  test("scan kernel equals the string reference: lc, uc, dual") {
-    val texts = docs.take(15).map(d => (d.doc_id, d.text)) :+ adversarial
-    // every reference candidate key is a mention, so every candidate's
-    // hash is checked; every third key also gets a section-bound entry
-    def allKeys(caseSensitive: Boolean) = texts.flatMap { case (id, t) =>
-      DictionaryMatch.candidates(id, t, 6, 100, caseSensitive = caseSensitive).map(_.key)
-    }.distinct.zipWithIndex.flatMap { case (key, k) =>
-      DictEntry("any", key, k.toLong) +:
-        (if (k % 3 == 0) Seq(DictEntry("past medical history", key, k + 1000000L)) else Nil)
-    }
-    val dictPairs = Seq(
-      "every candidate key" -> (allKeys(false), allKeys(true)),
-      "synth" -> (dict, Synth.ucDictionary(nConcepts)),
-      "adversarial" -> (advLc, advUc))
+  val diffTexts = docs.take(15).map(d => (d.doc_id, d.text)) :+ adversarial
+
+  /** `matchDoc` equals `reference` in lc, uc and dual modes, order
+    * included, for each (folded, preserved) dictionary pair. */
+  def differential(dictPairs: Seq[(String, (Seq[DictEntry], Seq[DictEntry]))]): Unit = {
     var matched = 0
     for ((name, (lc, uc)) <- dictPairs;
          (mode, folded, preserved) <- Seq(("lc", Some(lc), None), ("uc", None, Some(uc)),
            ("dual", Some(lc), Some(uc)));
-         (id, text) <- texts) {
+         (id, text) <- diffTexts) {
       val want = reference(id, text, 6, folded, preserved)
       assert(kernel(id, text, 6, folded, preserved) == want, s"$name/$mode diverges in $id")
       matched += want.size
     }
     assert(matched > 0)
+  }
+
+  test("hashed candidates are exactly the string candidates' fingerprints") {
+    // every reference candidate key is a mention, so every candidate's
+    // hash is checked; every third key also gets a section-bound entry
+    def allKeys(caseSensitive: Boolean) = diffTexts.flatMap { case (id, t) =>
+      DictionaryMatch.candidates(id, t, 6, 100, caseSensitive = caseSensitive).map(_.key)
+    }.distinct.zipWithIndex.flatMap { case (key, k) =>
+      DictEntry("any", key, k.toLong) +:
+        (if (k % 3 == 0) Seq(DictEntry("past medical history", key, k + 1000000L)) else Nil)
+    }
+    differential(Seq("every candidate key" -> (allKeys(false), allKeys(true))))
+  }
+
+  test("fused matchDoc equals string-candidates joined with the dict") {
+    differential(Seq(
+      "synth" -> (dict, Synth.ucDictionary(nConcepts)),
+      "adversarial" -> (advLc, advUc)))
   }
 
   test("scan kernel: uppercase plurals, per-char fold, guards") {
