@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.plans.Materialize
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,8 +18,9 @@ import scala.reflect.ClassTag
   *
   * The component label is the minimum member under Spark's own
   * `least`/`greatest` order (for strings the UTF-8 binary collation) —
-  * deterministic, no 64-bit-hash collision risk. Each round
-  * `localCheckpoint`s to cut lineage (SURVEY §7.4.4).
+  * deterministic, no 64-bit-hash collision risk. Each round is a
+  * `Materialize` cut, which cuts lineage (SURVEY §7.4.4), and frees the
+  * round it supersedes.
   *
   * large-star: for each node u, m = min(Γ(u) ∪ {u}); emit (v, m) ∀v ∈ Γ(u), v > u
   * small-star: orient edges to (max, min); m = min(N(u) ∪ {u}) = min N(u);
@@ -61,19 +62,20 @@ object ConnectedComponents {
     * when the entire (already-checkpointed) edge set fits the same few-
     * hundred-MB envelope, running it once over all edges removes every
     * star round, signature action and assignment shuffle. The probe is a
-    * bounded `limit(cap+1)` collect from the checkpoint cache, so driver
+    * bounded `limit(cap+1)` collect from the input cut, so driver
     * intake can never exceed the cap; beyond it the loop runs unchanged
     * (fact-scale edge sets — the 100 TB mention graph — keep the
     * distributed algorithm). */
   private[graft] val LocalSolveCap = 1 << 21
 
-  /** The local-solve cap's one gate: the rows of `df` when it has at most
-    * `cap` of them, else None. A bounded `limit(cap + 1)` collect, clamped
-    * BEFORE the +1 (cap + 1 overflows at Long.MaxValue). */
-  private[graft] def collectWithin(df: DataFrame, cap: Long): Option[Array[Row]] =
+  /** The one bounded driver collect, behind the local-solve cap and the
+    * dictionary cap: the rows of `ds` when it has at most `cap` of them,
+    * else None. A `limit(cap + 1)` collect, clamped BEFORE the +1 (cap + 1
+    * overflows at Long.MaxValue). */
+  private[graft] def collectWithin[T](ds: Dataset[T], cap: Long): Option[Array[T]] =
     if (cap <= 0) None
     else {
-      val rows = df.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+      val rows = ds.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
       if (rows.length <= cap) Some(rows) else None
     }
 
@@ -108,19 +110,6 @@ object ConnectedComponents {
     } yield (rows, o)
   }
 
-  /** The one way to free a materialized frame (here, in [[Graph]] and in
-    * `LinkagePipeline.Result.release`): unpersists it and the checkpoint
-    * blocks of its root `LogicalRDD`, where a lazy `localCheckpoint` keeps
-    * them outside the SQL cache manager. Root-only — `LogicalRDD` leaves
-    * deeper in its lineage may belong to frames the caller does not own. */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-  }
-
   /** A driver-side collection as an RDD of ~4096-element slices. */
   private[graft] def parallelizeLocal[T: ClassTag](xs: Seq[T])
                                                   (implicit spark: SparkSession): RDD[T] =
@@ -130,52 +119,44 @@ object ConnectedComponents {
   /** edges(a, b) → assignment(id, component) for every endpoint. */
   def apply(edgesIn: DataFrame, maxIter: Int = 40,
             localCap: Long = LocalSolveCap)
-           (implicit spark: SparkSession): DataFrame = {
-    // materialize the input once: cuts whatever upstream plan produced the
-    // edges (UDF filters, joins) so the iteration joins against a stable
-    // leaf — required for the loop anyway, and avoids re-executing the
-    // upstream pipeline for the nodes scan
-    val edges0 = edgesIn.select(col("a"), col("b")).localCheckpoint()
+           (implicit spark: SparkSession): DataFrame = Materialize.scope { m =>
+    // the input, cut once: the loop and the nodes scan read a stable leaf,
+    // not the upstream plan (UDF filters, joins)
+    val edges0 = m.cut(edgesIn.select(col("a"), col("b")), eager = true)
     localEdges(edges0, localCap) match {
       case Some((rows, ord)) =>
-        // the checkpointed input is fully consumed — free its blocks now
-        // instead of waiting for GC (matters for repeated-sample benches)
-        freeCheckpoint(edges0)
+        m.free(edges0) // fully consumed: freed now, not at GC
         localAssignments(rows, edges0.schema.head.dataType, ord)
-      case None => starLoop(edges0, maxIter)
+      case None => starLoop(edges0, maxIter, m)
     }
   }
 
-  private def starLoop(edges0: DataFrame, maxIter: Int)(implicit spark: SparkSession): DataFrame = {
+  private def starLoop(edges0: DataFrame, maxIter: Int, m: Materialize.Owner): DataFrame = {
     val nodes = edges0.select(col("a").as("id")).toDF("id")
       .union(edges0.select(col("b").as("id")).toDF("id")).distinct()
 
     val norm = edges0.filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-    // LAZY checkpoint (r6): the signature aggregation right below is the
-    // action that materializes it — one pass (contract + cache + hash)
-    // instead of an eager checkpoint pass plus a separate signature pass,
-    // the same trick the loop already used for its per-round checkpoints.
-    var edges = contractStars(norm, spark)
-      .localCheckpoint(false)
+    // LAZY cuts here and per round (r6): the signature aggregation is the
+    // action that materializes each, one pass (compute + cache + hash)
+    var edges = m.cut(contractStars(norm), eager = false)
 
     var stable = false
     var iter = 0
     var sig = signature(edges)
     while (!stable && iter < maxIter) {
-      val ls = largeStar(edges)
-      // LAZY localCheckpoint: the signature aggregation below is the one
-      // action that materializes the checkpoint — one pass per round
-      // (compute + cache + aggregate), not a checkpoint pass plus a
-      // separate count+hash pass
-      val ss = smallStar(ls).localCheckpoint(false)
+      val ss = m.cut(smallStar(largeStar(edges)), eager = false)
       val newSig = signature(ss)
       stable = newSig == sig
       sig = newSig
+      m.free(edges) // superseded (round 1: the contraction)
       edges = ss
       iter += 1
     }
 
+    // the output reads the input cut and the last round: they leave the
+    // scope with it and are freed with its lineage, at GC
+    m.handOff()
     // after convergence every edge is (node, root); roots + isolated nodes map to themselves
     val assign = edges.select(col("v"), col("u")).toDF("id", "component")
       .union(edges.select(col("u"), col("u")).toDF("id", "component"))
@@ -256,7 +237,7 @@ object ConnectedComponents {
     * emits (root → member) star edges per partition (duplicate input edges
     * collapse as no-op unions — this replaces the former input distinct).
     * Falls back to a plain distinct for node types without a typed path. */
-  private def contractStars(norm: DataFrame, spark: SparkSession): DataFrame = {
+  private def contractStars(norm: DataFrame): DataFrame = {
     val ranged = norm.repartitionByRange(col("u"), col("v"))
     norm.schema.head.dataType match {
       case LongType =>

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.TextFns
 import graft.model._
-import graft.plans.LinkagePipeline
+import graft.plans.{LinkagePipeline, Materialize}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -485,7 +485,6 @@ object DictTrain {
                            greedy: Boolean = true, limitAny: Boolean = true)
                           (implicit spark: SparkSession): (Dataset[DictEntry], Dataset[DictEntry]) = {
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
     // docs and golds are read by two corpus passes (the tallies, the
     // scoring): a caller that derives them expensively persists them first
     // 1. corpus pass: the mention extraction and every labelled-mention
@@ -550,14 +549,11 @@ object DictTrain {
         limitAnyOf(lcDict, allowed, cidToType)
       } else lcDict
 
-    // the two outputs, persisted and materialized by ONE action (computing
+    // the two outputs, cached and materialized by ONE action (computing
     // the union computes — and therefore caches — every partition of both);
     // one partition each, so `infer`'s limit-probe collect is one job
-    def persisted(es: Seq[DictEntry]): Dataset[DictEntry] =
-      spark.createDataset(spark.sparkContext.parallelize(es, 1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val lcOut = persisted(lcFinal)
-    val ucOut = persisted(ucDict)
+    val Seq(lcOut, ucOut) =
+      Seq(lcFinal, ucDict).map(es => Materialize.cache(spark.createDataset(spark.sparkContext.parallelize(es, 1))))
     lcOut.toDF().union(ucOut.toDF()).count()
     (lcOut, ucOut)
   }

@@ -262,22 +262,12 @@ object DictionaryMatch {
     collectCapped(dict, "dictionary",
       "route beyond-broadcast-scale matching through LinkagePipeline")
 
-  /** Driver collect of a dictionary-scale relation under the same cap —
-    * the cap's one gate: None above it, for callers with an exact
-    * beyond-cap path. r6 limit-probe: limit(cap+1) bounds the driver
-    * collect AT the cap — the former count-then-collect paid a second
-    * full pass over the derivation, and (unlike this form) collected
-    * everything once the count passed (guide §1.2). */
-  private[graft] def collectCapped[T](ds: Dataset[T]): Option[Array[T]] = {
-    val rows = ds.limit((MaxBroadcastDictEntries + 1).toInt).collect()
-    if (rows.length <= MaxBroadcastDictEntries) Some(rows) else None
-  }
-
-  /** [[collectCapped]] for callers without a beyond-cap path: fails with a
-    * named `require` above the cap. */
+  /** Driver collect of a dictionary-scale relation under the same cap
+    * (`ConnectedComponents.collectWithin`'s limit probe), for callers
+    * without a beyond-cap path: fails with a named `require` above it. */
   private[operators] def collectCapped[T](ds: Dataset[T], what: String,
                                           hint: String): Array[T] = {
-    val rows = collectCapped(ds)
+    val rows = ConnectedComponents.collectWithin(ds, MaxBroadcastDictEntries)
     require(rows.nonEmpty,
       s"$what has > $MaxBroadcastDictEntries entries (broadcast cap) — $hint")
     rows.get

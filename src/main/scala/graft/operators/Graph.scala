@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Materialize
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -12,7 +13,7 @@ import scala.collection.mutable.ArrayBuffer
   * (`2nd Place/src/snomed_graph.py:212-256` get_descendants/get_ancestors).
   * Every walk here is one breadth-first search, [[bfs]]: from each root
   * along from→to edges, emitting (root, node, dist) at each node's
-  * first-visit level. The edge relation is checkpointed once and goes
+  * first-visit level. The edge relation is cut once (`Materialize`) and goes
   * through the local-path gate shared with connected components
   * (`ConnectedComponents.localEdges`: ≤ `edgeCap` rows, no null endpoint,
   * one Int, Long or String id type across both endpoints and the roots).
@@ -25,7 +26,7 @@ import scala.collection.mutable.ArrayBuffer
   * Integer never equals a Long), BinaryType ids (an Array[Byte] key
   * compares by identity), null endpoints — runs the exact frontier-join
   * loop: each BFS level one equi-join, left_anti novelty against the
-  * accumulated answer, `localCheckpoint` per round to cut lineage — the
+  * accumulated answer, a `Materialize` cut per round to cut lineage — the
   * same skeleton as the large-star/small-star clustering.
   */
 object Graph {
@@ -123,17 +124,17 @@ object Graph {
     * complete result, so the guard probes one expansion past the bound
     * instead of frontier emptiness.
     *
-    * The edge relation is checkpointed first, so the upstream plan runs
-    * once on either path; the local path frees the checkpoint. */
+    * The edge relation is cut first, so the upstream plan runs once on
+    * either path; the local path frees the cut. */
   private def bfs(edges: DataFrame, roots: Option[DataFrame], maxDepth: Int,
                   guard: Boolean, edgeCap: Long)
                  (implicit spark: SparkSession): DataFrame = {
-    val e = edges.localCheckpoint()
+    val e = Materialize.cut(edges, eager = true)
     val r = roots.map(_.select(col("root")).distinct())
     val rootType = r.map(_.schema(0).dataType)
     ConnectedComponents.localEdges(e, edgeCap, rootType) match {
       case Some((rows, _)) =>
-        ConnectedComponents.freeCheckpoint(e)
+        Materialize.free(e)
         val grouped = new java.util.HashMap[Any, ArrayBuffer[Any]]()
         rows.foreach(row => grouped.computeIfAbsent(row.get(0), _ => new ArrayBuffer[Any]()) += row.get(1))
         val adj = new java.util.HashMap[Any, Array[Any]](math.max(16, grouped.size * 2))
@@ -149,16 +150,13 @@ object Graph {
         }
         val schema = StructType(Seq(StructField("root", rootType.getOrElse(e.schema(0).dataType)),
           StructField("node", e.schema(1).dataType), StructField("dist", IntegerType, nullable = false)))
-        // materialized eagerly, mirroring the loop's per-round checkpoints,
-        // so the guard fires HERE; a task-wrapped IllegalArgumentException
-        // is re-thrown as itself to keep the documented failure type
-        try spark.createDataFrame(out, schema).localCheckpoint(true)
-        catch {
-          case ex: Throwable =>
-            var c: Throwable = ex
-            while (c != null && !c.isInstanceOf[IllegalArgumentException]) c = c.getCause
-            throw Option(c).getOrElse(ex)
-        }
+        // materialized eagerly, mirroring the loop's per-round cuts, so the
+        // guard fires HERE; a task-wrapped IllegalArgumentException is
+        // re-thrown as itself to keep the documented failure type
+        try Materialize.cut(spark.createDataFrame(out, schema), eager = true)
+        catch { case ex: Throwable =>
+          throw Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+            .find(_.isInstanceOf[IllegalArgumentException]).getOrElse(ex) }
       case None =>
         def step(f: DataFrame): DataFrame = f.join(e, f("node") === e("from"))
           .select(f("root"), e("to").as("node"), (f("dist") + 1).as("dist"))
@@ -169,12 +167,12 @@ object Graph {
         }
         val start = r.fold(e.select(col("from").as("root"), col("to").as("node")))(rs =>
           e.join(rs, e("from") === rs("root")).select(col("root"), col("to").as("node")))
-        var frontier = start.withColumn("dist", lit(1)).distinct().localCheckpoint(false)
+        var frontier = Materialize.cut(start.withColumn("dist", lit(1)).distinct(), eager = false)
         var acc = frontier
         var d = 1
         var done = frontier.count() == 0
         while (!done && d < maxDepth) {
-          val next = unvisited(step(frontier).distinct(), acc).localCheckpoint(false)
+          val next = Materialize.cut(unvisited(step(frontier).distinct(), acc), eager = false)
           done = next.count() == 0
           if (!done) {
             acc = acc.union(next)

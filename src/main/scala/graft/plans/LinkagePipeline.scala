@@ -26,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * is that concept's entity; clusters without one are unlinked-mention groups.
   *
   * Two paths, one answer. The term side is dictionary-scale, so [[run]]
-  * collects the dictionary through `DictionaryMatch.collectCapped` (the
-  * gazetteer's cap, `MaxBroadcastDictEntries` = 20M rows), builds the
+  * collects the dictionary under the gazetteer's cap
+  * (`DictionaryMatch.MaxBroadcastDictEntries` = 20M rows), builds the
   * unambiguous terms and their block-key index on the driver
   * ([[TermIndex]]) and broadcasts them (SparkER's broadcast blocking index,
   * EDBT 2019). Spark then runs three corpus-scale steps: the distinct
@@ -62,44 +62,35 @@ object LinkagePipeline {
 
   /** A run's `assignments` (id, component) and its diagnostic frames, built
     * on first read, once per Result and its copies: `scored` (a, b, jw,
-    * lev_ratio, cos, score), `blockKeys` (id, key) mention-level keys,
-    * `keyFreq` (key, freq) skew report and `nodeKeys` (id, key) node-level
-    * keys, keyFreq's input. */
+    * lev_ratio, cos, score), `keyFreq` (key, freq) skew report and
+    * `nodeKeys` (id, key) node-level keys, keyFreq's input. */
   final class Result private[plans] (val assignments: DataFrame, val persisted: Seq[DataFrame],
                                      diagnostics: Diagnostics) {
     def scored: DataFrame = diagnostics.frames.scored
-    def blockKeys: DataFrame = diagnostics.frames.blockKeys
     def keyFreq: DataFrame = diagnostics.frames.keyFreq
     def nodeKeys: DataFrame = diagnostics.frames.nodeKeys
     def copy(persisted: Seq[DataFrame] = persisted): Result = new Result(assignments, persisted, diagnostics)
-    /** Release every DataFrame `run` cached — call once the outputs are
-      * materialized (or when evicting a memoized Result); otherwise lazily
-      * checkpointed blocks linger until GC. Every checkpoint `run` creates
-      * is in `persisted`, every frame the diagnostics materialised in
-      * their `held`, so freeing each frame's own root covers them all. */
-    def release(): Unit = (persisted ++ diagnostics.held).foreach(ConnectedComponents.freeCheckpoint)
+    /** Frees `persisted` (what `run`'s owner handed over) and what the
+      * diagnostics have materialised so far. Call it once the outputs are
+      * materialised or the Result is evicted; else cut blocks wait for GC. */
+    def release(): Unit = (persisted ++ diagnostics.owner.handOff()).foreach(Materialize.free)
   }
 
   object Result {
-    def apply(assignments: DataFrame, scored: DataFrame, blockKeys: DataFrame, keyFreq: DataFrame,
+    def apply(assignments: DataFrame, scored: DataFrame, keyFreq: DataFrame,
               nodeKeys: DataFrame = null, persisted: Seq[DataFrame] = Seq.empty): Result =
-      new Result(assignments, persisted, new Diagnostics(new Frames(scored, blockKeys, keyFreq, nodeKeys)))
+      new Result(assignments, persisted, new Diagnostics(_ => new Frames(scored, keyFreq, nodeKeys)))
   }
 
-  /** The diagnostic frames; `scored` is built on its own first read, and
-    * `held` is what they have materialised so far. */
-  private[plans] final class Frames(scoredF: => DataFrame, val blockKeys: DataFrame, val keyFreq: DataFrame,
-                                    val nodeKeys: DataFrame, heldF: => Seq[DataFrame] = Seq.empty) {
+  /** The diagnostic frames; `scored` is built on its own first read. */
+  private[plans] final class Frames(scoredF: => DataFrame, val keyFreq: DataFrame, val nodeKeys: DataFrame) {
     lazy val scored: DataFrame = scoredF
-    def held: Seq[DataFrame] = heldF
   }
 
-  /** [[Result]]'s diagnostic frames, built by `build` on first read; until
-    * then they hold nothing to free. */
-  private[plans] final class Diagnostics(build: => Frames) {
-    @volatile private var built = false
-    lazy val frames: Frames = { val f = build; built = true; f }
-    def held: Seq[DataFrame] = if (built) frames.held else Seq.empty
+  /** [[Result]]'s diagnostic frames, built on first read through `owner`. */
+  private[plans] final class Diagnostics(build: Materialize.Owner => Frames) {
+    val owner = new Materialize.Owner
+    lazy val frames: Frames = build(owner)
   }
 
   /** Extract mention nodes for labeled spans via typed cogroup — the doc text
@@ -186,7 +177,7 @@ object LinkagePipeline {
     * distribution defeats the cap+salt envelope — the observed failure
     * mode (one reduce partition running 350+ s of single-threaded
     * Levenshtein while 15 threads idle) appears when scoring is fused
-    * with an UN-materialized argmax chain; see `InMemoryCuts`. */
+    * with an UN-materialized argmax chain; see `inMemory`. */
   private[graft] def scoringSpread(pairs: DataFrame)
                                   (implicit spark: SparkSession): DataFrame =
     pairs.repartition(spark.sessionState.conf.numShufflePartitions * 4,
@@ -223,8 +214,8 @@ object LinkagePipeline {
 
   /** Links `mentions` against `dict` (see the object doc for the two
     * paths). Every mention, surface and term gets an assignment; the
-    * `scored`, `blockKeys`, `keyFreq` and `nodeKeys` frames are built by
-    * the operator chain on first read.
+    * `scored`, `keyFreq` and `nodeKeys` frames are built by the operator
+    * chain on first read.
     *
     * Linking edges use BEST-CANDIDATE semantics (the reference's top-k →
     * threshold → pick-best shape, `2nd Place/submission/infer.py:184-232`,
@@ -238,8 +229,8 @@ object LinkagePipeline {
           hotKeyCap: Int = 1000)
          (implicit spark: SparkSession): Result = {
     import spark.implicits._
-    DictionaryMatch.collectCapped(
-      dict.toDF().select(col("mention"), col("concept_id")).as[(String, Long)]) match {
+    ConnectedComponents.collectWithin(dict.toDF().select(col("mention"), col("concept_id")).as[(String, Long)],
+      DictionaryMatch.MaxBroadcastDictEntries) match {
       case Some(terms) => runBroadcast(mentions, dict, TermIndex(terms), weights, hotKeyCap,
         ConnectedComponents.LocalSolveCap)
       case None => runChain(mentions, dict, weights, hotKeyCap)
@@ -249,15 +240,11 @@ object LinkagePipeline {
   /** [[run]] above the dictionary cap: the operator chain, cut in memory. */
   private[graft] def runChain(mentions: Dataset[Mention], dict: Dataset[DictEntry],
                               weights: PairwiseScoring.Weights, hotKeyCap: Int)
-                             (implicit spark: SparkSession): Result = {
-    val cuts = new InMemoryCuts(
-      checkpointed = Set("nodes", "block_keys", "components", "assignments", "mention_keys"))
+                             (implicit spark: SparkSession): Result = Materialize.scope { m =>
     val chain = new Chain(mentions, mentions.toDF().select(col("norm")), dict, weights,
-      hotKeyCap, cuts)
+      hotKeyCap, inMemory(m, checkpointed = Set("nodes", "block_keys", "components", "assignments")))
     val assignments = chain.assignments()
-    val mentionKeys = cuts("mention_keys")(chain.mentionKeys)
-    Result(assignments, chain.scored, mentionKeys, chain.keyFreq, chain.nodeKeys,
-      persisted = cuts.held.toSeq)
+    Result(assignments, chain.scored, chain.keyFreq, chain.nodeKeys, persisted = m.handOff())
   }
 
   /** The dictionary-scale path of [[run]]: the distinct surfaces,
@@ -268,14 +255,13 @@ object LinkagePipeline {
   private[graft] def runBroadcast(mentions: Dataset[Mention], dict: Dataset[DictEntry],
                                   ix: TermIndex, weights: PairwiseScoring.Weights,
                                   hotKeyCap: Int, componentCap: Long)
-                                 (implicit spark: SparkSession): Result = {
+                                 (implicit spark: SparkSession): Result = Materialize.scope { m =>
     import spark.implicits._
     val sc = spark.sparkContext
     val ixB = sc.broadcast(ix)
-    val surfaces = mentions.toDF().select(col("norm"))
+    val surfaces = m.cut(mentions.toDF().select(col("norm"))
       .repartition(spark.sessionState.conf.numShufflePartitions, col("norm"))
-      .distinct().as[String]
-      .localCheckpoint(false)
+      .distinct().as[String], eager = false)
     val hot = {
       val rows = surfaces.flatMap(n => ixB.value.sharedKeys(n)).toDF("key")
         .groupBy(col("key")).agg(count(lit(1))).collect()
@@ -289,16 +275,16 @@ object LinkagePipeline {
     // the argmax edges are the component relation (see the object doc),
     // materialised over every partition first: the gate's limit probe
     // reads partition 0 alone before it reads the rest
-    val components = surfaces.flatMap { n =>
+    val components = m.cut(surfaces.flatMap { n =>
       val t = ixB.value.best(n, hot.value, score)
       if (t < 0) None else Some(("s:" + n, ixB.value.conceptNodes(t)))
-    }.toDF("id", "component").localCheckpoint()
+    }.toDF("id", "component"), eager = true)
     val termConcept = ConnectedComponents.parallelizeLocal(
       ix.ids.indices.map(i => (ix.ids(i), ix.conceptNodes(i)))).toDF("id", "component")
     val collected = ConnectedComponents.collectWithin(components, componentCap)
-    val assignments = (collected match {
+    val assignments = m.cut(collected match {
       case Some(rows) =>
-        ConnectedComponents.freeCheckpoint(components)
+        m.free(components)
         val comp = new java.util.HashMap[String, String](math.max(16, rows.length * 2))
         rows.foreach(r => comp.put(r.getString(0), r.getString(1)))
         val compB = sc.broadcast(comp)
@@ -314,14 +300,12 @@ object LinkagePipeline {
         assignmentsOf(mentions,
           surfaces.select(concat(lit("s:"), col("norm")).as("id")).union(termConcept.select(col("id"))),
           components.union(termConcept))
-    }).localCheckpoint(false)
-    new Result(assignments,
-      Seq(surfaces.toDF(), assignments) ++ (if (collected.isEmpty) Seq(components) else Nil),
-      new Diagnostics({
-        val cuts = new InMemoryCuts(checkpointed = Set.empty)
-        val chain = new Chain(mentions, surfaces.toDF("norm"), dict, weights, hotKeyCap, cuts)
-        new Frames(chain.scored, chain.mentionKeys, chain.keyFreq, chain.nodeKeys, cuts.held.toSeq)
-      }))
+    }, eager = false)
+    new Result(assignments, m.handOff(), new Diagnostics(d => {
+      val chain = new Chain(mentions, surfaces.toDF("norm"), dict, weights, hotKeyCap,
+        inMemory(d, checkpointed = Set.empty))
+      new Frames(chain.scored, chain.keyFreq, chain.nodeKeys)
+    }))
   }
 
   /** The operator chain — nodes → block keys → candidate pairs → scoring
@@ -332,7 +316,7 @@ object LinkagePipeline {
     * so a Result that never reads it caches nothing. The frames are lazy
     * until an action or a cut evaluates them; [[assignments]] runs the
     * clustering. The surface nodes are the distinct `norm`s of `norms`:
-    * the mentions', or [[run]]'s own checkpoint of them, so that the lazy
+    * the mentions', or [[run]]'s own cut of them, so that the lazy
     * frames of its Result read no frame it does not own. */
   private final class Chain(mentions: Dataset[Mention], norms: DataFrame, dict: Dataset[DictEntry],
                             weights: PairwiseScoring.Weights, hotKeyCap: Int, cut: Cut)
@@ -351,13 +335,6 @@ object LinkagePipeline {
       keysN.filter(col("id").startsWith("s:")),
       keysN.filter(col("id").startsWith("t:")), hotKeyCap))
     lazy val scored: DataFrame = cut("scored")(PairwiseScoring.scoreInline(pairs, weights))
-
-    /** Mention-level block keys (the F1 universe / skew diagnostics). */
-    def mentionKeys: DataFrame = mentions.toDF()
-      .select(concat(lit("m:"), col("doc_id"), lit(":"), col("start"), lit(":"), col("end")).as("id"),
-        col("norm").as("mnorm"))
-      .join(keysN.select(col("norm"), col("key")).distinct(), col("mnorm") === col("norm"))
-      .select(col("id"), col("key"))
 
     def assignments(): DataFrame = {
       // STAR CONTRACTION before the transitive closure: the t:→c: edges are
@@ -385,28 +362,18 @@ object LinkagePipeline {
   }
 
   /** A named materialisation boundary of the [[Chain]]. */
-  private trait Cut {
-    def apply(stage: String)(df: => DataFrame): DataFrame
-  }
+  private type Cut = String => (=> DataFrame) => DataFrame
 
-  /** [[run]]'s cuts: a lazy `persist` of "scored" — it pins the scoring
-    * expressions to ONE evaluation per pair; without it the argmax
-    * consumer's filter (`score >= 0.5`) and `min_by` key (`-score`) each
-    * re-derive the score (codegen's common-subexpression elimination does
-    * not span operators), and the 400k-doc ladder job went 105 s →
-    * 440-590 s at local[16] — and a lazy `localCheckpoint` of the
-    * `checkpointed` stages, which several consumers read: same
-    * one-evaluation guarantee, but each presents a LogicalRDD leaf, so the
-    * consumers plan against small trees (the dict_train lesson: the
-    * formatted plan shrank >100x). `held` lists them for `Result.release`. */
-  private final class InMemoryCuts(checkpointed: Set[String]) extends Cut {
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def apply(stage: String)(df: => DataFrame): DataFrame =
-      if (stage == "scored") hold(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else if (checkpointed(stage)) hold(df.localCheckpoint(false))
-      else df
-    private def hold(df: DataFrame): DataFrame = { held += df; df }
-  }
+  /** [[run]]'s cuts, held by `m`: a lazy cache of "scored", which pins the
+    * scoring expressions to ONE evaluation per pair (without it the argmax
+    * filter `score >= 0.5` and `min_by` key `-score` each re-derive the
+    * score, as codegen's CSE does not span operators: the 400k-doc ladder
+    * job went 105 s → 440-590 s at local[16]); and a lazy cut of the
+    * `checkpointed` stages, which several consumers read: one evaluation,
+    * and a LogicalRDD leaf to plan against (the dict_train lesson: the
+    * formatted plan shrank >100x). */
+  private def inMemory(m: Materialize.Owner, checkpointed: Set[String]): Cut = stage => df =>
+    if (stage == "scored") m.cache(df) else if (checkpointed(stage)) m.cut(df, eager = false) else df
 
   /** Mention assignments ∪ node assignments: every node gets its
     * component, or itself when it is in no component. */
@@ -428,12 +395,10 @@ object LinkagePipeline {
                      (implicit spark: SparkSession): (Result, StageRunner) = {
     val runner = new StageRunner(workDir, failAfterStage,
       config = s"weights=$weights,hotKeyCap=$hotKeyCap")
-    val chain = new Chain(mentions, mentions.toDF().select(col("norm")), dict, weights, hotKeyCap, new Cut {
-      def apply(stage: String)(df: => DataFrame): DataFrame = runner.stage(stage)(df)
-    })
+    val chain = new Chain(mentions, mentions.toDF().select(col("norm")), dict, weights, hotKeyCap,
+      stage => df => runner.stage(stage)(df))
     val assignments = chain.assignments()
-    (Result(assignments, chain.scored, chain.mentionKeys, chain.keyFreq, nodeKeys = chain.nodeKeys),
-      runner)
+    (Result(assignments, chain.scored, chain.keyFreq, nodeKeys = chain.nodeKeys), runner)
   }
 
   /** The dictionary side of [[run]]'s broadcast path, built on the driver

@@ -4,9 +4,11 @@ import graft.fixtures.Synth
 import graft.metrics.Metrics
 import graft.model._
 import graft.operators.{DictionaryMatch, OverlapResolve}
-import graft.plans.LinkagePipeline
+import graft.plans.{LinkagePipeline, Materialize}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.util.control.NonFatal
 
 /** Entity-linking pipeline queries over the deterministic synthetic corpus
   * (FIXTURES.md; the driver's parquet tables don't carry interleaved docs, so
@@ -43,7 +45,7 @@ object LinkageQueries {
     spark.range(n.toLong).flatMap(i => Synth.genDoc(i, k)._2)
   }
 
-  /** Session-memoized PERSISTED (docs, gold) pair for a sf dir. Ten driver
+  /** Session-memoized CACHED (docs, gold) pair for a sf dir. Ten driver
     * queries consume the same deterministic corpus; without this every one
     * re-ran `genDoc` over the whole corpus (the measured round-2 regression:
     * the generator is allocator-bound fixture cost, not engine work). The
@@ -55,23 +57,20 @@ object LinkageQueries {
 
   def sharedCorpus(s: SparkSession, dir: String): (Dataset[Doc], Dataset[GoldAnnotation]) = {
     val key = s.sparkContext.hashCode().toString + "|" + dir
-    corpusCache.computeIfAbsent(key, _ => {
-      import org.apache.spark.storage.StorageLevel
-      val n = corpusSize(dir)
-      (docs(s, n).persist(StorageLevel.MEMORY_AND_DISK),
-        gold(s, n).persist(StorageLevel.MEMORY_AND_DISK))
-    })
+    val n = corpusSize(dir)
+    corpusCache.computeIfAbsent(key, _ => (Materialize.cache(docs(s, n)), Materialize.cache(gold(s, n))))
   }
 
   def sharedDocs(s: SparkSession, dir: String): Dataset[Doc] = sharedCorpus(s, dir)._1
   def sharedGold(s: SparkSession, dir: String): Dataset[GoldAnnotation] = sharedCorpus(s, dir)._2
 
   /** Release + forget the memoized corpus frames. */
-  def clearCorpusCache(): Unit = {
-    corpusCache.values.forEach { case (d, g) =>
-      try { d.unpersist(); g.unpersist() } catch { case _: Throwable => }
-    }
-    corpusCache.clear()
+  def clearCorpusCache(): Unit = clear(corpusCache) { case (d, g) => Materialize.free(d); Materialize.free(g) }
+
+  /** Frees and forgets every entry; one whose free fails (a stopped session) is forgotten too. */
+  private def clear[V](cache: java.util.concurrent.ConcurrentHashMap[String, V])(free: V => Unit): Unit = {
+    cache.values.forEach(v => try free(v) catch { case NonFatal(_) => })
+    cache.clear()
   }
 
   def dict(spark: SparkSession, nDocs: Int): Dataset[DictEntry] = {
@@ -96,23 +95,19 @@ object LinkageQueries {
       implicit val sp: SparkSession = s
       val n = corpusSize(dir)
       val (d, g) = sharedCorpus(s, dir)
-      // the mention extraction is checkpointed: it feeds the surfaces and
-      // the mention assignments inside run() and pipelineF1's counts, and
-      // each consumer would otherwise re-run the doc⋈gold cogroup shuffle
-      // (~2 s each at sf0.1). Tracked in Result.persisted so release()
-      // frees it with the rest.
-      val mentions = LinkagePipeline.mentionsFromSpans(d, g)
-        .localCheckpoint(false)
-      val r = LinkagePipeline.run(mentions, dict(s, n))
-      (r.copy(persisted = r.persisted :+ mentions.toDF), mentions)
+      // the mention extraction is cut: the surfaces, the mention
+      // assignments and pipelineF1's counts would each re-run the doc⋈gold
+      // cogroup shuffle (~2 s at sf0.1); the Result's release() frees it
+      Materialize.scope { m =>
+        val mentions = m.cut(LinkagePipeline.mentionsFromSpans(d, g), eager = false)
+        val r = LinkagePipeline.run(mentions, dict(s, n))
+        (r.copy(persisted = r.persisted ++ m.handOff()), mentions)
+      }
     })
   }
 
   /** Release + forget every memoized pipeline Result (honest re-timing). */
-  def clearRunCache(): Unit = {
-    runCache.values.forEach(r => try r._1.release() catch { case _: Throwable => })
-    runCache.clear()
-  }
+  def clearRunCache(): Unit = clear(runCache)(_._1.release())
 
   /** Trained (lc, uc) dictionaries shared by dict_train / dict_train_iou —
     * both train on the identical deterministic inputs, so the second query
@@ -128,7 +123,7 @@ object LinkageQueries {
       val n = corpusSize(dir)
       val k = numConcepts(n)
       val (d, g) = sharedCorpus(s, dir)
-      // trainDictionarySplit returns persisted, eagerly materialized dicts
+      // trainDictionarySplit returns cached, eagerly materialized dicts
       graft.operators.DictTrain.trainDictionarySplit(
         d, g,
         s.createDataset(Synth.concepts(k)), s.createDataset(Synth.descriptions(k)),
@@ -140,12 +135,7 @@ object LinkageQueries {
 
   /** Drop memoized trained dicts (bench re-timing: a second pass must
     * re-pay the training compute, not read this cache). */
-  def clearTrainCache(): Unit = {
-    trainCache.values.forEach { case (lc, uc) =>
-      try { lc.unpersist(); uc.unpersist() } catch { case _: Throwable => }
-    }
-    trainCache.clear()
-  }
+  def clearTrainCache(): Unit = clear(trainCache) { case (lc, uc) => Materialize.free(lc); Materialize.free(uc) }
 
   /** The 1st-place inference path (SURVEY §3.1), both passes: lowercase
     * gazetteer annotate + case-sensitive uc-dict annotate → join_predictions
@@ -1220,18 +1210,17 @@ object LinkageQueries {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         val o = s.read.parquet(s"$dir/orders.parquet").select(col("o_orderkey").as("k"))
-        val base = o.select(col("k"),
+        // r6: materialize once — a, b AND the term-occurrence union all
+        // derive from this windowed frame; uncut, the orders window
+        // recomputed ~5× across the query's actions (guide §5)
+        val base = Materialize.cut(o.select(col("k"),
             concat(lit("d"), col("k") % 50).as("doc_id"),
             (row_number().over(
               Window.partitionBy(col("k") % 50).orderBy(col("k"))) * 40L).as("sa"),
             element_at(array(lit("alpha"), lit("bravo"), lit("charlie")),
               (col("k") % 3).cast("int") + 1).as("term"),
             (col("k") % 4).as("cls"))
-          .withColumn("ea", col("sa") + 4 + col("k") % 5)
-          // r6: materialize once — a, b AND the term-occurrence union all
-          // derive from this windowed frame; un-checkpointed, the orders
-          // window recomputed ~5× across the query's actions (guide §5)
-          .localCheckpoint()
+          .withColumn("ea", col("sa") + 4 + col("k") % 5), eager = true)
         val a = base.select(col("doc_id"), col("sa").cast("int").as("start"),
           col("ea").cast("int").as("end"), col("term"))
         // per class: 0 same span, 1 strictly contained, 2 right-shifted

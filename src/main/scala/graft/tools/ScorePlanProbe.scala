@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Evidence probe for the `scored` persist of the linkage operator chain
-  * (`LinkagePipeline.InMemoryCuts`): with no materialization boundary
+/** Evidence probe for the `scored` cache of the linkage operator chain
+  * (`LinkagePipeline.inMemory`): with no materialization boundary
   * between scoring and the argmax consumer, the optimizer collapses the
   * scoring projection into BOTH the filter
   * (`score >= 0.5`) and the `min_by` sort key (`-score`), so the expensive
@@ -26,7 +26,7 @@ object ScorePlanProbe {
       val scored = graft.operators.PairwiseScoring.scoreInline(pairs)
       val fusedPlan = graft.plans.LinkagePipeline
         .argmaxEdges(scored).queryExecution.executedPlan.toString
-      val cached = scored.persist()
+      val cached = graft.plans.Materialize.cache(scored)
       val cachedPlan = graft.plans.LinkagePipeline
         .argmaxEdges(cached).queryExecution.executedPlan.toString
       def levs(p: String) = "levenshtein".r.findAllIn(p).size

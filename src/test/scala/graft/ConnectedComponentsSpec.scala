@@ -27,6 +27,33 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(m.size == n)
   }
 
+  test("the star loop holds its input cut and last round, whatever the round count") {
+    // the deep chain, its labels scattered over partitions that AQE does
+    // not coalesce, so the contraction cannot collapse it
+    val n = 300
+    def label(i: Int) = f"n${i * 7919 % n}%04d"
+    val edges = (1 until n).map(i => (label(i), label(i - 1))).toDF("a", "b")
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      def components(maxIter: Int) =
+        ConnectedComponents(edges, maxIter, localCap = 0).select("component").distinct().count()
+      assert(components(3) > 1, "three rounds converged: the loop would run fewer than four")
+      // the registry holds RDDs weakly: pin what each job sees, so that only
+      // an explicit free, not GC, takes a round out of it
+      val sc = spark.sparkContext
+      val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+      val pin = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          sc.getPersistentRDDs.values.foreach(pinned.add)
+      }
+      val before = sc.getPersistentRDDs.keySet
+      sc.addSparkListener(pin)
+      val out = try ConnectedComponents(edges, localCap = 0) finally sc.removeSparkListener(pin)
+      assert(out.select("component").distinct().collect().map(_.getString(0)).toSeq == Seq("n0000"))
+      val grown = sc.getPersistentRDDs.keySet -- before
+      assert(pinned.size > 2 && grown.size <= 2, s"the loop left ${grown.size} cut rounds cached")
+    }
+  }
+
   test("self edges and isolated nodes map to themselves") {
     val m = cc(Seq(("a", "a"), ("b", "c")))
     assert(m("a") == "a" && m("b") == "b" && m("c") == "b")

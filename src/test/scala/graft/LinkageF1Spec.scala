@@ -26,8 +26,10 @@ class LinkageF1Spec extends AnyFunSuite with SparkTestBase {
     val mentions = LinkagePipeline.mentionsFromSpans(docs, golds)
     val result = LinkagePipeline.run(mentions, dict)
 
-    // gold pair universe: mention pairs sharing >=1 blocking key
-    val mKeys = result.blockKeys.filter(col("id").startsWith("m:"))
+    // gold pair universe: mention pairs sharing >=1 blocking key of their norms
+    val mKeys = Blocking.blockKeysWithNorm(mentions.toDF().select(
+      concat(lit("m:"), col("doc_id"), lit(":"), col("start"), lit(":"), col("end")).as("id"),
+      col("norm"))).select(col("id"), col("key")).distinct()
     val universe = Blocking.candidatePairs(mKeys)
     val label = goldsSeq.map(g => mid(g) -> g.concept_id).toMap
     val comp = result.assignments.collect().map(r => r.getString(0) -> r.getString(1)).toMap
