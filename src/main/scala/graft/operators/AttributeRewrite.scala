@@ -119,14 +119,12 @@ object AttributeRewrite {
       .select(col("general_id").cast("long"), col("specific_id").cast("long"),
         col("additional_word"))
       .as[(Long, Long, String)]
-    // r6 limit-probe guard: limit(cap+1) bounds the driver collect AT the
-    // cap (an over-size table still fails loudly, and can no longer OOM
-    // the driver the way a passed-count full collect could) while folding
-    // the former count pass into the one collect action (guide §1.2)
-    val rows = attDs.limit((maxBroadcastRows + 1).toInt).collect()
-    require(rows.length <= maxBroadcastRows,
+    // one bounded collect: an over-size table fails loudly without
+    // reaching the driver (guide §1.2)
+    val rows = ConnectedComponents.collectWithin(attDs, maxBroadcastRows)
+    require(rows.nonEmpty,
       s"attribute table has > $maxBroadcastRows rows (broadcast cap)")
-    val att: Map[Long, Seq[(String, Long)]] = rows.toSeq
+    val att: Map[Long, Seq[(String, Long)]] = rows.get.toSeq
       .groupBy(_._1)
       .map { case (g, rs) =>
         g -> rs.sortBy(_._2).map(r => (r._3, r._2))

@@ -3,11 +3,16 @@ package graft.operators
 import graft.plans.Materialize
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
 /** Transitive closure via alternating large-star / small-star (the public
@@ -61,23 +66,68 @@ object ConnectedComponents {
     * r5 contraction already ran an in-memory union-find per PARTITION —
     * when the entire (already-checkpointed) edge set fits the same few-
     * hundred-MB envelope, running it once over all edges removes every
-    * star round, signature action and assignment shuffle. The probe is a
-    * bounded `limit(cap+1)` collect from the input cut, so driver
-    * intake can never exceed the cap; beyond it the loop runs unchanged
-    * (fact-scale edge sets — the 100 TB mention graph — keep the
-    * distributed algorithm). */
+    * star round, signature action and assignment shuffle. The edges reach
+    * the driver through [[collectWithin]], which keeps at most the cap;
+    * beyond it the loop runs unchanged (fact-scale edge sets — the 100 TB
+    * mention graph — keep the distributed algorithm). */
   private[graft] val LocalSolveCap = 1 << 21
 
-  /** The one bounded driver collect, behind the local-solve cap and the
-    * dictionary cap: the rows of `ds` when it has at most `cap` of them,
-    * else None. A `limit(cap + 1)` collect, clamped BEFORE the +1 (cap + 1
-    * overflows at Long.MaxValue). */
+  /** [[collectWithin]] of one relation. */
   private[graft] def collectWithin[T](ds: Dataset[T], cap: Long): Option[Array[T]] =
-    if (cap <= 0) None
-    else {
-      val rows = ds.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length <= cap) Some(rows) else None
+    collectWithin(Seq(ds -> cap)).map(_.head.asInstanceOf[Array[T]])
+
+  /** The one bounded driver collect, behind the local-solve and dictionary
+    * caps: each relation's rows, in order and decoded by its own encoder, if
+    * each has at most its cap (> 0) of them, else None. Driver rows (a
+    * `LocalRelation` plan, e.g. `createDataset`) take no job; the rest take
+    * ONE job over all their partitions, each task shipping ≤ cap + 1 rows
+    * (clamped, so Long.MaxValue does not wrap), the driver keeping rows only
+    * while their relation fits and cancelling the job once one does not. */
+  private[graft] def collectWithin(rels: Seq[(Dataset[_], Long)]): Option[Seq[Array[_]]] = {
+    val driverRows = rels.map(_._1.queryExecution.optimizedPlan match {
+      case lr: LocalRelation => Some(lr.data.toArray)
+      case _ => None
+    })
+    val remote = rels.indices.filter(driverRows(_).isEmpty)
+    if (rels.indices.exists(i => rels(i)._2 <= 0 || driverRows(i).exists(_.length > rels(i)._2))) None
+    else readWithin(remote.map(rels)).map { rows =>
+      val read = remote.zip(rows).toMap
+      rels.indices.map(i => decode(rels(i)._1, driverRows(i).getOrElse(read(i))))
     }
+  }
+
+  /** `rows` of `ds`'s optimized plan, decoded as `ds` decodes them. */
+  private def decode[T](ds: Dataset[T], rows: Array[InternalRow]): Array[T] = {
+    val enc = encoderFor(ds.encoder)
+    rows.map(enc.resolveAndBind(ds.queryExecution.optimizedPlan.output).createDeserializer())(enc.clsTag)
+  }
+
+  /** The rows of `rels` by one job, or None once one passes its cap. */
+  private def readWithin(rels: Seq[(Dataset[_], Long)]): Option[Seq[Array[InternalRow]]] = {
+    val rdds = rels.map { case (ds, cap) =>
+      val ship = math.min(cap, Int.MaxValue - 1L).toInt + 1
+      ds.queryExecution.toRdd.mapPartitions(it => Iterator(it.take(ship).map(_.copy()).toArray))
+    }
+    val firstPart = rdds.scanLeft(0)(_ + _.getNumPartitions)
+    val kept = new Array[Array[InternalRow]](firstPart.last)
+    val overflowed = rdds.nonEmpty && {
+      val sc = rdds.head.sparkContext
+      val received = new Array[Long](rels.size)
+      val overflow = Promise[Unit]()
+      // the handler runs on the scheduler's thread, one call at a time
+      val job = sc.submitJob(sc.union(rdds), (it: Iterator[Array[InternalRow]]) => it.next(), kept.indices,
+        (p: Int, rows: Array[InternalRow]) => {
+          val r = firstPart.lastIndexWhere(_ <= p)
+          received(r) += rows.length
+          if (received(r) <= rels(r)._2) kept(p) = rows else overflow.trySuccess(())
+        }, ())
+      Await.ready(Future.firstCompletedOf(Seq(job, overflow.future))(ExecutionContext.parasitic), Duration.Inf)
+      if (overflow.isCompleted) job.cancel() else job.value.get.get // rethrows a failure
+      overflow.isCompleted
+    }
+    if (overflowed) None
+    else Some(rels.indices.map(r => (firstPart(r) until firstPart(r + 1)).flatMap(kept(_)).toArray))
+  }
 
   /** The one gate of every local graph path (here and in [[Graph]]): the
     * rows of the two-column edge relation `edges`, with the ordering the

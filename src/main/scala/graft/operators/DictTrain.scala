@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.TextFns
 import graft.model._
-import graft.plans.{LinkagePipeline, Materialize}
+import graft.plans.LinkagePipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,24 +23,25 @@ import scala.collection.mutable.ArrayBuffer
   *    span+concept match / −1 otherwise), keys dropped when
   *    correct < θ · incorrect                               [M5/A5/O6, mimic_train.py:66-134,243-263]
   *
-  * Join strategy: `trainDictionarySplit` runs on Spark only what scales
-  * with the CORPUS, as two docs×golds cogroups each followed by one
-  * aggregation: the mention extraction with every labelled tally (harvest
-  * counts, uppercase ratios, gold counts per concept, the doc count), then
-  * the two-pointer scoring with its fused by-note and by-mention tallies
-  * and the blacklist word count. Each of those reductions is
-  * dictionary-scale and is collected once through
-  * `DictionaryMatch.collectCapped`, the
-  * limit-probe cap the gazetteer applies to the trained dictionary itself
-  * (`DictionaryMatch.MaxBroadcastDictEntries`); the terminology tables are
-  * collected under the same cap. Key selection, expansion, the
-  * cond-update anti-join, the uc split and the section limiting then run
-  * as plain Scala over those arrays — every branch of the expansion union
-  * is dictionary-scale, so the work happens below the union, on the
-  * driver, instead of as a chain of small Spark plans. Corpus-scale
-  * relations (docs, golds, mentions, scored predictions) are never
-  * collected. The public step operators keep their relational form; they
-  * are the reference the driver path is pinned against.
+  * Join strategy: `trainDictionarySplit` runs on Spark only what scales with
+  * the CORPUS, as two docs×golds cogroups each followed by one aggregation:
+  * the mention extraction with every labelled tally (harvest counts,
+  * uppercase ratios, gold counts per concept, the doc count), then the
+  * two-pointer scoring with its fused by-note and by-mention tallies and the
+  * blacklist word count. Each of those reductions is dictionary-scale and is
+  * collected once, by one Spark job, through `DictionaryMatch.collectCapped`
+  * under the cap the gazetteer applies to the trained dictionary itself
+  * (`DictionaryMatch.MaxBroadcastDictEntries`); the five terminology tables
+  * together take one more job. Key selection, expansion, the cond-update
+  * anti-join, the uc split and the section limiting then run as plain Scala
+  * over those arrays — every branch of the expansion union is
+  * dictionary-scale, so the work happens below the union, on the driver,
+  * instead of as a chain of small Spark plans. Corpus-scale relations (docs,
+  * golds, mentions, scored predictions) are never collected. The two
+  * dictionaries are returned as driver-resident relations (`createDataset`),
+  * which `infer` reads with no job, and training caches nothing. The public
+  * step operators keep their relational form; they are the reference the
+  * driver path is pinned against.
   */
 object DictTrain {
 
@@ -523,17 +524,17 @@ object DictTrain {
     //    trained on the corpus is never overwritten by a synonym);
     //    case-folded external abbreviations are routed through the same
     //    uc split
-    val descriptionRows = collectTable(descriptions, "descriptions")
-    val term = terminologyEntries(collectTable(concepts, "concepts"), descriptionRows)
-    val ext = externalEntries(
-      collectTable(extConcepts.select(col("ext_id"), col("name"), col("vocabulary"))
-        .as[(Option[Long], String, String)], "external concepts"),
-      collectTable(extMappings.select(col("ext_id_1"), col("ext_id_2"), col("relationship"))
-        .as[(Option[Long], Long, String)], "external mappings"))
+    val tables = DictionaryMatch.collectCapped(Seq(concepts, descriptions,
+      extConcepts.select(col("ext_id"), col("name"), col("vocabulary")).as[(Option[Long], String, String)],
+      extMappings.select(col("ext_id_1"), col("ext_id_2"), col("relationship")).as[(Option[Long], Long, String)],
+      abbr.select(col("abbr"), col("meaning")).as[(String, String)]),
+      "a terminology table", "terminology tables must be dictionary-scale")
+    def table[T](i: Int): Seq[T] = tables(i).asInstanceOf[Array[T]].toSeq
+    val descriptionRows = table[Description](1)
+    val term = terminologyEntries(table(0), descriptionRows)
+    val ext = externalEntries(table(2), table(3))
     val expanded = (core ++ term ++ ext).distinct.flatMap(expansions(_, blacklist)).distinct
-    val withAbbr = expanded ++ abbreviationEntriesOf(
-      collectTable(abbr.select(col("abbr"), col("meaning")).as[(String, String)], "abbreviations"),
-      expanded)
+    val withAbbr = expanded ++ abbreviationEntriesOf(table(4), expanded)
     val coreKeys = core.iterator.map(e => (e.section, e.mention)).toSet
     val full = (core ++ withAbbr.filterNot(e => coreKeys((e.section, e.mention)))).distinct
     val (lcDict, ucExternal) = splitUc(full, ucUpper)
@@ -549,13 +550,9 @@ object DictTrain {
         limitAnyOf(lcDict, allowed, cidToType)
       } else lcDict
 
-    // the two outputs, cached and materialized by ONE action (computing
-    // the union computes — and therefore caches — every partition of both);
-    // one partition each, so `infer`'s limit-probe collect is one job
-    val Seq(lcOut, ucOut) =
-      Seq(lcFinal, ucDict).map(es => Materialize.cache(spark.createDataset(spark.sparkContext.parallelize(es, 1))))
-    lcOut.toDF().union(ucOut.toDF()).count()
-    (lcOut, ucOut)
+    // the two outputs stay on the driver: `infer` decodes them with no
+    // job, and nothing is cached
+    (spark.createDataset(lcFinal), spark.createDataset(ucDict))
   }
 
   // row tags of `labelledTallies` and of `keyScoreTallies`
@@ -654,9 +651,6 @@ object DictTrain {
     (keys.map(r => (r.getString(1), r.getString(2)) -> Array.tabulate(4)(i => r.getLong(i + 3))).toMap,
       words.map(_.getString(2)).toSet)
   }
-
-  private def collectTable[T](ds: Dataset[T], what: String): Array[T] =
-    DictionaryMatch.collectCapped(ds, what, "terminology tables must be dictionary-scale")
 
   // ------------------------------------------------------------------
   // Driver-side steps of `trainDictionarySplit`: each equals the public

@@ -262,12 +262,16 @@ object DictionaryMatch {
     collectCapped(dict, "dictionary",
       "route beyond-broadcast-scale matching through LinkagePipeline")
 
-  /** Driver collect of a dictionary-scale relation under the same cap
-    * (`ConnectedComponents.collectWithin`'s limit probe), for callers
-    * without a beyond-cap path: fails with a named `require` above it. */
   private[operators] def collectCapped[T](ds: Dataset[T], what: String,
-                                          hint: String): Array[T] = {
-    val rows = ConnectedComponents.collectWithin(ds, MaxBroadcastDictEntries)
+                                          hint: String): Array[T] =
+    collectCapped(Seq(ds), what, hint).head.asInstanceOf[Array[T]]
+
+  /** Driver collect of dictionary-scale relations under the same cap, by
+    * one `collectWithin` call, for callers without a beyond-cap path: fails
+    * with a named `require` above it. */
+  private[operators] def collectCapped(dss: Seq[Dataset[_]], what: String,
+                                       hint: String): Seq[Array[_]] = {
+    val rows = ConnectedComponents.collectWithin(dss.map(_ -> MaxBroadcastDictEntries))
     require(rows.nonEmpty,
       s"$what has > $MaxBroadcastDictEntries entries (broadcast cap) — $hint")
     rows.get

@@ -34,8 +34,8 @@ object Graph {
   /** Max edge-relation rows for which the BFS runs over a collected +
     * broadcast adjacency (≈ tens of MB built): terminology/hierarchy
     * graphs fit comfortably; a fact-scale edge set falls back to the
-    * shuffled frontier-join loop. The probe is a bounded `limit(cap + 1)`
-    * collect — driver intake can never exceed the cap. */
+    * shuffled frontier-join loop. The edges reach the driver through
+    * `ConnectedComponents.collectWithin`, which keeps at most the cap. */
   private val BroadcastEdgeCap = 4000000L
 
   private val EmptyChildren = Array.empty[Any]

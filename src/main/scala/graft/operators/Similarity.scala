@@ -74,14 +74,13 @@ object Similarity {
     val cls = classCol.map(col).getOrElse(lit(0))
     val rows = emb.select(col("vec_id"), col("embedding"), cls.cast("int").as("cls"))
       .as[(Long, Seq[Float], Int)]
-    // r6 limit-probe: one bounded collect instead of count-then-collect
-    // (the count paid a second full pass; the limit caps driver intake)
-    val collected = rows.limit((maxBroadcastRows + 1).toInt).collect()
-    require(collected.length <= maxBroadcastRows,
+    // one bounded collect: the gate caps driver intake
+    val collected = ConnectedComponents.collectWithin(rows, maxBroadcastRows)
+    require(collected.nonEmpty,
       s"bruteForceTopK collects the DB to the driver: > cap " +
         s"$maxBroadcastRows rows — use lshTopK for beyond-broadcast-scale databases")
     // per-class DB: the reference holds one matrix per concept class
-    val db: Map[Int, Array[(Long, Array[Float])]] = collected
+    val db: Map[Int, Array[(Long, Array[Float])]] = collected.get
       .groupBy(_._3)
       .map { case (c, rs) => c -> rs.map { case (id, v, _) => (id, v.toArray) }.sortBy(_._1) }
     val dbB = spark.sparkContext.broadcast(db)

@@ -94,15 +94,12 @@ object SpanCompare {
                      (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val termsDs = terms.select(col("term")).distinct().as[String]
-    // r6: limit-probe collect — limit(cap+1) bounds the driver collect AT
-    // the cap (stronger protection than the former count-then-collect,
-    // which collected everything after the count passed) and folds the
-    // guard into the one collect action instead of two passes over the
-    // term derivation (guide §1.2).
+    // one bounded collect: the gate keeps at most the cap (guide §1.2)
     val cap = 20000000
-    val termList = termsDs.limit(cap + 1).collect()
-    require(termList.length <= cap,
+    val collected = ConnectedComponents.collectWithin(termsDs, cap)
+    require(collected.nonEmpty,
       s"termOccurrences broadcasts the term set: > $cap terms")
+    val termList = collected.get
     val maxTokens = if (termList.isEmpty) 1
       else termList.iterator.map(_.count(_ == ' ') + 1).max
     val hashes = spark.sparkContext.broadcast {

@@ -3,7 +3,7 @@ package graft.plans
 import graft.functions.{LongHashSet, LongKeyMap, TextFns}
 import graft.model._
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -107,7 +107,7 @@ object LinkagePipeline {
   def mentionsFromText(docsText: Dataset[(String, String)], spans: Dataset[GoldAnnotation])
                       (implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
-    docsText.groupByKey(_._1).cogroup(spans.groupByKey(_.doc_id)) {
+    byDoc(docsText.toDF("doc_id", "text").as[(String, String)]).cogroup(byDoc(spans)) {
       (_, docIt, spanIt) =>
         docIt.toSeq.headOption match {
           case None => Iterator.empty
@@ -115,6 +115,15 @@ object LinkagePipeline {
         }
     }
   }
+
+  /** `ds` grouped by `doc_id`, one reduce task per shuffle partition: AQE
+    * does not coalesce a repartition by number (it ran this cogroup in one
+    * task), and two sides grouped so are co-partitioned, so their cogroup
+    * adds no exchange. */
+  private def byDoc[V: Encoder](ds: Dataset[V])
+                               (implicit spark: SparkSession): KeyValueGroupedDataset[String, V] =
+    ds.repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+      .groupBy(col("doc_id")).as[String, V](Encoders.STRING, implicitly[Encoder[V]])
 
   /** The per-doc body of [[mentionsFromText]]: one sectioned mention per
     * span, in span order. */
@@ -272,19 +281,16 @@ object LinkagePipeline {
       sc.broadcast(set)
     }
     val score: (String, String) => Double = PairwiseScoring.scorePure(_, _, weights)
-    // the argmax edges are the component relation (see the object doc),
-    // materialised over every partition first: the gate's limit probe
-    // reads partition 0 alone before it reads the rest
-    val components = m.cut(surfaces.flatMap { n =>
+    // the argmax edges are the component relation (see the object doc);
+    // the gate scores every partition in one job
+    val components = surfaces.flatMap { n =>
       val t = ixB.value.best(n, hot.value, score)
       if (t < 0) None else Some(("s:" + n, ixB.value.conceptNodes(t)))
-    }.toDF("id", "component"), eager = true)
+    }.toDF("id", "component")
     val termConcept = ConnectedComponents.parallelizeLocal(
       ix.ids.indices.map(i => (ix.ids(i), ix.conceptNodes(i)))).toDF("id", "component")
-    val collected = ConnectedComponents.collectWithin(components, componentCap)
-    val assignments = m.cut(collected match {
+    val assignments = m.cut(ConnectedComponents.collectWithin(components, componentCap) match {
       case Some(rows) =>
-        m.free(components)
         val comp = new java.util.HashMap[String, String](math.max(16, rows.length * 2))
         rows.foreach(r => comp.put(r.getString(0), r.getString(1)))
         val compB = sc.broadcast(comp)
@@ -297,9 +303,10 @@ object LinkagePipeline {
           .toDF("id", "component")
           .union(termConcept)
       case None =>
+        // above the cap the assignment joins read the rows through a cut
         assignmentsOf(mentions,
           surfaces.select(concat(lit("s:"), col("norm")).as("id")).union(termConcept.select(col("id"))),
-          components.union(termConcept))
+          m.cut(components, eager = false).union(termConcept))
     }, eager = false)
     new Result(assignments, m.handOff(), new Diagnostics(d => {
       val chain = new Chain(mentions, surfaces.toDF("norm"), dict, weights, hotKeyCap,

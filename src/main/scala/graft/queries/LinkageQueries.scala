@@ -123,7 +123,8 @@ object LinkageQueries {
       val n = corpusSize(dir)
       val k = numConcepts(n)
       val (d, g) = sharedCorpus(s, dir)
-      // trainDictionarySplit returns cached, eagerly materialized dicts
+      // trainDictionarySplit returns driver-resident dicts: reading them
+      // again re-runs no training job
       graft.operators.DictTrain.trainDictionarySplit(
         d, g,
         s.createDataset(Synth.concepts(k)), s.createDataset(Synth.descriptions(k)),

@@ -215,6 +215,25 @@ class DictTrainSplitSpec extends AnyFunSuite with SparkTestBase {
     assertSameDicts(trained(docs, golds, bare), reference(docs, golds, bare), "empty ext tables")
   }
 
+  test("training and inference cache nothing; Spark-side tables train the same dicts") {
+    val (docsSeq, goldsSeq) = corpus(0L, 30)
+    val docs = spark.createDataset(docsSeq)
+    val golds = spark.createDataset(goldsSeq)
+    val t = terms()
+    // the same tables as plans, not driver rows: the gate reads them by one job
+    val remote = Terms(t.concepts.repartition(3), t.descriptions.repartition(3),
+      t.ext.repartition(2), t.maps.repartition(2), t.abbr.repartition(2))
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (lc, uc) = DictTrain.trainDictionarySplit(docs, golds, remote.concepts, remote.descriptions,
+      remote.ext, remote.maps, remote.abbr)
+    assert(DictTrain.infer(docs, lc, uc).count() > 0)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"training or inference left persistent RDDs: $left")
+    assert(spark.sharedState.cacheManager.isEmpty, "training or inference registered a cached frame")
+    assertSameDicts((lc.collect().toSet, uc.collect().toSet), trained(docs, golds, t), "Spark-side tables")
+  }
+
   test("driver transcriptions equal the Catalyst operators they replace") {
     val t = terms()
     val concepts = t.concepts.collect().toSeq

@@ -90,7 +90,7 @@ class MaterializeSpec extends AnyFunSuite with SparkTestBase {
     assert(corpus.nonEmpty && !cache.isEmpty)
     val (lc, uc) = LinkageQueries.sharedTrainedDicts(spark, dir)
     val train = grown -- corpus
-    assert(lc.count() > 0 && train.nonEmpty)
+    assert(lc.count() > 0 && train.isEmpty, s"training cached RDDs: $train")
     assert(LinkageQueries.sharedRun(spark, dir).assignments.count() > 0)
     assert((grown -- corpus -- train).nonEmpty)
 
