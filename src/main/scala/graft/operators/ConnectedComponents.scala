@@ -5,7 +5,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -79,27 +80,30 @@ object ConnectedComponents {
   /** The one bounded driver collect, behind the local-solve and dictionary
     * caps: each relation's rows, in order and decoded by its own encoder, if
     * each has at most its cap (> 0) of them, else None. Driver rows (a
-    * `LocalRelation` plan, e.g. `createDataset`) take no job; the rest take
-    * ONE job over all their partitions, each task shipping ≤ cap + 1 rows
-    * (clamped, so Long.MaxValue does not wrap), the driver keeping rows only
-    * while their relation fits and cancelling the job once one does not. */
+    * `LocalRelation` plan, e.g. `createDataset`; the optimizer runs only if
+    * the analyzed plan is none) take no job; the rest take ONE job over all
+    * their partitions, each task shipping ≤ cap + 1 rows (clamped, so
+    * Long.MaxValue does not wrap), the driver keeping rows only while their
+    * relation fits and cancelling the job once one does not. */
   private[graft] def collectWithin(rels: Seq[(Dataset[_], Long)]): Option[Seq[Array[_]]] = {
-    val driverRows = rels.map(_._1.queryExecution.optimizedPlan match {
-      case lr: LocalRelation => Some(lr.data.toArray)
-      case _ => None
-    })
+    def local(p: LogicalPlan) = Some(p).collect { case lr: LocalRelation => lr }
+    val driverRows = rels.map { case (ds, _) =>
+      local(ds.queryExecution.analyzed).orElse(local(ds.queryExecution.optimizedPlan)) }
     val remote = rels.indices.filter(driverRows(_).isEmpty)
-    if (rels.indices.exists(i => rels(i)._2 <= 0 || driverRows(i).exists(_.length > rels(i)._2))) None
+    if (rels.indices.exists(i => rels(i)._2 <= 0 || driverRows(i).exists(_.data.length > rels(i)._2))) None
     else readWithin(remote.map(rels)).map { rows =>
       val read = remote.zip(rows).toMap
-      rels.indices.map(i => decode(rels(i)._1, driverRows(i).getOrElse(read(i))))
+      rels.indices.map { i =>
+        val plan = driverRows(i).getOrElse(rels(i)._1.queryExecution.optimizedPlan)
+        decode(rels(i)._1, plan.output, driverRows(i).fold(read(i))(_.data.toArray))
+      }
     }
   }
 
-  /** `rows` of `ds`'s optimized plan, decoded as `ds` decodes them. */
-  private def decode[T](ds: Dataset[T], rows: Array[InternalRow]): Array[T] = {
+  /** `rows` of a plan with `output`, decoded as `ds` decodes them. */
+  private def decode[T](ds: Dataset[T], output: Seq[Attribute], rows: Array[InternalRow]): Array[T] = {
     val enc = encoderFor(ds.encoder)
-    rows.map(enc.resolveAndBind(ds.queryExecution.optimizedPlan.output).createDeserializer())(enc.clsTag)
+    rows.map(enc.resolveAndBind(output).createDeserializer())(enc.clsTag)
   }
 
   /** The rows of `rels` by one job, or None once one passes its cap. */

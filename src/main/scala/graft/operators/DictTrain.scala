@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.TextFns
 import graft.model._
 import graft.plans.LinkagePipeline
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,16 +23,17 @@ import scala.collection.mutable.ArrayBuffer
   *    span+concept match / −1 otherwise), keys dropped when
   *    correct < θ · incorrect                               [M5/A5/O6, mimic_train.py:66-134,243-263]
   *
-  * Join strategy: `trainDictionarySplit` runs on Spark only what scales with
-  * the CORPUS, as two docs×golds cogroups each followed by one aggregation:
-  * the mention extraction with every labelled tally (harvest counts,
-  * uppercase ratios, gold counts per concept, the doc count), then the
-  * two-pointer scoring with its fused by-note and by-mention tallies and the
-  * blacklist word count. Each of those reductions is dictionary-scale and is
-  * collected once, by one Spark job, through `DictionaryMatch.collectCapped`
-  * under the cap the gazetteer applies to the trained dictionary itself
-  * (`DictionaryMatch.MaxBroadcastDictEntries`); the five terminology tables
-  * together take one more job. Key selection, expansion, the cond-update
+  * Join strategy: `trainDictionarySplit`'s first job collects the golds
+  * (under `LinkagePipeline.LabelsCap`) with the five terminology tables.
+  * Spark then runs only what scales with the CORPUS, as two broadcast-label
+  * passes (each doc row looks up its golds; a docs×golds cogroup above the
+  * cap) each followed by one aggregation: the mention extraction with every
+  * labelled tally, then the two-pointer scoring with its fused by-note and
+  * by-mention tallies and the blacklist word count. Each of those
+  * reductions is dictionary-scale and is collected once, by one Spark job,
+  * through `DictionaryMatch.collectCapped` under the cap the gazetteer
+  * applies to the trained dictionary itself
+  * (`DictionaryMatch.MaxBroadcastDictEntries`). Key selection, expansion, the cond-update
   * anti-join, the uc split and the section limiting then run as plain Scala
   * over those arrays — every branch of the expansion union is
   * dictionary-scale, so the work happens below the union, on the driver,
@@ -250,52 +251,42 @@ object DictTrain {
     * (doc_id, section, mention, score). */
   def scoredPredictions(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
                         dict: Dataset[DictEntry])
-                       (implicit spark: SparkSession): DataFrame = {
+                       (implicit spark: SparkSession): DataFrame =
+    scoredPredictions(docs, golds, dict, LinkagePipeline.LabelsCap)
+
+  private[graft] def scoredPredictions(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
+                                       dict: Dataset[DictEntry], labelsCap: Long)
+                                      (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    scoreDocs(docs, golds, DictionaryMatch.collectDict(dict)) { (docId, _, scored) =>
-      scored.iterator.map { case (a, s) => (docId, a.section, a.dict_entry, s) }
+    val byDoc = ConnectedComponents.collectWithin(golds, labelsCap).map(LinkagePipeline.broadcastSpans)
+    scoreDocs(docs.map(d => (d.doc_id, d.text)), golds, byDoc, DictionaryMatch.collectDict(dict)) {
+      (docId, _, scored) => scored.iterator.map { case (a, s) => (docId, a.section, a.dict_entry, s) }
     }.toDF("doc_id", "section", "mention", "score")
   }
 
-  /** The scoring cogroup behind [[scoredPredictions]], with the per-doc
-    * output left to `emit`: (doc_id, the texts of every doc row with that
-    * id, the first doc's scored predictions). */
-  private def scoreDocs[T: Encoder](docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
-                                    dict: Array[DictEntry])
-                                   (emit: (String, Seq[String], Seq[(Annotation, Int)]) => Iterator[T])
+  /** The scoring pass behind [[scoredPredictions]], with the per-doc output
+    * left to `emit`: (doc_id, the doc row's text, its scored predictions). */
+  private def scoreDocs[T: Encoder](texts: Dataset[(String, String)], golds: Dataset[GoldAnnotation],
+                                    byDoc: Option[LinkagePipeline.SpansByDoc], dict: Array[DictEntry])
+                                   (emit: (String, String, Seq[(Annotation, Int)]) => Iterator[T])
                                    (implicit spark: SparkSession): Dataset[T] = {
-    import spark.implicits._
     // r6 fusion (guide §2.4, the annotateDualResolved precedent): the raw
     // gazetteer probe (the scan kernel `DictionaryMatch.matchDoc`, folded
-    // side only) runs INSIDE the doc×gold cogroup instead of as a
+    // side only) runs INSIDE the broadcast-label pass (`LinkagePipeline.
+    // perDoc`; the doc×gold cogroup above the labels cap) instead of as a
     // separate flatMap whose per-doc output — the WIDEST training
-    // intermediate, the raw overlapping candidates — was immediately
-    // re-shuffled by doc_id for scoring. Output is row-identical: matchDoc
-    // is deterministic per doc and both shapes sort anns/refs the same way
-    // before the two-pointer walk (docs with no golds still score their
-    // predictions −1; gold-only or empty docs still emit nothing). Pinned
-    // by the inputs-only dict_train oracle and DictTrainSpec.
+    // intermediate, the raw overlapping candidates — would be shuffled by
+    // doc_id for scoring. Docs with no golds still score their predictions
+    // −1; gold-only doc ids emit nothing. Pinned by the inputs-only
+    // dict_train oracle, DictTrainSpec and LabelsBroadcastSpec.
     val dictB = DictionaryMatch.broadcastDict(dict)
-    docTexts(docs).cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
-      val texts = dIt.map(_._2).toSeq
-      texts.headOption match {
-        case None => Iterator.empty
-        case Some(text) =>
-          val anns = DictionaryMatch
-            .matchDoc(docId, text, maxTokens = 6, minStart = 100,
-              folded = dictB.value, preserved = null)
-            .toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
-          val refs = gIt.toIndexedSeq.sortBy(r => (r.start, r.end, r.concept_id))
-          emit(docId, texts, scoreDocPredictions(refs, anns))
-      }
+    LinkagePipeline.perDoc(texts, golds, byDoc) { (docId, text, spans) =>
+      val anns = DictionaryMatch
+        .matchDoc(docId, text, maxTokens = 6, minStart = 100, folded = dictB.value, preserved = null)
+        .toIndexedSeq.sortBy(a => (a.start, a.end, a.concept_id))
+      val refs = spans.sortBy(r => (r.start, r.end, r.concept_id))
+      emit(docId, text, scoreDocPredictions(refs, anns))
     }
-  }
-
-  /** (doc_id, text) grouped by doc_id — the doc side of every training
-    * cogroup, one plan shape so its generated code is shared. */
-  private def docTexts(docs: Dataset[Doc])(implicit spark: SparkSession) = {
-    import spark.implicits._
-    docs.map(d => (d.doc_id, d.text)).groupByKey(_._1)
   }
 
   /** scores_by_note counts (`mimic_train.py:351-359`): per (key, note) at
@@ -484,22 +475,46 @@ object DictTrain {
                            extConcepts: DataFrame, extMappings: DataFrame, abbr: DataFrame,
                            thAny: Double = 0.3, thDict: Double = 0.2,
                            greedy: Boolean = true, limitAny: Boolean = true)
-                          (implicit spark: SparkSession): (Dataset[DictEntry], Dataset[DictEntry]) = {
+                          (implicit spark: SparkSession): (Dataset[DictEntry], Dataset[DictEntry]) =
+    trainDictionarySplit(docs, golds, concepts, descriptions, extConcepts, extMappings, abbr,
+      thAny, thDict, greedy, limitAny, LinkagePipeline.LabelsCap)
+
+  private[graft] def trainDictionarySplit(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
+                                          concepts: Dataset[Concept], descriptions: Dataset[Description],
+                                          extConcepts: DataFrame, extMappings: DataFrame, abbr: DataFrame,
+                                          thAny: Double, thDict: Double, greedy: Boolean, limitAny: Boolean,
+                                          labelsCap: Long)
+                                         (implicit spark: SparkSession): (Dataset[DictEntry], Dataset[DictEntry]) = {
     import spark.implicits._
-    // docs and golds are read by two corpus passes (the tallies, the
-    // scoring): a caller that derives them expensively persists them first
-    // 1. corpus pass: the mention extraction and every labelled-mention
-    //    tally in one cogroup + aggregation
-    val tallies = labelledTallies(docs, golds)
+    // 1. one job reads the golds (broadcast below the labels cap, grouped
+    //    by doc id) and the five terminology tables
+    val tableDss = Seq(concepts, descriptions,
+      extConcepts.select(col("ext_id"), col("name"), col("vocabulary")).as[(Option[Long], String, String)],
+      extMappings.select(col("ext_id_1"), col("ext_id_2"), col("relationship")).as[(Option[Long], Long, String)],
+      abbr.select(col("abbr"), col("meaning")).as[(String, String)])
+    val (goldRows, tables) = ConnectedComponents.collectWithin(
+        (golds -> labelsCap) +: tableDss.map(_ -> DictionaryMatch.MaxBroadcastDictEntries)) match {
+      case Some(rows) => (Some(rows.head.asInstanceOf[Array[GoldAnnotation]]), rows.tail)
+      case None => (None, DictionaryMatch.collectCapped(tableDss,
+        "a terminology table", "terminology tables must be dictionary-scale"))
+    }
+    val byDoc = goldRows.map(LinkagePipeline.broadcastSpans)
+    // docs are read by two corpus passes (golds too above the labels cap):
+    // a caller that derives them expensively persists them first
+    val texts = docs.map(d => (d.doc_id, d.text))
+    // 2. corpus pass: the mention extraction and every labelled-mention
+    //    tally in one per-doc pass + aggregation
+    val tallies = DictionaryMatch.collectCapped(labelledTallies(texts, golds, byDoc),
+      "training tallies", "the distinct labelled keys exceed the dictionary cap")
     val harvestCounts = tallies.filter(_.getInt(0) == HarvestTag)
       .map(r => (r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
     val ucUpper = tallies.filter(_.getInt(0) == UcTag)
       .map(r => r.getString(2) -> r.getString(1)).toMap
-    val goldCounts = tallies.filter(_.getInt(0) == GoldTag)
-      .map(r => r.getLong(3) -> r.getLong(4)).toMap
+    val goldCounts = goldRows.map(_.groupBy(_.concept_id).map { case (c, gs) => c -> gs.length.toLong })
+      .getOrElse(tallies.filter(_.getInt(0) == GoldTag).map(r => r.getLong(3) -> r.getLong(4)).toMap)
     val nDocs = tallies.find(_.getInt(0) == DocTag).map(_.getLong(4)).getOrElse(0L)
 
-    // 2. harvest + uc split FIRST (vs the reference's post-scoring
+    // 3. harvest + uc split FIRST (vs the reference's post-scoring
     //    extract_uppercase_mentions): an uppercase-only key scored by the
     //    case-FOLDED matcher drowns in its lowercase homographs ("THE" vs
     //    "the") and gets pruned before the split could rescue it — which
@@ -509,26 +524,26 @@ object DictTrain {
     val harvested = modalEntries(harvestCounts)
     val (lcHarvested, ucHarvested) = splitUc(harvested, ucUpper)
 
-    // 3. corpus pass: two-pointer scoring of the lowercase harvest (and
+    // 4. corpus pass: two-pointer scoring of the lowercase harvest (and
     //    the permutation blacklist: corpus words above ~the reference's
     //    blacklist_thresh=2000-over-150-notes rate, ≈13 per note), then
     //    naive by-note removal + greedy per-concept refinement
-    val (scores, blacklist) = keyScoreTallies(docs, golds, lcHarvested, 13L * nDocs)
+    val (words, keyRows) = DictionaryMatch.collectCapped(
+      keyScoreTallies(texts, golds, byDoc, lcHarvested, 13L * nDocs),
+      "key score tallies", "the scored keys exceed the dictionary cap").partition(_.getInt(0) == WordTag)
+    val scores = keyRows
+      .map(r => (r.getString(1), r.getString(2)) -> Array.tabulate(4)(i => r.getLong(i + 3))).toMap
+    val blacklist = words.map(_.getString(2)).toSet
     val naive = lcHarvested.filter { e =>
       scores.get((e.section, e.mention))
         .forall(s => !naiveRemove(s(0), s(1), e.section, doubleThr = false, thAny, thDict))
     }
     val core = if (greedy) greedyKeep(naive, scores, goldCounts, thAny, thDict) else naive
 
-    // 4. externals added COND-UPDATE style (`cond_update`: a key already
+    // 5. externals added COND-UPDATE style (`cond_update`: a key already
     //    trained on the corpus is never overwritten by a synonym);
     //    case-folded external abbreviations are routed through the same
     //    uc split
-    val tables = DictionaryMatch.collectCapped(Seq(concepts, descriptions,
-      extConcepts.select(col("ext_id"), col("name"), col("vocabulary")).as[(Option[Long], String, String)],
-      extMappings.select(col("ext_id_1"), col("ext_id_2"), col("relationship")).as[(Option[Long], Long, String)],
-      abbr.select(col("abbr"), col("meaning")).as[(String, String)]),
-      "a terminology table", "terminology tables must be dictionary-scale")
     def table[T](i: Int): Seq[T] = tables(i).asInstanceOf[Array[T]].toSeq
     val descriptionRows = table[Description](1)
     val term = terminologyEntries(table(0), descriptionRows)
@@ -540,7 +555,7 @@ object DictTrain {
     val (lcDict, ucExternal) = splitUc(full, ucUpper)
     val ucDict = (ucHarvested ++ ucExternal).distinct
 
-    // 5. "any" keys narrowed to sections observed for the concept's type
+    // 6. "any" keys narrowed to sections observed for the concept's type
     val lcFinal =
       if (limitAny) {
         val cidToType = conceptTypesOf(descriptionRows)
@@ -564,69 +579,62 @@ object DictTrain {
   private val WordTag = 1
 
   /** Every dictionary-scale tally training needs from the labelled
-    * mentions, by ONE cogroup of docs and golds (each doc's mention
-    * extraction, `LinkagePipeline.docMentions`, happens in it) and one
-    * aggregation, collected under the driver cap. Rows (tag, section, key,
-    * concept_id, n):
+    * mentions, by ONE per-doc pass (`LinkagePipeline.perDoc`, each doc
+    * row's `LinkagePipeline.docMentions` in it) and one aggregation, to be
+    * collected under the driver cap. Rows (tag, section, key, concept_id, n):
     *  - HarvestTag: (section, norm, concept) counts over mentions ⋈ golds
     *    on (doc_id, start, end) — the input of `dictFromMentions`' modal
     *    rule and, projected to (concept, section), of `allowedSectionsOf`;
     *  - UcTag: one row per norm whose `uppercaseMentionsOf` ratio is above
     *    0.99, `section` carrying Catalyst's own `upper(norm)`, so the
     *    driver never re-implements the case mapping;
-    *  - GoldTag: gold rows per concept (`pruneGreedyKeys`' n_gold);
-    *  - DocTag: the doc row count (the blacklist's per-doc rate). */
-  private def labelledTallies(docs: Dataset[Doc], golds: Dataset[GoldAnnotation])
-                             (implicit spark: SparkSession): Array[Row] = {
+    *  - DocTag: the doc row count (the blacklist's per-doc rate);
+    *  - GoldTag, without `byDoc` only: gold rows per concept
+    *    (`pruneGreedyKeys`' n_gold; else counted from the collected golds). */
+  private[graft] def labelledTallies(texts: Dataset[(String, String)], golds: Dataset[GoldAnnotation],
+                                     byDoc: Option[LinkagePipeline.SpansByDoc])
+                                    (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val perDoc = docTexts(docs).cogroup(golds.groupByKey(_.doc_id)) { (docId, dIt, gIt) =>
-      val texts = dIt.map(_._2).toSeq
-      val spans = gIt.toSeq
-      val out = ArrayBuffer.empty[(Int, String, String, String, Long, Long)]
-      if (texts.nonEmpty) out += ((DocTag, null, null, null, 0L, texts.size.toLong))
-      spans.groupBy(_.concept_id).foreach { case (c, gs) =>
-        out += ((GoldTag, null, null, null, c, gs.size.toLong))
+    val perDoc = LinkagePipeline.perDoc(texts, golds, byDoc) { (docId, text, spans) =>
+      val out = ArrayBuffer[(Int, String, String, String, Long, Long)]((DocTag, null, null, null, 0L, 1L))
+      val ms = LinkagePipeline.docMentions(docId, text, spans.iterator).toSeq
+      ms.groupBy(m => (m.norm, m.surface)).foreach { case ((norm, surface), g) =>
+        out += ((UcTag, null, norm, surface, 0L, g.size.toLong))
       }
-      texts.headOption.foreach { text =>
-        val ms = LinkagePipeline.docMentions(docId, text, spans.iterator).toSeq
-        ms.groupBy(m => (m.norm, m.surface)).foreach { case ((norm, surface), g) =>
-          out += ((UcTag, null, norm, surface, 0L, g.size.toLong))
-        }
-        // the labelled join: a mention pairs with every gold on its span
-        // (duplicate gold spans multiply); a null doc_id never joins
-        if (docId != null) {
-          val onSpan = spans.groupBy(g => (g.start, g.end))
-          ms.flatMap(m => onSpan((m.start, m.end)).map(g => (m.section, m.norm, g.concept_id)))
-            .groupBy(identity).foreach { case ((section, norm, c), g) =>
-              out += ((HarvestTag, section, norm, null, c, g.size.toLong))
-            }
-        }
+      // the labelled join: a mention pairs with every gold on its span
+      // (duplicate gold spans multiply); a null doc_id never joins
+      if (docId != null) {
+        val onSpan = spans.groupBy(g => (g.start, g.end))
+        ms.flatMap(m => onSpan((m.start, m.end)).map(g => (m.section, m.norm, g.concept_id)))
+          .groupBy(identity).foreach { case ((section, norm, c), g) =>
+            out += ((HarvestTag, section, norm, null, c, g.size.toLong))
+          }
       }
       out.iterator
-    }.toDF("tag", "section", "key", "surface", "concept_id", "n")
-    DictionaryMatch.collectCapped(
-      perDoc.groupBy(col("tag"), col("section"), col("key"), col("concept_id"))
-        .agg(sum(col("n")).as("n"),
-          sum(when(col("surface") === upper(col("surface")), col("n")).otherwise(0L)).as("uc"))
-        .filter(col("tag") =!= UcTag || col("uc") / col("n") > 0.99)
-        .select(col("tag"),
-          when(col("tag") === UcTag, upper(col("key"))).otherwise(col("section")),
-          col("key"), col("concept_id"), col("n")),
-      "training tallies", "the distinct labelled keys exceed the dictionary cap")
+    }
+    val rows = if (byDoc.isDefined) perDoc
+      else perDoc.union(golds.map(g => (GoldTag, null: String, null: String, null: String, g.concept_id, 1L)))
+    rows.toDF("tag", "section", "key", "surface", "concept_id", "n")
+      .groupBy(col("tag"), col("section"), col("key"), col("concept_id"))
+      .agg(sum(col("n")).as("n"),
+        sum(when(col("surface") === upper(col("surface")), col("n")).otherwise(0L)).as("uc"))
+      .filter(col("tag") =!= UcTag || col("uc") / col("n") > 0.99)
+      .select(col("tag"),
+        when(col("tag") === UcTag, upper(col("key"))).otherwise(col("section")),
+        col("key"), col("concept_id"), col("n"))
   }
 
   /** The scoring pass: `keyScoresByNote` and `keyScoresByMention` in one
-    * tally, (section, mention) → [notes with a +1, notes with a −1, +1
-    * rows, −1 rows] — a note is a scoring-cogroup key, so each doc's
-    * predictions are pre-tallied inside the cogroup and one exchange
-    * follows it — plus `wordBlacklist(docs, wordCutoff)` from the same doc
-    * texts. */
-  private def keyScoreTallies(docs: Dataset[Doc], golds: Dataset[GoldAnnotation],
-                              dict: Seq[DictEntry], wordCutoff: Long)
-                             (implicit spark: SparkSession)
-      : (Map[(String, String), Array[Long]], Set[String]) = {
+    * tally, (tag, section, mention, notes with a +1, notes with a −1, +1
+    * rows, −1 rows) — a note is a doc row, so each doc's predictions are
+    * pre-tallied inside the per-doc pass and one exchange follows it — plus
+    * `wordBlacklist(docs, wordCutoff)` from the same doc texts. */
+  private[graft] def keyScoreTallies(texts: Dataset[(String, String)], golds: Dataset[GoldAnnotation],
+                                     byDoc: Option[LinkagePipeline.SpansByDoc],
+                                     dict: Seq[DictEntry], wordCutoff: Long)
+                                    (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val perDoc = scoreDocs(docs, golds, dict.toArray) { (_, texts, scored) =>
+    scoreDocs(texts, golds, byDoc, dict.toArray) { (_, text, scored) =>
       val out = ArrayBuffer.empty[(Int, String, String, Long, Long, Long, Long)]
       val t = new java.util.HashMap[(String, String), Array[Long]]()
       scored.foreach { case (a, s) =>
@@ -636,20 +644,15 @@ object DictTrain {
       t.forEach { (k, c) =>
         out += ((ScoreTag, k._1, k._2, math.min(c(0), 1L), math.min(c(1), 1L), c(0), c(1)))
       }
-      texts.iterator.flatMap(TextFns.normalize(_).split(' ')).filter(_.nonEmpty).toSeq
+      TextFns.normalize(text).split(' ').filter(_.nonEmpty)
         .groupBy(identity).foreach { case (w, ws) =>
-          out += ((WordTag, null, w, ws.size.toLong, 0L, 0L, 0L))
+          out += ((WordTag, null, w, ws.length.toLong, 0L, 0L, 0L))
         }
       out.iterator
     }.toDF("tag", "section", "key", "a", "b", "c", "d")
-    val rows = DictionaryMatch.collectCapped(
-      perDoc.groupBy(col("tag"), col("section"), col("key"))
-        .agg(sum(col("a")).as("a"), sum(col("b")), sum(col("c")), sum(col("d")))
-        .filter(col("tag") =!= WordTag || col("a") > wordCutoff),
-      "key score tallies", "the scored keys exceed the dictionary cap")
-    val (words, keys) = rows.partition(_.getInt(0) == WordTag)
-    (keys.map(r => (r.getString(1), r.getString(2)) -> Array.tabulate(4)(i => r.getLong(i + 3))).toMap,
-      words.map(_.getString(2)).toSet)
+      .groupBy(col("tag"), col("section"), col("key"))
+      .agg(sum(col("a")).as("a"), sum(col("b")), sum(col("c")), sum(col("d")))
+      .filter(col("tag") =!= WordTag || col("a") > wordCutoff)
   }
 
   // ------------------------------------------------------------------

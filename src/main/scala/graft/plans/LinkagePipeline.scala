@@ -3,7 +3,8 @@ package graft.plans
 import graft.functions.{LongHashSet, LongKeyMap, TextFns}
 import graft.model._
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -93,8 +94,8 @@ object LinkagePipeline {
     lazy val frames: Frames = build(owner)
   }
 
-  /** Extract mention nodes for labeled spans via typed cogroup — the doc text
-    * is never replicated per mention (one pass per doc, J5 semantics with the
+  /** Extract mention nodes for labeled spans — the doc text is never
+    * replicated per mention (one pass per doc, J5 semantics with the
     * substring done doc-side). */
   def mentionsFromSpans(docs: Dataset[Doc], spans: Dataset[GoldAnnotation])
                        (implicit spark: SparkSession): Dataset[Mention] = {
@@ -103,27 +104,49 @@ object LinkagePipeline {
   }
 
   /** Same extraction over a flat (doc_id, text) table — the Iceberg/parquet
-    * doc-table scan shape. */
+    * doc-table scan shape — as a broadcast-label pass ([[perDoc]]). */
   def mentionsFromText(docsText: Dataset[(String, String)], spans: Dataset[GoldAnnotation])
-                      (implicit spark: SparkSession): Dataset[Mention] = {
+                      (implicit spark: SparkSession): Dataset[Mention] =
+    mentionsFromText(docsText, spans, LabelsCap)
+
+  private[graft] def mentionsFromText(docsText: Dataset[(String, String)], spans: Dataset[GoldAnnotation],
+                                      labelsCap: Long)(implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
-    byDoc(docsText.toDF("doc_id", "text").as[(String, String)]).cogroup(byDoc(spans)) {
-      (_, docIt, spanIt) =>
-        docIt.toSeq.headOption match {
-          case None => Iterator.empty
-          case Some((docId, text)) => docMentions(docId, text, spanIt)
-        }
-    }
+    perDoc(docsText, spans, ConnectedComponents.collectWithin(spans, labelsCap).map(broadcastSpans))(
+      (docId, text, ss) => docMentions(docId, text, ss.iterator))
   }
 
-  /** `ds` grouped by `doc_id`, one reduce task per shuffle partition: AQE
-    * does not coalesce a repartition by number (it ran this cogroup in one
-    * task), and two sides grouped so are co-partitioned, so their cogroup
-    * adds no exchange. */
-  private def byDoc[V: Encoder](ds: Dataset[V])
-                               (implicit spark: SparkSession): KeyValueGroupedDataset[String, V] =
-    ds.repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-      .groupBy(col("doc_id")).as[String, V](Encoders.STRING, implicitly[Encoder[V]])
+  /** Max gold spans broadcast grouped by doc id ([[perDoc]]): labels are
+    * labelled-scale (the reference trains on 204 notes), docs corpus-scale.
+    * A span measured 74–76 B so grouped (`SizeEstimator`, Synth golds of
+    * 40–4,000 docs, ~6 per doc, each doc id its own string as collected):
+    * ≈ 0.16 GB at the cap, plus one copy per executor. */
+  private[graft] val LabelsCap: Long = 1L << 21
+
+  private[graft] type SpansByDoc = Broadcast[Map[String, IndexedSeq[GoldAnnotation]]]
+
+  private[graft] def broadcastSpans(golds: Array[GoldAnnotation])(implicit spark: SparkSession): SpansByDoc =
+    spark.sparkContext.broadcast(golds.toIndexedSeq.groupBy(_.doc_id))
+
+  /** The per-doc kernel of every doc⋈gold pass: `f(doc_id, text, spans)`
+    * once per doc row — each row is its own document — with every span of
+    * its doc id (none if it has none). Spans whose doc id has no doc row
+    * reach no call; a null doc id meets the null-id spans. With `byDoc` it
+    * is a narrow pass over the docs; without it (above the labels cap) the
+    * exact fallback cogroups docs and spans by doc id. */
+  private[graft] def perDoc[T: Encoder](docs: Dataset[(String, String)], spans: Dataset[GoldAnnotation],
+                                        byDoc: Option[SpansByDoc])
+                                       (f: (String, String, IndexedSeq[GoldAnnotation]) => Iterator[T])
+                                       (implicit spark: SparkSession): Dataset[T] = {
+    import spark.implicits._
+    byDoc match {
+      case Some(b) => docs.flatMap(d => f(d._1, d._2, b.value.getOrElse(d._1, IndexedSeq.empty)))
+      case None => docs.groupByKey(_._1).cogroup(spans.groupByKey(_.doc_id)) { (docId, dIt, sIt) =>
+        val ss = sIt.toIndexedSeq
+        dIt.flatMap(d => f(docId, d._2, ss))
+      }
+    }
+  }
 
   /** The per-doc body of [[mentionsFromText]]: one sectioned mention per
     * span, in span order. */

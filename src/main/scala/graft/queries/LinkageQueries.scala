@@ -96,8 +96,8 @@ object LinkageQueries {
       val n = corpusSize(dir)
       val (d, g) = sharedCorpus(s, dir)
       // the mention extraction is cut: the surfaces, the mention
-      // assignments and pipelineF1's counts would each re-run the doc⋈gold
-      // cogroup shuffle (~2 s at sf0.1); the Result's release() frees it
+      // assignments and pipelineF1's counts would each re-run the doc pass
+      // that meets each doc with its gold spans; the Result's release() frees it
       Materialize.scope { m =>
         val mentions = m.cut(LinkagePipeline.mentionsFromSpans(d, g), eager = false)
         val r = LinkagePipeline.run(mentions, dict(s, n))

@@ -4,6 +4,7 @@ import graft.operators.ConnectedComponents.collectWithin
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,6 +60,19 @@ class CollectWithinSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.toSeq) == Some(Seq(3, 1, 2)) && jobs.isEmpty)
     assert(jobsOf(collectWithin(local, 2))._2.isEmpty)
     assert(collectWithin(local, 2).isEmpty)
+  }
+
+  test("driver rows are read from the analyzed plan; any other plan is optimized first") {
+    def optimized(ds: Dataset[_]) = ds.queryExecution.tracker.phases.contains(QueryPlanningTracker.OPTIMIZATION)
+    val local = Seq(3, 1, 2).toDS()
+    val (rows, jobs) = jobsOf(collectWithin(local, 3))
+    assert(rows.map(_.toSeq) == Some(Seq(3, 1, 2)) && jobs.isEmpty)
+    assert(!optimized(local), "the optimizer ran over a LocalRelation")
+    // a filter over driver rows is no LocalRelation until the optimizer folds it
+    val filtered = Seq(3, 1, 2).toDS().filter($"value" > 1)
+    assert(!filtered.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    val (kept, filterJobs) = jobsOf(collectWithin(filtered, 3))
+    assert(kept.map(_.toSeq) == Some(Seq(3, 2)) && filterJobs.isEmpty && optimized(filtered))
   }
 
   test("the cap: crossed past the first partition, exactly met, Long.MaxValue, empty input") {

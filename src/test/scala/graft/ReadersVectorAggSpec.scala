@@ -57,6 +57,14 @@ class ReadersVectorAggSpec extends AnyFunSuite with SparkTestBase {
     assert(back.toSeq == docsSeq.sortBy(_.doc_id))
   }
 
+  test("dictionary parquet round-trip (S5)") {
+    val dir = Files.createTempDirectory("graft_dict").toString
+    val dict = Synth.dictionary(40) ++ Synth.ucDictionary(40)
+    Readers.writeDict(spark.createDataset(dict), s"$dir/dict")
+    assert(Readers.readDict(spark, s"$dir/dict").collect().sortBy(e => (e.section, e.mention, e.concept_id)).toSeq ==
+      dict.sortBy(e => (e.section, e.mention, e.concept_id)))
+  }
+
   test("submission sink writes exactly the four contract columns (S6)") {
     val dir = Files.createTempDirectory("graft_sub").toString
     val pred = Seq(("d1", 10, 20, 42L)).toDF("doc_id", "start", "end", "concept_id")
