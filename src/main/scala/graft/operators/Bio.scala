@@ -31,7 +31,8 @@ object Bio {
 
   /** Per-doc cogroup scaffold shared by both directions: doc text keyed by
     * id against a per-doc row group, `f(docId, text, rows)` applied once
-    * per doc that exists. */
+    * per doc row — each row is its own document, as in
+    * `LinkagePipeline.perDoc` — with every row of its doc id. */
   private def perDocCogroup[R: org.apache.spark.sql.Encoder, O: org.apache.spark.sql.Encoder](
       docs: Dataset[Doc], rows: Dataset[R])(key: R => String)(
       f: (String, String, Iterator[R]) => IterableOnce[O])
@@ -40,9 +41,8 @@ object Bio {
     docs.map(d => (d.doc_id, d.text))
       .groupByKey(_._1)
       .cogroup(rows.groupByKey(key)) { (docId, ds, rs) =>
-        ds.toSeq.headOption.iterator.flatMap { case (_, text) =>
-          f(docId, text, rs).iterator
-        }
+        val group = rs.toIndexedSeq
+        ds.flatMap { case (_, text) => f(docId, text, group.iterator).iterator }
       }
   }
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{LongHashSet, LongKeyMap, TextFns}
+import graft.functions.{LongHashSet, TextFns}
 import graft.model._
 import graft.operators._
 import org.apache.spark.broadcast.Broadcast
@@ -32,39 +32,47 @@ import org.apache.spark.unsafe.types.UTF8String
   * unambiguous terms and their block-key index on the driver
   * ([[TermIndex]]) and broadcasts them (SparkER's broadcast blocking index,
   * EDBT 2019). Spark then runs three corpus-scale steps: the distinct
-  * surfaces; one aggregation that counts the surface side's rows of the
-  * index's keys for the hot-key cap; and one narrow pass in which each
-  * surface looks up its candidate terms, applies the length slack, scores
-  * them and emits its argmax edge straight to the concept node. On this
+  * surfaces, cut (the one materialisation of this path); one narrow pass
+  * that counts, per partition, the surface side's rows of the index's
+  * keys for the hot-key cap, summed on the driver; and one narrow pass in
+  * which each surface looks up its candidate terms, applies the length
+  * slack, scores them and emits its argmax edge straight to the concept
+  * node. On this
   * path the transitive clustering is a closed form: the edges are a
   * function from surfaces to concepts, so each component is a star
   * labelled by its concept node ("c:" < "s:"; a surface with no edge is
   * its own component), and the edge rows are the component relation.
   * While they fit `ConnectedComponents.LocalSolveCap` (2M rows) they are
-  * collected, and the mention, surface and term assignments are lookups
-  * in them. Above either cap runs today's exact path: above the
+  * collected, and the mention, surface and term assignments are lazy
+  * lookups in them. Above either cap runs an exact path: above the
   * dictionary cap the operator chain ([[Chain]]: shuffled blocking,
   * scoring, argmax, contraction join, `ConnectedComponents` and
-  * assignment joins), above the component cap the assignment joins. The
+  * assignment joins), above the component cap a `groupBy` hot-key count
+  * and the assignment joins, whose input and output are cut. The
   * chain is also the body of [[runCheckpointed]], and the reference
   * `LinkBroadcastSpec` pins [[run]] to; a [[Result]]'s diagnostic frames
   * are built from the chain on first read.
   *
-  * Driver memory on the broadcast path: the term index measured 330–680 B
-  * per unambiguous term (Spark's `SizeEstimator`, Synth dictionaries of
-  * 4.7k–219k terms; ~18 key rows per term, less per term the more keys the
-  * terms share): ≈ 1.4 GB per 2M terms and up to ≈ 14 GB at the 20M-row
-  * cap, plus the collected rows while it is built and one copy per
-  * executor. The collected component map holds ≤ 2M entries (≈ 200 B
-  * each with their strings, ≈ 0.4 GB). The index build took 2.7 s for
-  * 219k terms on a 4-core driver (key hashing runs on every core).
+  * Driver memory on the broadcast path: the term index measured 216 B
+  * per unambiguous term (Spark's `SizeEstimator`, `Synth.dictionary(100000)`,
+  * 219k terms, ~18 key rows per term; 456 B with the boxed hash-map
+  * postings it replaces): ≈ 0.45 GB per 2M terms and up to ≈ 4.5 GB at
+  * the 20M-row cap, plus the collected rows and ~3 arrays of its key rows
+  * while it is built, and one copy per executor. The collected component
+  * map holds ≤ 2M entries (≈ 200 B each with their strings, ≈ 0.4 GB).
+  * The index build took 0.77–0.83 s for those 219k terms on a 4-core
+  * driver (min of 3 after two warm-up builds; 2.09–2.19 s for the hash-map
+  * build), about 0.3 s of it the key hashing on every core.
   */
 object LinkagePipeline {
 
   /** A run's `assignments` (id, component) and its diagnostic frames, built
     * on first read, once per Result and its copies: `scored` (a, b, jw,
     * lev_ratio, cos, score), `keyFreq` (key, freq) skew report and
-    * `nodeKeys` (id, key) node-level keys, keyFreq's input. */
+    * `nodeKeys` (id, key) node-level keys, keyFreq's input. On [[run]]'s
+    * broadcast path below the component cap, `assignments` is a lazy map
+    * over `run`'s surface cut and the caller's `mentions`: a caller that
+    * reads it more than once cuts its mentions first. */
   final class Result private[plans] (val assignments: DataFrame, val persisted: Seq[DataFrame],
                                      diagnostics: Diagnostics) {
     def scored: DataFrame = diagnostics.frames.scored
@@ -281,9 +289,15 @@ object LinkagePipeline {
 
   /** The dictionary-scale path of [[run]]: the distinct surfaces,
     * hash-partitioned on the norm at the session's shuffle-partition count
-    * so the hot-key and score passes run one task per partition; the score
-    * pass's (surface, concept node) rows are the component relation,
-    * collected while it has at most `componentCap` rows. */
+    * and cut, so the hot-key and score passes run one task per partition
+    * over one evaluation of them. The hot-key count is [[keyCounts]],
+    * collected under `componentCap` and summed on the driver (above it, a
+    * `groupBy("key")` of the same counts); the score pass's (surface,
+    * concept node) rows are the component relation, collected under
+    * `componentCap` too. Below it the assignments are a lazy union of
+    * lookups in the collected map (mentions, surfaces) and the term table,
+    * so the Result holds the surface cut alone; above it the assignment
+    * joins read the components through a cut, and the assignments are cut. */
   private[graft] def runBroadcast(mentions: Dataset[Mention], dict: Dataset[DictEntry],
                                   ix: TermIndex, weights: PairwiseScoring.Weights,
                                   hotKeyCap: Int, componentCap: Long)
@@ -295,12 +309,14 @@ object LinkagePipeline {
       .repartition(spark.sessionState.conf.numShufflePartitions, col("norm"))
       .distinct().as[String], eager = false)
     val hot = {
-      val rows = surfaces.flatMap(n => ixB.value.sharedKeys(n)).toDF("key")
-        .groupBy(col("key")).agg(count(lit(1))).collect()
-      val set = new LongHashSet(rows.length)
-      rows.foreach { r =>
-        if (r.getLong(1) + ix.keyRows(r.getLong(0)) > hotKeyCap) set.add(r.getLong(0))
+      val counts = keyCounts(surfaces, ixB)
+      val totals = ConnectedComponents.collectWithin(counts, componentCap) match {
+        case Some(rows) => rows.groupMapReduce(_._1)(_._2.toLong)(_ + _).toSeq
+        case None => counts.toDF("key", "rows").groupBy(col("key")).agg(sum(col("rows")))
+          .as[(Long, Long)].collect().toSeq
       }
+      val set = new LongHashSet(totals.size)
+      totals.foreach { case (k, c) => if (c + ix.keyRows(k) > hotKeyCap) set.add(k) }
       sc.broadcast(set)
     }
     val score: (String, String) => Double = PairwiseScoring.scorePure(_, _, weights)
@@ -308,11 +324,11 @@ object LinkagePipeline {
     // the gate scores every partition in one job
     val components = surfaces.flatMap { n =>
       val t = ixB.value.best(n, hot.value, score)
-      if (t < 0) None else Some(("s:" + n, ixB.value.conceptNodes(t)))
+      if (t < 0) None else Some(("s:" + n, ixB.value.conceptNode(t)))
     }.toDF("id", "component")
     val termConcept = ConnectedComponents.parallelizeLocal(
-      ix.ids.indices.map(i => (ix.ids(i), ix.conceptNodes(i)))).toDF("id", "component")
-    val assignments = m.cut(ConnectedComponents.collectWithin(components, componentCap) match {
+      ix.norms.indices.map(i => ("t:" + ix.norms(i), ix.conceptNode(i)))).toDF("id", "component")
+    val assignments = ConnectedComponents.collectWithin(components, componentCap) match {
       case Some(rows) =>
         val comp = new java.util.HashMap[String, String](math.max(16, rows.length * 2))
         rows.foreach(r => comp.put(r.getString(0), r.getString(1)))
@@ -327,15 +343,46 @@ object LinkagePipeline {
           .union(termConcept)
       case None =>
         // above the cap the assignment joins read the rows through a cut
-        assignmentsOf(mentions,
+        m.cut(assignmentsOf(mentions,
           surfaces.select(concat(lit("s:"), col("norm")).as("id")).union(termConcept.select(col("id"))),
-          m.cut(components, eager = false).union(termConcept))
-    }, eager = false)
+          m.cut(components, eager = false).union(termConcept)), eager = false)
+    }
     new Result(assignments, m.handOff(), new Diagnostics(d => {
       val chain = new Chain(mentions, surfaces.toDF("norm"), dict, weights, hotKeyCap,
         inMemory(d, checkpointed = Set.empty))
       new Frames(chain.scored, chain.keyFreq, chain.nodeKeys)
     }))
+  }
+
+  /** Each partition's (key, rows) counts of the surface rows of the keys
+    * the index carries (`TermIndex.sharedKeys`): sorted, then run-length
+    * counted in one primitive array, with no exchange. Summed over the
+    * partitions they are the surface side's count of each key — exactly,
+    * when `surfaces` is distinct. */
+  private[graft] def keyCounts(surfaces: Dataset[String], ixB: Broadcast[TermIndex])
+                              (implicit spark: SparkSession): Dataset[(Long, Int)] = {
+    import spark.implicits._
+    surfaces.mapPartitions { it =>
+      var keys = new Array[Long](1024)
+      var n = 0
+      it.foreach { norm =>
+        ixB.value.sharedKeys(norm).foreach { k =>
+          if (n == keys.length) keys = java.util.Arrays.copyOf(keys, 2 * n)
+          keys(n) = k
+          n += 1
+        }
+      }
+      java.util.Arrays.sort(keys, 0, n)
+      var i = 0
+      new Iterator[(Long, Int)] {
+        def hasNext: Boolean = i < n
+        def next(): (Long, Int) = {
+          val start = i
+          while (i < n && keys(i) == keys(start)) i += 1
+          (keys(start), i - start)
+        }
+      }
+    }
   }
 
   /** The operator chain — nodes → block keys → candidate pairs → scoring
@@ -433,42 +480,63 @@ object LinkagePipeline {
 
   /** The dictionary side of [[run]]'s broadcast path, built on the driver
     * from the collected dictionary: the unambiguous terms
-    * ([[unambiguousDict]] transcribed) sorted by their "t:" ids in Spark's
-    * UTF-8 binary order — the order `argmaxEdges`' `min_by` breaks score
-    * ties in, which differs from `String.compareTo` for supplementary
-    * characters — so a tie goes to the smaller index; and the block-key
-    * index: key → one term index per (term, key) row of
-    * `Blocking.blockKeysWithNorm`, the term side of the key table. */
-  private[graft] final class TermIndex(val ids: Array[String], val norms: Array[String],
-                                       val conceptNodes: Array[String],
-                                       postings: LongKeyMap[Array[Int]]) extends Serializable {
-    private val lengths = norms.map(n => UTF8String.fromString(n).numChars)
+    * ([[unambiguousDict]] transcribed), in no particular order, and the
+    * block-key index: key → one term index per (term, key) row of
+    * `Blocking.blockKeysWithNorm`, the term side of the key table, in
+    * ascending term order. The index is primitive arrays (CSR): the sorted
+    * distinct `keys`, whose slot `s` has the terms
+    * `postings(offsets(s) until offsets(s + 1))`, and `heads`, where the
+    * binary search for a key starts: the first slot of each value of the
+    * keys' top bits. */
+  private[graft] final class TermIndex private (val norms: Array[String], concepts: Array[Long],
+                                               private[graft] val keys: Array[Long], heads: Array[Int],
+                                               offsets: Array[Int], postings: Array[Int]) extends Serializable {
+    // code points, as Spark's `length` counts them
+    private val lengths = norms.map(n => n.codePointCount(0, n.length))
+
+    /** The slot of key `k` in `keys`, or a negative number if no term has it. */
+    private def slot(k: Long): Int = TermIndex.slot(keys, heads, k)
+
+    /** Term `t`'s concept node, "c:<conceptId>". */
+    def conceptNode(t: Int): String = "c:" + concepts(t)
 
     /** The term-side rows of key `k`. */
     def keyRows(k: Long): Int = {
-      val p = postings.get(k)
-      if (p == null) 0 else p.length
+      val s = slot(k)
+      if (s < 0) 0 else offsets(s + 1) - offsets(s)
+    }
+
+    /** The terms of key `k`'s rows, in ascending order. */
+    private[graft] def termsOf(k: Long): Array[Int] = {
+      val s = slot(k)
+      if (s < 0) Array.emptyIntArray else java.util.Arrays.copyOfRange(postings, offsets(s), offsets(s + 1))
     }
 
     /** The surface's key rows whose key some term carries. */
-    def sharedKeys(norm: String): Iterator[Long] =
-      Blocking.keyHashesFor(norm).iterator.filter(k => postings.get(k) != null)
+    def sharedKeys(norm: String): Array[Long] = Blocking.keyHashesFor(norm).filter(slot(_) >= 0)
 
     /** The surface's argmax term, or -1: among the terms sharing a key
       * outside `hot` whose code-point length is within `Blocking.LenSlack`
       * (the bipartite blocking's candidates), the highest `score` ≥ 0.5,
-      * the smaller index on equal scores. */
+      * on equal scores the smaller "t:" id in Spark's UTF-8 binary order —
+      * the order `argmaxEdges`' `min_by` breaks ties in, which differs from
+      * `String.compareTo` for supplementary characters. */
     def best(norm: String, hot: LongHashSet, score: (String, String) => Double): Int = {
-      val len = UTF8String.fromString(norm).numChars
+      val len = norm.codePointCount(0, norm.length)
       var cands = new Array[Int](32)
       var n = 0
       Blocking.keyHashesFor(norm).foreach { k =>
-        val p = if (hot.contains(k)) null else postings.get(k)
-        if (p != null) p.foreach { t =>
-          if (math.abs(lengths(t) - len) <= Blocking.LenSlack) {
-            if (n == cands.length) cands = java.util.Arrays.copyOf(cands, 2 * n)
-            cands(n) = t
-            n += 1
+        val s = if (hot.contains(k)) -1 else slot(k)
+        if (s >= 0) {
+          var p = offsets(s)
+          while (p < offsets(s + 1)) {
+            val t = postings(p)
+            if (math.abs(lengths(t) - len) <= Blocking.LenSlack) {
+              if (n == cands.length) cands = java.util.Arrays.copyOf(cands, 2 * n)
+              cands(n) = t
+              n += 1
+            }
+            p += 1
           }
         }
       }
@@ -480,7 +548,10 @@ object LinkagePipeline {
         val t = cands(i)
         if (i == 0 || t != cands(i - 1)) {
           val s = score(norm, norms(t))
-          if (s >= 0.5 && (best < 0 || s > bestScore)) { best = t; bestScore = s }
+          if (s >= 0.5 && (best < 0 || s > bestScore || s == bestScore && TermIndex.utf8Less(norms(t), norms(best)))) {
+            best = t
+            bestScore = s
+          }
         }
         i += 1
       }
@@ -489,7 +560,11 @@ object LinkagePipeline {
   }
 
   private[graft] object TermIndex {
-    /** From collected (mention, concept_id) dictionary rows. */
+    /** From collected (mention, concept_id) dictionary rows: the terms' key
+      * rows, hashed in parallel, copied into one array; a copy sorted in
+      * parallel, whose distinct values are the keys and whose runs give
+      * their offsets; then each row's key replaced by its slot, in parallel,
+      * and one pass over the rows in term order fills the postings. */
     def apply(dict: Array[(String, Long)]): TermIndex = {
       val concept = new java.util.HashMap[String, java.lang.Long]()
       val ambiguous = new java.util.HashSet[String]()
@@ -500,20 +575,69 @@ object LinkagePipeline {
       }
       val terms = concept.entrySet.toArray(Array.empty[java.util.Map.Entry[String, java.lang.Long]])
         .filterNot(e => ambiguous.contains(e.getKey))
-        .map(e => (UTF8String.fromString("t:" + e.getKey), e.getKey, "c:" + e.getValue))
-        .sortWith((x, y) => x._1.compareTo(y._1) < 0)
-      val norms = terms.map(_._2)
-      val keys = new Array[Array[Long]](norms.length)
-      java.util.Arrays.parallelSetAll[Array[Long]](keys, i => Blocking.keyHashesFor(norms(i)))
-      val lists = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuilder.ofInt]()
-      norms.indices.foreach { i =>
-        keys(i).foreach { k =>
-          lists.computeIfAbsent(k, _ => new scala.collection.mutable.ArrayBuilder.ofInt) += i
-        }
+      val norms = terms.map(_.getKey)
+      val termKeys = new Array[Array[Long]](norms.length)
+      java.util.Arrays.parallelSetAll[Array[Long]](termKeys, t => Blocking.keyHashesFor(norms(t)))
+      val firstRow = termKeys.scanLeft(0)(_ + _.length)
+      val rows = new Array[Long](firstRow.last)
+      termKeys.indices.foreach(t => System.arraycopy(termKeys(t), 0, rows, firstRow(t), termKeys(t).length))
+      val sorted = rows.clone()
+      java.util.Arrays.parallelSort(sorted)
+      def isRunStart(r: Int) = r == 0 || sorted(r) != sorted(r - 1)
+      var nKeys = 0
+      var i = 0
+      while (i < sorted.length) { if (isRunStart(i)) nKeys += 1; i += 1 }
+      val keys = new Array[Long](nKeys)
+      val offsets = new Array[Int](nKeys + 1)
+      nKeys = 0
+      i = 0
+      while (i < sorted.length) {
+        if (isRunStart(i)) { keys(nKeys) = sorted(i); offsets(nKeys) = i; nKeys += 1 }
+        i += 1
       }
-      val postings = new LongKeyMap[Array[Int]](lists.size)
-      lists.forEach((k, b) => postings.put(k, b.result()))
-      new TermIndex(terms.map(_._1.toString), norms, terms.map(_._3), postings)
+      offsets(nKeys) = sorted.length
+      val heads = headsOf(keys)
+      // each row's key becomes its slot; the slots fill the postings in term order
+      java.util.Arrays.parallelSetAll(rows, (r: Int) => slot(keys, heads, rows(r)).toLong)
+      val postings = new Array[Int](rows.length)
+      val next = offsets.clone()
+      var t = 0
+      while (t < norms.length) {
+        var r = firstRow(t)
+        while (r < firstRow(t + 1)) {
+          val s = rows(r).toInt
+          postings(next(s)) = t
+          next(s) += 1
+          r += 1
+        }
+        t += 1
+      }
+      new TermIndex(norms, terms.map(_.getValue.longValue), keys, heads, offsets, postings)
+    }
+
+    /** Whether `a` orders before `b` in Spark's UTF-8 binary order, so
+      * "t:" + `a` before "t:" + `b`. */
+    private def utf8Less(a: String, b: String): Boolean =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+
+    /** `heads(b)`: the first slot whose key's top bits, read as an unsigned
+      * number so they ascend with the keys, are at least `b`; the keys'
+      * count last. 2^bits + 1 entries, with up to 16 bits, about log2 of
+      * the key count, so a search spans a few slots on average. */
+    private def headsOf(keys: Array[Long]): Array[Int] = {
+      val bits = math.min(16, math.max(1, 31 - Integer.numberOfLeadingZeros(keys.length)))
+      val h = new Array[Int]((1 << bits) + 1)
+      keys.foreach(k => h(bucket(k, bits) + 1) += 1)
+      (1 until h.length).foreach(b => h(b) += h(b - 1))
+      h
+    }
+
+    private def bucket(k: Long, bits: Int): Int = ((k ^ Long.MinValue) >>> (64 - bits)).toInt
+
+    /** The slot of `k` in the sorted `keys`, or a negative number. */
+    private def slot(keys: Array[Long], heads: Array[Int], k: Long): Int = {
+      val b = bucket(k, Integer.numberOfTrailingZeros(heads.length - 1))
+      java.util.Arrays.binarySearch(keys, heads(b), heads(b + 1), k)
     }
   }
 }

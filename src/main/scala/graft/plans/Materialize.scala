@@ -16,8 +16,11 @@ import scala.collection.mutable.ArrayBuffer
   * them off (to a `LinkagePipeline.Result`). */
 object Materialize {
 
-  /** `ds` as a leaf over its rows: computed now if `eager`, else by the
-    * first action over the leaf. */
+  /** `ds` as a leaf over its rows: computed now if `eager`. If not, the
+    * rows are computed by the first action over the leaf — but with AQE on,
+    * building the leaf's RDD plans the query adaptively, which runs the
+    * shuffle map stage of each exchange in `ds` at the call (on either
+    * branch); only the stages after the last exchange wait for the action. */
   def cut[T](ds: Dataset[T], eager: Boolean): Dataset[T] =
     cut(ds, eager, local = ds.sparkSession.sparkContext.isLocal)
 

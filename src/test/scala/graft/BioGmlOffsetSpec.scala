@@ -67,6 +67,15 @@ class BioGmlOffsetSpec extends AnyFunSuite with SparkTestBase {
     assert(got.toSeq == Seq((0, "O"), (1, "O"), (2, "B-x")))
   }
 
+  test("C4 duplicate doc rows are each their own document") {
+    val text = "aa bb cc"
+    val spanDf = Seq(("d1", 3, 5, "x")).toDF("doc_id", "start", "end", "cls")
+    def labels(n: Int) = Bio.bioLabels(spark.createDataset(Seq.fill(n)(doc("d1", text))), spanDf)
+      .collect().map(r => (r.getInt(1), r.getString(4))).sorted.toSeq
+    assert(labels(1) == Seq((0, "O"), (1, "B-x"), (2, "O")))
+    assert(labels(2) == labels(1).flatMap(l => Seq(l, l)))
+  }
+
   // ---- literal join_classes_bio + fix_spans (infer.py:83-125) ----
   private def fixSpansRef(text: String,
                           spans: Seq[(Int, Int, String)]): Seq[(Int, Int, String, String)] = {

@@ -133,7 +133,7 @@ class LinkBroadcastSpec extends AnyFunSuite with SparkTestBase {
     // the argmax edges of run's score pass (no key reaches the hot-key cap here)
     val closed = norms.flatMap { n =>
       val t = ix.best(n, new LongHashSet(0), PairwiseScoring.scorePure(_, _))
-      if (t < 0) None else Some("s:" + n -> ix.conceptNodes(t))
+      if (t < 0) None else Some("s:" + n -> ix.conceptNode(t))
     }.toMap
     val edges = closed.toSeq.toDF("a", "b")
     assert(many.forall(n => closed.get("s:" + n).contains("c:1")), s"not one star: $closed")
@@ -173,6 +173,24 @@ class LinkBroadcastSpec extends AnyFunSuite with SparkTestBase {
     assert(r.scored.storageLevel.useMemory)
     r.release()
     assert(cache.isEmpty, "release() left the scored frame cached")
+  }
+
+  test("TermIndex postings equal a hash-map build's, key for key, on Synth.dictionary(100000)") {
+    val ix = TermIndex(Synth.dictionary(100000).map(e => (e.mention, e.concept_id)).toArray)
+    // the reference: one posting per (term, key) row, appended in term order
+    val want = new java.util.HashMap[java.lang.Long, scala.collection.mutable.ArrayBuilder.ofInt]()
+    ix.norms.indices.foreach { t =>
+      graft.operators.Blocking.keyHashesFor(ix.norms(t)).foreach { k =>
+        want.computeIfAbsent(k, _ => new scala.collection.mutable.ArrayBuilder.ofInt) += t
+      }
+    }
+    assert(ix.norms.length > 200000)
+    assert(ix.keys.length == want.size && ix.keys.toSeq == ix.keys.sorted.toSeq.distinct)
+    want.forEach { (k, b) =>
+      val p = b.result()
+      assert(ix.termsOf(k).toSeq == p.toSeq, s"key $k")
+      assert(ix.keyRows(k) == p.length)
+    }
   }
 
   test("argmax tie-break: equal scores go to the smaller term id in UTF-8 byte order") {
