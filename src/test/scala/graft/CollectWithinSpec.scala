@@ -1,15 +1,13 @@
 package graft
 
 import graft.operators.ConnectedComponents.collectWithin
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.JobFailed
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import scala.collection.mutable.ArrayBuffer
 
 object CollectWithinSpec {
   /** Holds the tasks of the cancel case until the gate has returned. */
@@ -23,29 +21,6 @@ class CollectWithinSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private val sc = spark.sparkContext
-
-  /** `body`'s result and the job-end events of the jobs it ran. */
-  private def jobsOf[A](body: => A): (A, Seq[SparkListenerJobEnd]) = {
-    val ends = ArrayBuffer.empty[SparkListenerJobEnd]
-    var starts = 0
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = ends.synchronized(starts += 1)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.synchronized(ends += e)
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = body
-      // the scheduler posts a job's end after it wakes the caller
-      val deadline = System.nanoTime() + 10000000000L
-      while ({ ListenerBusDrain(sc); ends.synchronized(starts > ends.size) } && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      ends.synchronized {
-        assert(starts == ends.size)
-        (a, ends.toList)
-      }
-    } finally sc.removeSparkListener(l)
-  }
 
   private def longs(ds: Dataset[java.lang.Long], cap: Long): (Option[Seq[Long]], Int) = {
     val (rows, jobs) = jobsOf(collectWithin(ds, cap))

@@ -54,6 +54,22 @@ class MaterializeSpec extends AnyFunSuite with SparkTestBase {
     Seq(local, recoverable).foreach(Materialize.free)
   }
 
+  test("under AQE a lazy cut runs its exchange's map stage at the call; the rest waits for an action") {
+    withConf("spark.sql.adaptive.enabled", "true") {
+      for (local <- Seq(true, false)) {
+        val ds = spark.range(0, 2000, 1, 4).select((col("id") % 300).as("k"))
+          .repartition(4, col("k")).distinct()
+        val (cut, atCall) = jobsOf(Materialize.cut(ds, eager = false, local))
+        val (n, atAction) = jobsOf(cut.count())
+        info(s"local = $local: ${atCall.size} job(s) at the call, ${atAction.size} at the first action")
+        assert(n == 300)
+        assert(atCall.size == 1, s"local = $local")
+        assert(atAction.size == 2, s"local = $local") // the count's own exchange, then its result
+        Materialize.free(cut)
+      }
+    }
+  }
+
   test("a scope frees what it holds on exit, except what it handed off") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
