@@ -34,11 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * EDBT 2019). Spark then runs three corpus-scale steps: the distinct
   * surfaces, cut (the one materialisation of this path); one narrow pass
   * that counts, per partition, the surface side's rows of the index's
-  * keys for the hot-key cap, summed on the driver; and one narrow pass in
-  * which each surface looks up its candidate terms, applies the length
-  * slack, scores them and emits its argmax edge straight to the concept
-  * node. On this
-  * path the transitive clustering is a closed form: the edges are a
+  * keys for the hot-key cap, summed on the driver into one count per
+  * index key; and one narrow pass in which each surface looks up its
+  * candidate terms, applies the length slack, scores them and emits its
+  * argmax edge straight to the concept node. On this path the transitive
+  * clustering is a closed form: the edges are a
   * function from surfaces to concepts, so each component is a star
   * labelled by its concept node ("c:" < "s:"; a surface with no edge is
   * its own component), and the edge rows are the component relation.
@@ -47,22 +47,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * lookups in them. Above either cap runs an exact path: above the
   * dictionary cap the operator chain ([[Chain]]: shuffled blocking,
   * scoring, argmax, contraction join, `ConnectedComponents` and
-  * assignment joins), above the component cap a `groupBy` hot-key count
-  * and the assignment joins, whose input and output are cut. The
+  * assignment joins), above the component cap the assignment joins,
+  * whose input and output are cut. The
   * chain is also the body of [[runCheckpointed]], and the reference
   * `LinkBroadcastSpec` pins [[run]] to; a [[Result]]'s diagnostic frames
   * are built from the chain on first read.
   *
-  * Driver memory on the broadcast path: the term index measured 216 B
+  * Driver memory on the broadcast path: the term index measured 215 B
   * per unambiguous term (Spark's `SizeEstimator`, `Synth.dictionary(100000)`,
   * 219k terms, ~18 key rows per term; 456 B with the boxed hash-map
   * postings it replaces): ≈ 0.45 GB per 2M terms and up to ≈ 4.5 GB at
   * the 20M-row cap, plus the collected rows and ~3 arrays of its key rows
-  * while it is built, and one copy per executor. The collected component
-  * map holds ≤ 2M entries (≈ 200 B each with their strings, ≈ 0.4 GB).
-  * The index build took 0.77–0.83 s for those 219k terms on a 4-core
-  * driver (min of 3 after two warm-up builds; 2.09–2.19 s for the hash-map
-  * build), about 0.3 s of it the key hashing on every core.
+  * while it is built, and one copy per executor. The hot-key count adds
+  * one Long per index key. The collected component map holds ≤ 2M entries
+  * (≈ 200 B each with their strings, ≈ 0.4 GB). The index build took
+  * 0.67–0.72 s for those 219k terms on a 4-core driver (min of the last 3
+  * of 5 builds; 1.26–1.43 s for the hash-map build), about 0.3 s of it the
+  * key hashing on every core.
   */
 object LinkagePipeline {
 
@@ -290,11 +291,10 @@ object LinkagePipeline {
   /** The dictionary-scale path of [[run]]: the distinct surfaces,
     * hash-partitioned on the norm at the session's shuffle-partition count
     * and cut, so the hot-key and score passes run one task per partition
-    * over one evaluation of them. The hot-key count is [[keyCounts]],
-    * collected under `componentCap` and summed on the driver (above it, a
-    * `groupBy("key")` of the same counts); the score pass's (surface,
+    * over one evaluation of them. The hot-key count is [[keyCounts]], one
+    * count per index key summed on the driver; the score pass's (surface,
     * concept node) rows are the component relation, collected under
-    * `componentCap` too. Below it the assignments are a lazy union of
+    * `componentCap`. Below it the assignments are a lazy union of
     * lookups in the collected map (mentions, surfaces) and the term table,
     * so the Result holds the surface cut alone; above it the assignment
     * joins read the components through a cut, and the assignments are cut. */
@@ -310,13 +310,9 @@ object LinkagePipeline {
       .distinct().as[String], eager = false)
     val hot = {
       val counts = keyCounts(surfaces, ixB)
-      val totals = ConnectedComponents.collectWithin(counts, componentCap) match {
-        case Some(rows) => rows.groupMapReduce(_._1)(_._2.toLong)(_ + _).toSeq
-        case None => counts.toDF("key", "rows").groupBy(col("key")).agg(sum(col("rows")))
-          .as[(Long, Long)].collect().toSeq
-      }
-      val set = new LongHashSet(totals.size)
-      totals.foreach { case (k, c) => if (c + ix.keyRows(k) > hotKeyCap) set.add(k) }
+      val hotSlots = counts.indices.filter(s => counts(s) + ix.rowsAt(s) > hotKeyCap)
+      val set = new LongHashSet(hotSlots.length)
+      hotSlots.foreach(s => set.add(ix.keys(s)))
       sc.broadcast(set)
     }
     val score: (String, String) => Double = PairwiseScoring.scorePure(_, _, weights)
@@ -354,35 +350,46 @@ object LinkagePipeline {
     }))
   }
 
-  /** Each partition's (key, rows) counts of the surface rows of the keys
-    * the index carries (`TermIndex.sharedKeys`): sorted, then run-length
-    * counted in one primitive array, with no exchange. Summed over the
-    * partitions they are the surface side's count of each key — exactly,
-    * when `surfaces` is distinct. */
-  private[graft] def keyCounts(surfaces: Dataset[String], ixB: Broadcast[TermIndex])
-                              (implicit spark: SparkSession): Dataset[(Long, Int)] = {
-    import spark.implicits._
-    surfaces.mapPartitions { it =>
-      var keys = new Array[Long](1024)
-      var n = 0
-      it.foreach { norm =>
-        ixB.value.sharedKeys(norm).foreach { k =>
-          if (n == keys.length) keys = java.util.Arrays.copyOf(keys, 2 * n)
-          keys(n) = k
-          n += 1
-        }
-      }
-      java.util.Arrays.sort(keys, 0, n)
-      var i = 0
-      new Iterator[(Long, Int)] {
-        def hasNext: Boolean = i < n
-        def next(): (Long, Int) = {
-          val start = i
-          while (i < n && keys(i) == keys(start)) i += 1
-          (keys(start), i - start)
-        }
+  /** The surface side's row count of each index key, by slot
+    * (`TermIndex.sharedSlots`), in one job over `surfaces` with no
+    * exchange: each task sorts and run-length counts its partition's slots
+    * in a primitive array and ships the (slot, count) runs, which the
+    * driver adds up as they arrive. Exact when `surfaces` is distinct. The
+    * sum is one Long per index key, so it needs no cap beyond the index's. */
+  private def keyCounts(surfaces: Dataset[String], ixB: Broadcast[TermIndex]): Array[Long] = {
+    val totals = new Array[Long](ixB.value.keys.length)
+    surfaces.sparkSession.sparkContext.runJob(surfaces.rdd,
+      (it: Iterator[String]) => slotRuns(it, ixB.value),
+      (_: Int, runs: (Array[Int], Array[Int])) => {
+        // the handler runs on the scheduler's thread, one call at a time
+        var i = 0
+        while (i < runs._1.length) { totals(runs._1(i)) += runs._2(i); i += 1 }
+      })
+    totals
+  }
+
+  /** One partition's (distinct slots, their row counts) of [[keyCounts]]. */
+  private def slotRuns(surfaces: Iterator[String], ix: TermIndex): (Array[Int], Array[Int]) = {
+    var slots = new Array[Int](1024)
+    var n = 0
+    surfaces.foreach { norm =>
+      ix.sharedSlots(norm).foreach { s =>
+        if (n == slots.length) slots = java.util.Arrays.copyOf(slots, 2 * n)
+        slots(n) = s
+        n += 1
       }
     }
+    java.util.Arrays.sort(slots, 0, n)
+    val runs = Array.newBuilder[Int]
+    val counts = Array.newBuilder[Int]
+    var i = 0
+    while (i < n) {
+      val start = i
+      while (i < n && slots(i) == slots(start)) i += 1
+      runs += slots(start)
+      counts += i - start
+    }
+    (runs.result(), counts.result())
   }
 
   /** The operator chain — nodes → block keys → candidate pairs → scoring
@@ -485,26 +492,21 @@ object LinkagePipeline {
     * `Blocking.blockKeysWithNorm`, the term side of the key table, in
     * ascending term order. The index is primitive arrays (CSR): the sorted
     * distinct `keys`, whose slot `s` has the terms
-    * `postings(offsets(s) until offsets(s + 1))`, and `heads`, where the
-    * binary search for a key starts: the first slot of each value of the
-    * keys' top bits. */
+    * `postings(offsets(s) until offsets(s + 1))`. */
   private[graft] final class TermIndex private (val norms: Array[String], concepts: Array[Long],
-                                               private[graft] val keys: Array[Long], heads: Array[Int],
+                                               private[graft] val keys: Array[Long],
                                                offsets: Array[Int], postings: Array[Int]) extends Serializable {
     // code points, as Spark's `length` counts them
     private val lengths = norms.map(n => n.codePointCount(0, n.length))
 
     /** The slot of key `k` in `keys`, or a negative number if no term has it. */
-    private def slot(k: Long): Int = TermIndex.slot(keys, heads, k)
+    private def slot(k: Long): Int = java.util.Arrays.binarySearch(keys, k)
 
     /** Term `t`'s concept node, "c:<conceptId>". */
     def conceptNode(t: Int): String = "c:" + concepts(t)
 
-    /** The term-side rows of key `k`. */
-    def keyRows(k: Long): Int = {
-      val s = slot(k)
-      if (s < 0) 0 else offsets(s + 1) - offsets(s)
-    }
+    /** The term-side rows of the key in slot `s`. */
+    def rowsAt(s: Int): Int = offsets(s + 1) - offsets(s)
 
     /** The terms of key `k`'s rows, in ascending order. */
     private[graft] def termsOf(k: Long): Array[Int] = {
@@ -512,8 +514,8 @@ object LinkagePipeline {
       if (s < 0) Array.emptyIntArray else java.util.Arrays.copyOfRange(postings, offsets(s), offsets(s + 1))
     }
 
-    /** The surface's key rows whose key some term carries. */
-    def sharedKeys(norm: String): Array[Long] = Blocking.keyHashesFor(norm).filter(slot(_) >= 0)
+    /** The slots of the surface's key rows whose key some term carries. */
+    def sharedSlots(norm: String): Array[Int] = Blocking.keyHashesFor(norm).map(slot).filter(_ >= 0)
 
     /** The surface's argmax term, or -1: among the terms sharing a key
       * outside `hot` whose code-point length is within `Blocking.LenSlack`
@@ -596,9 +598,8 @@ object LinkagePipeline {
         i += 1
       }
       offsets(nKeys) = sorted.length
-      val heads = headsOf(keys)
       // each row's key becomes its slot; the slots fill the postings in term order
-      java.util.Arrays.parallelSetAll(rows, (r: Int) => slot(keys, heads, rows(r)).toLong)
+      java.util.Arrays.parallelSetAll(rows, (r: Int) => java.util.Arrays.binarySearch(keys, rows(r)).toLong)
       val postings = new Array[Int](rows.length)
       val next = offsets.clone()
       var t = 0
@@ -612,32 +613,12 @@ object LinkagePipeline {
         }
         t += 1
       }
-      new TermIndex(norms, terms.map(_.getValue.longValue), keys, heads, offsets, postings)
+      new TermIndex(norms, terms.map(_.getValue.longValue), keys, offsets, postings)
     }
 
     /** Whether `a` orders before `b` in Spark's UTF-8 binary order, so
       * "t:" + `a` before "t:" + `b`. */
     private def utf8Less(a: String, b: String): Boolean =
       UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-
-    /** `heads(b)`: the first slot whose key's top bits, read as an unsigned
-      * number so they ascend with the keys, are at least `b`; the keys'
-      * count last. 2^bits + 1 entries, with up to 16 bits, about log2 of
-      * the key count, so a search spans a few slots on average. */
-    private def headsOf(keys: Array[Long]): Array[Int] = {
-      val bits = math.min(16, math.max(1, 31 - Integer.numberOfLeadingZeros(keys.length)))
-      val h = new Array[Int]((1 << bits) + 1)
-      keys.foreach(k => h(bucket(k, bits) + 1) += 1)
-      (1 until h.length).foreach(b => h(b) += h(b - 1))
-      h
-    }
-
-    private def bucket(k: Long, bits: Int): Int = ((k ^ Long.MinValue) >>> (64 - bits)).toInt
-
-    /** The slot of `k` in the sorted `keys`, or a negative number. */
-    private def slot(keys: Array[Long], heads: Array[Int], k: Long): Int = {
-      val b = bucket(k, Integer.numberOfTrailingZeros(heads.length - 1))
-      java.util.Arrays.binarySearch(keys, heads(b), heads(b + 1), k)
-    }
   }
 }

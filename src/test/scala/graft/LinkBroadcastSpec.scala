@@ -189,7 +189,6 @@ class LinkBroadcastSpec extends AnyFunSuite with SparkTestBase {
     want.forEach { (k, b) =>
       val p = b.result()
       assert(ix.termsOf(k).toSeq == p.toSeq, s"key $k")
-      assert(ix.keyRows(k) == p.length)
     }
   }
 

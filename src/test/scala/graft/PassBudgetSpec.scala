@@ -2,16 +2,17 @@ package graft
 
 import graft.fixtures.Synth
 import graft.plans.{LinkagePipeline, Materialize}
-import graft.plans.LinkagePipeline.TermIndex
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.collection.mutable.ArrayBuffer
+
 /** Per-pass budgets of the benchmark's `link` pass on Synth inputs: the
-  * Spark jobs of a warm pass, what its Result holds, and what is left
-  * after `release()`. Changing a budget is a spec edit. */
-class PassBudgetSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkPlanHelper {
+  * Spark jobs and shuffle map stages of a warm pass, what its Result
+  * holds, and what is left after `release()`. Changing a budget is a spec
+  * edit. */
+class PassBudgetSpec extends AnyFunSuite with SparkTestBase {
 
   import spark.implicits._
 
@@ -19,7 +20,26 @@ class PassBudgetSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkPl
     * its assignments, over driver-resident Synth inputs. */
   private val LinkJobsPerWarmPass = 5
 
-  test("a warm link pass: its job count, one held cut, no exchange in the hot-key count, nothing left") {
+  /** Shuffle map stages of a warm pass: the surface cut's repartition on
+    * the norm and the checksum's global aggregate. The hot-key count and
+    * the score pass are narrow over the surface cut. */
+  private val LinkShuffleStagesPerWarmPass = 2
+
+  /** `body`'s result and the number of stages it ran that wrote shuffle
+    * output: its shuffle map stages. */
+  private def shuffleStagesOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val ids = ArrayBuffer.empty[Int]
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) ids.synchronized(ids += e.stageInfo.stageId)
+    }
+    sc.addSparkListener(l)
+    // jobsOf drains the listener bus, which posts a stage's end before its job's
+    try { val a = body; (a, ids.synchronized(ids.size)) } finally sc.removeSparkListener(l)
+  }
+
+  test("a warm link pass: its jobs, its shuffle stages, one held cut, nothing left") {
     val sc = spark.sparkContext
     val pairs = (0 until 60).map(i => Synth.genDoc(i, 150))
     val docs = spark.createDataset(pairs.map(_._1))
@@ -27,24 +47,22 @@ class PassBudgetSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkPl
     val dict = spark.createDataset(Synth.dictionary(150))
     val before = sc.getPersistentRDDs.keySet
     def grown = sc.getPersistentRDDs.keySet -- before
-    val jobs = (0 until 3).map { _ =>
-      val (r, ran) = jobsOf {
+    val budgets = (0 until 3).map { _ =>
+      val ((r, ran), shuffled) = shuffleStagesOf(jobsOf {
         val mentions = Materialize.cut(LinkagePipeline.mentionsFromSpans(docs, golds), eager = false)
         val r = LinkagePipeline.run(mentions, dict)
         assert(r.assignments.agg(sum(hash(col("id"), col("component")))).head().getLong(0) != 0L)
         r.copy(persisted = r.persisted :+ mentions.toDF())
-      }
+      })
       // the mention cut and run's surface cut, nothing else
       assert(grown.size == 2, s"persistent RDDs: $grown")
       assert(r.persisted.size == 2 && r.persisted.head.columns.toSeq == Seq("norm"))
-      val ix = TermIndex(dict.map(e => (e.mention, e.concept_id)).collect())
-      val counts = LinkagePipeline.keyCounts(r.persisted.head.as[String], sc.broadcast(ix))
-      assert(collect(counts.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.isEmpty)
       r.release()
       assert(grown.isEmpty, s"persistent RDDs left after release(): $grown")
-      ran.size
+      (ran.size, shuffled)
     }
-    info(s"jobs per pass: ${jobs.mkString(", ")}")
-    assert(jobs.drop(1).forall(_ == LinkJobsPerWarmPass), s"jobs per pass: $jobs")
+    info(s"jobs and shuffle map stages per pass: ${budgets.mkString(", ")}")
+    assert(budgets.drop(1).forall(_._1 == LinkJobsPerWarmPass), s"jobs per pass: $budgets")
+    assert(budgets.drop(1).forall(_._2 == LinkShuffleStagesPerWarmPass), s"shuffle stages per pass: $budgets")
   }
 }
